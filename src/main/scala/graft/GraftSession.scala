@@ -62,10 +62,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** Builder preconfigured the way this engine wants to run: the graft
-  * extensions plus the settings every entry point (Verify/Bench/tests)
-  * pins — UTC session time, micros parquet timestamps, AQE, shuffle
-  * parallelism sized to the executor count rather than the 200 default. */
+/** The one session factory: every entry point (Verify/Bench/tools/tests)
+  * builds its session here. Preconfigured the way this engine wants to
+  * run: the graft extensions plus UTC session time, micros parquet
+  * timestamps, AQE, no UI, and shuffle parallelism sized to the
+  * executor count rather than the 200 default. */
 object GraftSession {
   def builder(appName: String, master: String = "local[*]",
       shufflePartitions: Int = 32): SparkSession.Builder =
@@ -77,6 +78,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.ui.enabled", "false")
 
   /** Bytes-proportional shuffle sizing — SCALE.md §r9's measured
     * three-way policy comparison, promoted into the engine (VERDICT r9

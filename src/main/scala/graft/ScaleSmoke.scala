@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Manual scale smoke (not part of the driver gates): self-union the
@@ -15,13 +15,8 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val mult = sys.env.getOrElse("SCALE_MULT", "20").toInt
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-scale-smoke",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def amplify(df: DataFrame, idCol: String): DataFrame =
@@ -115,10 +110,8 @@ object ScaleSmoke {
     val embeddings = amplify(Tables.embeddings(spark, d), "vec_id").cache()
     println(s"[scale-smoke] vectors=${embeddings.count()}")
     time("lsh bucket keys (all vecs)") {
-      graft.functions.LshBucketKeysExpr.register(spark, "lsh_buckets_smoke",
-        Array.fill(32, 64)(0.5), 4)
-      embeddings.select(col("vec_id"),
-        expr("lsh_buckets_smoke(cast(embedding as array<double>))")).count()
+      embeddings.select(col("vec_id"), graft.functions.LshBucketKeysExpr.column(
+        col("embedding").cast("array<double>"), Array.fill(32, 64)(0.5), 4)).count()
     }
     spark.stop()
   }

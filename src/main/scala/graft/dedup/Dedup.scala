@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.{GramPosHashesExpr, KmvSketchAgg, MinHashAgg, MinHashBandsRowExpr,
+  RollingHashExpr, ShingleHashesExpr, SimHashAgg}
 import graft.queries.QueryPack
 
 /** Document deduplication over the `documents` table (`doc_id`, `text`,
@@ -50,10 +52,7 @@ object Dedup extends QueryPack {
     * shingles agree iff their token triples agree, exactly the equality
     * the string form encodes, modulo the same 2^-64 collision caveat. */
   def hashedShingles(docs: DataFrame, n: Int = 3): DataFrame = {
-    import org.apache.spark.sql.execution.graft.GraftPlanBridge
-    docs.select(col("doc_id"),
-      explode(GraftPlanBridge.column(graft.functions.ShingleHashesExpr(
-        GraftPlanBridge.expr(col("text")), n))).as("shingle"))
+    docs.select(col("doc_id"), explode(ShingleHashesExpr.column(col("text"), n)).as("shingle"))
   }
 
   /** The pre-expression formulation of [[hashedShingles]] via built-in
@@ -230,7 +229,6 @@ object Dedup extends QueryPack {
     winnowPairsOf(Tables.documents(spark, d))
 
   def winnowPairsOf(documents: DataFrame): DataFrame = {
-    graft.functions.RollingHashExpr.register(documents.sparkSession)
     val docs = documents
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= WinnowK)
@@ -255,9 +253,8 @@ object Dedup extends QueryPack {
     // by fp; now one pinned exchange at materialize and the gate join,
     // the df aggregate and the pair join are all partition-local
     val fps = graft.operators.KeyedStore.byKeys(docs
-      .select(col("doc_id"), expr(
-        s"transform(sequence(1, size(t) - ${WinnowK - 1}), " +
-          s"i -> rolling_hash(concat_ws(' ', slice(t, i, $WinnowK))))").as("hs"))
+      .select(col("doc_id"), transform(sequence(lit(1), size(col("t")) - (WinnowK - 1)),
+        i => RollingHashExpr.column(concat_ws(" ", slice(col("t"), i, lit(WinnowK))))).as("hs"))
       .select(col("doc_id"), explode(array_distinct(expr(
         s"transform(sequence(1, size(hs)), j -> array_min(slice(hs, j, $WinnowW)))")))
         .as("fp")), "fp")
@@ -384,14 +381,13 @@ object Dedup extends QueryPack {
   /** Same, over an already-shingled (doc_id, shingle) frame — string
     * shingles or pre-hashed long shingles both accepted. */
   def minhashSignaturesFrom(sh: DataFrame): DataFrame = {
-    graft.functions.MinHashAgg.register(sh.sparkSession, permA, permB)
     val h = sh.schema("shingle").dataType match {
       case org.apache.spark.sql.types.LongType => expr("shingle & 4294967295")
       case _ => expr("xxhash64(shingle) & 4294967295") // 32-bit domain
     }
     sh.withColumn("h", h)
       .groupBy("doc_id")
-      .agg(expr("minhash_agg(h)").as("sig"))
+      .agg(MinHashAgg.column(col("h"), permA, permB).as("sig"))
   }
 
   /** LSH candidate pairs: equal signature band (4 consecutive minhashes
@@ -400,14 +396,13 @@ object Dedup extends QueryPack {
     * the only plan-side work is one `posexplode` — no 128-element_at
     * banding expression tree. */
   private def lshCandidatesFrom(sh: DataFrame): DataFrame = {
-    graft.functions.MinHashAgg.registerBands(sh.sparkSession, permA, permB, Bands)
     val h = sh.schema("shingle").dataType match {
       case org.apache.spark.sql.types.LongType => expr("shingle & 4294967295")
       case _ => expr("xxhash64(shingle) & 4294967295")
     }
     val banded = sh.withColumn("h", h)
       .groupBy("doc_id")
-      .agg(expr("minhash_bands(h)").as("bks"))
+      .agg(MinHashAgg.column(col("h"), permA, permB, Bands).as("bks"))
       .select(col("doc_id"), posexplode(col("bks")).as(Seq("band", "bkey")))
     banded.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
       .join(banded.select(col("doc_id").as("doc_b"), col("band"), col("bkey")),
@@ -451,13 +446,12 @@ object Dedup extends QueryPack {
     minhashLshRowOf(Tables.documents(spark, d))
 
   def minhashLshRowOf(docs: DataFrame): DataFrame = {
-    graft.functions.MinHashBandsRowExpr.register(docs.sparkSession)
     // (band, bkey) layout declared at materialize (r18; was a plain
     // localCheckpoint whose hidden layout made the candidate self-join
     // exchange both scans)
     val banded = graft.operators.KeyedStore.byKeys(
       docs.select(col("doc_id"),
-        posexplode(expr("minhash_bands_row(text)")).as(Seq("band", "bkey"))),
+        posexplode(MinHashBandsRowExpr.column(col("text"))).as(Seq("band", "bkey"))),
       "band", "bkey")
     val cand = banded.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
       .join(banded.select(col("doc_id").as("doc_b"), col("band"), col("bkey")),
@@ -817,10 +811,9 @@ object Dedup extends QueryPack {
     dedupIncrementalOf(Tables.documents(spark, d), batchSource = "src0")
 
   def dedupIncrementalOf(docs: DataFrame, batchSource: String): DataFrame = {
-    graft.functions.MinHashBandsRowExpr.register(docs.sparkSession)
     val isBatch = col("source") === batchSource
     val banded = docs.select(col("doc_id"), isBatch.as("in_batch"),
-        posexplode(expr("minhash_bands_row(text)")).as(Seq("band", "bkey")))
+        posexplode(MinHashBandsRowExpr.column(col("text"))).as(Seq("band", "bkey")))
       .localCheckpoint()
     // batch-centric candidates: a batch doc against ANY other doc
     // sharing a band (history in either id direction, batch both ways —
@@ -943,10 +936,7 @@ object Dedup extends QueryPack {
     * doc identity, so the corpus-sized (shingle ⋈ doc_id) exchange the
     * exact form pays is deleted outright. */
   private def sourceShingleHashes(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.graft.GraftPlanBridge
-    docs.select(col("source"),
-      explode(GraftPlanBridge.column(graft.functions.ShingleHashesExpr(
-        GraftPlanBridge.expr(col("text")), 3))).as("shingle"))
+    docs.select(col("source"), explode(ShingleHashesExpr.column(col("text"), 3)).as("shingle"))
   }
 
   /** Sketch → (θ, distinct estimate, retained sample). Theta-sketch
@@ -991,9 +981,8 @@ object Dedup extends QueryPack {
     * streams of known ground truth, so the measured path IS the
     * registered path. */
   private[graft] def kmvOverlapOfHashes(ss: DataFrame, k: Int = KmvK): DataFrame = {
-    graft.functions.KmvSketchAgg.register(ss.sparkSession, k)
     val sum = kmvSummary(
-      ss.groupBy("source").agg(expr("kmv_sketch(shingle)").as("sk")), k)
+      ss.groupBy("source").agg(KmvSketchAgg.column(col("shingle"), k).as("sk")), k)
       .localCheckpoint()
     val a = sum.select(col("source").as("source_a"), col("kth").as("kth_a"),
       col("theta").as("theta_a"), col("est_distinct").as("est_a"))
@@ -1108,9 +1097,8 @@ object Dedup extends QueryPack {
     * reads the model-sized S-row summary instead of rescanning the
     * corpus. */
   private[graft] def kmvSourceSummaries(ss: DataFrame, k: Int = KmvK): DataFrame = {
-    graft.functions.KmvSketchAgg.register(ss.sparkSession, k)
     kmvSummary(
-      ss.groupBy("source").agg(expr("kmv_sketch(shingle)").as("sk")), k)
+      ss.groupBy("source").agg(KmvSketchAgg.column(col("shingle"), k).as("sk")), k)
       .localCheckpoint()
   }
 
@@ -1285,12 +1273,11 @@ object Dedup extends QueryPack {
     * summary row labeled `label`. */
   private[graft] def kmvUnionSummary(sum: DataFrame, members: Set[String],
       label: String, k: Int = KmvK): DataFrame = {
-    graft.functions.KmvSketchAgg.register(sum.sparkSession, k)
     kmvSummary(
       sum.filter(col("source").isInCollection(members))
         .select(explode(col("sk")).as("shingle"))
         .groupBy(lit(label).as("source"))
-        .agg(expr("kmv_sketch(shingle)").as("sk")), k)
+        .agg(KmvSketchAgg.column(col("shingle"), k).as("sk")), k)
   }
 
   /** COVERAGE CURVE — the corpus-growth / dedup-saturation question:
@@ -1347,10 +1334,9 @@ object Dedup extends QueryPack {
         row_number().over(Window.orderBy("source")).cast("long"))
       .localCheckpoint() // S rows: model-sized
     val nSrc = ranked.count() // S-row job on the checkpoint, never the corpus
-    graft.functions.KmvSketchAgg.register(ss.sparkSession, k)
     val prefixes = kmvSummary(
-      if (nSrc <= crossover) prefixSketchesExplode(ranked, nSrc)
-      else prefixSketchesDyadic(ranked, nSrc), k)
+      if (nSrc <= crossover) prefixSketchesExplode(ranked, nSrc, k)
+      else prefixSketchesDyadic(ranked, nSrc, k), k)
       .select(col("k"), col("est_distinct").as("est_union"))
     val wk = org.apache.spark.sql.expressions.Window.orderBy("k") // S rows
     prefixes
@@ -1365,10 +1351,10 @@ object Dedup extends QueryPack {
     * exploded to every prefix ≥ its rank, one `kmv_sketch` per prefix
     * — S²·k/2 pooled rows in a single job. Quadratic in S, which is
     * exactly why [[CurveDyadicCrossover]] bounds it. */
-  private def prefixSketchesExplode(ranked: DataFrame, nSrc: Long): DataFrame =
+  private def prefixSketchesExplode(ranked: DataFrame, nSrc: Long, k: Int): DataFrame =
     ranked.select(col("rnk"), explode(col("sk")).as("h"))
       .select(explode(expr(s"sequence(rnk, ${nSrc}L)")).as("k"), col("h"))
-      .groupBy("k").agg(expr("kmv_sketch(h)").as("sk"))
+      .groupBy("k").agg(KmvSketchAgg.column(col("h"), k).as("sk"))
 
   /** Large-S prefix-sketch arm (VERDICT r16 #3): segment-halving
     * unions. Level j holds one sketch per aligned dyadic range
@@ -1385,7 +1371,7 @@ object Dedup extends QueryPack {
     * the next level and the cover join). The pooled value SET per
     * prefix equals the explode arm's, so the sketches — and the
     * emitted curve — are bit-identical. */
-  private def prefixSketchesDyadic(ranked: DataFrame, nSrc: Long): DataFrame = {
+  private def prefixSketchesDyadic(ranked: DataFrame, nSrc: Long, k: Int): DataFrame = {
     val spark = ranked.sparkSession
     import spark.implicits._
     // levels(j): (width = 2^j, one row per range index m with its sketch)
@@ -1395,7 +1381,7 @@ object Dedup extends QueryPack {
     levels += ((width, cur))
     while (width < nSrc) {
       cur = cur.select(expr("(m + 1) div 2").as("m"), explode(col("sk")).as("h"))
-        .groupBy("m").agg(expr("kmv_sketch(h)").as("sk"))
+        .groupBy("m").agg(KmvSketchAgg.column(col("h"), k).as("sk"))
         .localCheckpoint() // ≤ ⌈S/2ʲ⌉ rows of k longs: model-sized
       width *= 2
       levels += ((width, cur))
@@ -1419,7 +1405,7 @@ object Dedup extends QueryPack {
     }.toDF("k", "w", "m")
     tagged.join(broadcast(cover), Seq("w", "m"))
       .select(col("k"), explode(col("sk")).as("h"))
-      .groupBy("k").agg(expr("kmv_sketch(h)").as("sk"))
+      .groupBy("k").agg(KmvSketchAgg.column(col("h"), k).as("sk"))
   }
 
   /** Hash-checked gate for [[coverageCurveKmv]]: exact union and
@@ -1625,17 +1611,13 @@ object Dedup extends QueryPack {
     * One [[graft.functions.SimHashAgg]] sketch aggregate (64-counter
     * buffer, partial+final) instead of 64 separate conditional sums. */
   def simhashFingerprints(docs: DataFrame): DataFrame = {
-    graft.functions.SimHashAgg.register(docs.sparkSession)
     // n=1 shingle_hashes = distinct raw token hashes in one pass —
     // value-identical to array_distinct(split) + xxhash64 per token
     // (distinct by hash vs by string: 2^-64 caveat as everywhere)
     docs
-      .select(col("doc_id"), explode(
-        org.apache.spark.sql.execution.graft.GraftPlanBridge.column(
-          graft.functions.ShingleHashesExpr(
-            org.apache.spark.sql.execution.graft.GraftPlanBridge.expr(col("text")), 1))).as("h"))
+      .select(col("doc_id"), explode(ShingleHashesExpr.column(col("text"), 1)).as("h"))
       .groupBy("doc_id")
-      .agg(expr("simhash_agg(h)").as("simhash"))
+      .agg(SimHashAgg.column(col("h")).as("simhash"))
   }
 
   /** The 64-bit fingerprint split into `nBands` equal bands: by the
@@ -1741,7 +1723,6 @@ object Dedup extends QueryPack {
     spanScrubOf(Tables.documents(spark, d))
 
   def spanScrubOf(docs: DataFrame, k: Int = 5, minDocs: Int = 2): DataFrame = {
-    import org.apache.spark.sql.execution.graft.GraftPlanBridge
     val toks = docs.select(col("doc_id"), split(col("text"), " ").as("ts"))
     // one row per k-gram: (doc_id, 1-based start position, gram hash).
     // The native positional kernel emits the chained hash per start
@@ -1750,8 +1731,7 @@ object Dedup extends QueryPack {
     // copies ~k tokens per gram just to hash them).
     val grams = docs
       .select(col("doc_id"),
-        posexplode(GraftPlanBridge.column(graft.functions.GramPosHashesExpr(
-          GraftPlanBridge.expr(col("text")), k))).as(Seq("p0", "g")))
+        posexplode(GramPosHashesExpr.column(col("text"), k)).as(Seq("p0", "g")))
       .select(col("doc_id"), (col("p0") + 1).as("i"), col("g"))
     val dup = grams.groupBy("g")
       .agg(countDistinct(col("doc_id")).as("nd"))

@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -56,6 +58,11 @@ case class BestFitPackExpr(child: Expression, binCapacity: Long)
 }
 
 object BestFitPackExpr {
+
+  /** Best-fit bin ids of a `sizes` array into bins of `binCapacity`, as
+    * a Column. */
+  def column(sizes: Column, binCapacity: Long): Column =
+    GraftPlanBridge.column(BestFitPackExpr(GraftPlanBridge.expr(sizes), binCapacity))
 
   /** Static, shared by interpreted eval and generated code. A null
     * element raises LOUD here: the declared input type admits

@@ -3,11 +3,12 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -116,9 +117,7 @@ case class FreqItemsAgg(
 }
 
 object FreqItemsAgg {
-  /** Register `freq_items(s, k)`-style function bound to a fixed k. */
-  def register(spark: SparkSession, k: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_items",
-      exprs => FreqItemsAgg(exprs.head, k).toAggregateExpression(), "scala_udf")
+  /** `freq_items(s)` with `k` counters, as an aggregate Column. */
+  def column(s: Column, k: Int): Column =
+    GraftPlanBridge.column(FreqItemsAgg(GraftPlanBridge.expr(s), k).toAggregateExpression())
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -95,8 +96,7 @@ object JsonIntExpr {
     null
   }
 
-  /** Register `json_int(json, key)` for SQL/`expr` use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "json_int", exprs => JsonIntExpr(exprs(0), exprs(1)), "scala_udf")
+  /** `json_int(json, key)` as a Column. */
+  def column(json: Column, key: Column): Column =
+    GraftPlanBridge.column(JsonIntExpr(GraftPlanBridge.expr(json), GraftPlanBridge.expr(key)))
 }

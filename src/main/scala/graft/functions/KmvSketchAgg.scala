@@ -1,11 +1,12 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -234,9 +235,7 @@ case class KmvSketchAgg(
 }
 
 object KmvSketchAgg {
-  /** Register `kmv_sketch(hash)` bound to a fixed k. */
-  def register(spark: SparkSession, k: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch",
-      exprs => KmvSketchAgg(exprs.head, k).toAggregateExpression(), "scala_udf")
+  /** `kmv_sketch(hash)` keeping `k` minima, as an aggregate Column. */
+  def column(hash: Column, k: Int): Column =
+    GraftPlanBridge.column(KmvSketchAgg(GraftPlanBridge.expr(hash), k).toAggregateExpression())
 }

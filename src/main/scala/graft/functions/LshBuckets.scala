@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -77,9 +78,7 @@ case class LshBucketKeysExpr(
 }
 
 object LshBucketKeysExpr {
-  /** Register `lsh_buckets(v)` bound to a fixed plane matrix. */
-  def register(spark: SparkSession, name: String,
-      planes: Array[Array[Double]], bitsPerTable: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LshBucketKeysExpr(exprs.head, planes, bitsPerTable), "scala_udf")
+  /** `lsh_buckets(v)` over a fixed plane matrix, as a Column. */
+  def column(v: Column, planes: Array[Array[Double]], bitsPerTable: Int): Column =
+    GraftPlanBridge.column(LshBucketKeysExpr(GraftPlanBridge.expr(v), planes, bitsPerTable))
 }

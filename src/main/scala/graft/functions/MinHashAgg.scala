@@ -1,11 +1,12 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -160,17 +161,10 @@ object MinHashAgg {
     Array.fill(128)(r.nextInt(Int.MaxValue).toLong)
   }
 
-  /** Register `minhash_agg(h)` bound to fixed permutation constants. */
-  def register(spark: SparkSession, permA: Array[Long], permB: Array[Long]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_agg",
-      exprs => MinHashAgg(exprs.head, permA, permB).toAggregateExpression(), "scala_udf")
-
-  /** Register `minhash_bands(h)` — same sketch, banding fused into eval. */
-  def registerBands(spark: SparkSession, permA: Array[Long], permB: Array[Long],
-      bands: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands",
-      exprs => MinHashAgg(exprs.head, permA, permB, bands).toAggregateExpression(),
-      "scala_udf")
+  /** `minhash_agg(h)` over fixed permutation constants, as an aggregate
+    * Column; `bands > 0` gives `minhash_bands(h)` — the same sketch with
+    * the banding fused into eval. */
+  def column(h: Column, permA: Array[Long], permB: Array[Long], bands: Int = 0): Column =
+    GraftPlanBridge.column(
+      MinHashAgg(GraftPlanBridge.expr(h), permA, permB, bands).toAggregateExpression())
 }

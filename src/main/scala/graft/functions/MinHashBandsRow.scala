@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -109,11 +110,9 @@ object MinHashBandsRowExpr {
     new GenericArrayData(keys)
   }
 
-  /** Register `minhash_bands_row(text)` with the engine defaults
-    * (trigram shingles, 128 perms, 32 bands). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands_row",
-      exprs => MinHashBandsRowExpr(exprs.head, 3, MinHashAgg.DefaultBands),
-      "scala_udf")
+  /** `minhash_bands_row(text)` with the engine defaults (trigram
+    * shingles, 128 perms, 32 bands), as a Column. */
+  def column(text: Column): Column =
+    GraftPlanBridge.column(
+      MinHashBandsRowExpr(GraftPlanBridge.expr(text), 3, MinHashAgg.DefaultBands))
 }

@@ -2,11 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -188,9 +189,9 @@ case class QuantileSketchAgg(
 }
 
 object QuantileSketchAgg {
-  /** Register `quantile_sketch(x)` bound to a fixed k and φ list. */
-  def register(spark: SparkSession, k: Int, phis: Seq[Double]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quantile_sketch",
-      exprs => QuantileSketchAgg(exprs.head, k, phis).toAggregateExpression(), "scala_udf")
+  /** `quantile_sketch(x)` with buffer size `k` answering `phis`, as an
+    * aggregate Column. */
+  def column(x: Column, k: Int, phis: Seq[Double]): Column =
+    GraftPlanBridge.column(
+      QuantileSketchAgg(GraftPlanBridge.expr(x), k, phis).toAggregateExpression())
 }

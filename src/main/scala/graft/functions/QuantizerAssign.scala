@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
@@ -127,6 +129,12 @@ case class NearestCellsExpr(
       Int.box(java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]])))
 }
 
+object NearestCellsExpr {
+  /** The `k` nearest centroid ids of `v`, as a Column. */
+  def column(v: Column, cids: Array[Long], cents: Array[Array[Double]], k: Int): Column =
+    GraftPlanBridge.column(NearestCellsExpr(GraftPlanBridge.expr(v), cids, cents, k))
+}
+
 /** Per-row product-quantizer codeword assignment for ONE subspace row
   * `(m, sv)` against a plan-time `M × K` codebook — the shuffle-free
   * form of [[graft.similarity.ProductQuantizer]]'s `assign` (same
@@ -245,6 +253,13 @@ case class PqAllCodesExpr(
       Int.box(java.util.Arrays.deepHashCode(codebook.asInstanceOf[Array[AnyRef]])))
 }
 
+object PqAllCodesExpr {
+  /** Per-subspace nearest codeword ids of unit vector `u`, as a Column. */
+  def column(u: Column, codeIds: Array[Array[Int]],
+      codebook: Array[Array[Array[Double]]], subDim: Int): Column =
+    GraftPlanBridge.column(PqAllCodesExpr(GraftPlanBridge.expr(u), codeIds, codebook, subDim))
+}
+
 case class PqNearestCodeExpr(
     left: Expression,  // m: INT subspace id
     right: Expression, // sv: ARRAY<DOUBLE> sub-vector
@@ -317,4 +332,12 @@ case class PqNearestCodeExpr(
   override def hashCode(): Int =
     java.util.Objects.hash(left, right,
       Int.box(java.util.Arrays.deepHashCode(codebook.asInstanceOf[Array[AnyRef]])))
+}
+
+object PqNearestCodeExpr {
+  /** Nearest codeword id of sub-vector `sv` in subspace `m`, as a Column. */
+  def column(m: Column, sv: Column, codeIds: Array[Array[Int]],
+      codebook: Array[Array[Array[Double]]]): Column =
+    GraftPlanBridge.column(PqNearestCodeExpr(
+      GraftPlanBridge.expr(m), GraftPlanBridge.expr(sv), codeIds, codebook))
 }

@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
 /** Range-bucket id of a double key against a FIXED sorted boundary
@@ -57,6 +59,10 @@ case class RangeBucketExpr(child: Expression, boundaries: Seq[Double])
 }
 
 object RangeBucketExpr {
+
+  /** Range-bucket id of `key` against sorted `boundaries`, as a Column. */
+  def column(key: Column, boundaries: Seq[Double]): Column =
+    GraftPlanBridge.column(RangeBucketExpr(GraftPlanBridge.expr(key), boundaries))
 
   /** First index i with bs(i) >= key — equivalently the number of
     * boundaries strictly below key. Static, shared by interpreted eval

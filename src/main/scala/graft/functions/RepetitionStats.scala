@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -118,9 +119,7 @@ object RepetitionStatsExpr {
     new GenericInternalRow(Array[Any](nTok.toLong, tri.length.toLong, singles, best))
   }
 
-  /** Register `repetition_stats(s)` for SQL/`expr` use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "repetition_stats",
-      exprs => RepetitionStatsExpr(exprs.head), "scala_udf")
+  /** `repetition_stats(s)` as a Column. */
+  def column(s: Column): Column =
+    GraftPlanBridge.column(RepetitionStatsExpr(GraftPlanBridge.expr(s)))
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -55,8 +56,7 @@ object RollingHashExpr {
     acc
   }
 
-  /** Register `rolling_hash(s)` for SQL/`expr` use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHashExpr(exprs.head), "scala_udf")
+  /** `rolling_hash(s)` as a Column. */
+  def column(s: Column): Column =
+    GraftPlanBridge.column(RollingHashExpr(GraftPlanBridge.expr(s)))
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -129,14 +130,9 @@ object ShingleHashesExpr {
     new GenericArrayData(out)
   }
 
-  /** Register `shingle_hashes(s, n)` for SQL/`expr` use in this session
-    * (n must be a foldable integer literal). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => ShingleHashesExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]),
-      "scala_udf")
+  /** `shingle_hashes(s, n)` as a Column. */
+  def column(s: Column, n: Int): Column =
+    GraftPlanBridge.column(ShingleHashesExpr(GraftPlanBridge.expr(s), n))
 }
 
 /** `gram_hashes(text, n)` — [[ShingleHashesExpr]]'s positional sibling:
@@ -162,4 +158,10 @@ case class GramPosHashesExpr(child: Expression, n: Int) extends UnaryExpression 
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object GramPosHashesExpr {
+  /** `gram_hashes(s, n)` as a Column. */
+  def column(s: Column, n: Int): Column =
+    GraftPlanBridge.column(GramPosHashesExpr(GraftPlanBridge.expr(s), n))
 }

@@ -1,11 +1,12 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** 64-bit SimHash as a typed imperative aggregate over per-feature
@@ -87,9 +88,7 @@ case class SimHashAgg(
 }
 
 object SimHashAgg {
-  /** Register `simhash_agg(h)` for SQL/`expr` use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_agg",
-      exprs => SimHashAgg(exprs.head).toAggregateExpression(), "scala_udf")
+  /** `simhash_agg(h)` as an aggregate Column. */
+  def column(h: Column): Column =
+    GraftPlanBridge.column(SimHashAgg(GraftPlanBridge.expr(h)).toAggregateExpression())
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Cosine similarity between two `ARRAY<DOUBLE>` embeddings as a native
@@ -203,14 +204,15 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object VectorFunctions {
-  /** Register `cosine_sim(a, b)`, `sq_dist(a, b)` and `dot_product(a, b)`
-    * for SQL/`expr` use in this session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq_dist", exprs => SqEuclidean(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-  }
+  /** `cosine_sim(a, b)` as a Column. */
+  def cosineSim(a: Column, b: Column): Column =
+    GraftPlanBridge.column(CosineSimilarity(GraftPlanBridge.expr(a), GraftPlanBridge.expr(b)))
+
+  /** `sq_dist(a, b)` as a Column. */
+  def sqDist(a: Column, b: Column): Column =
+    GraftPlanBridge.column(SqEuclidean(GraftPlanBridge.expr(a), GraftPlanBridge.expr(b)))
+
+  /** `dot_product(a, b)` as a Column. */
+  def dotProduct(a: Column, b: Column): Column =
+    GraftPlanBridge.column(DotProduct(GraftPlanBridge.expr(a), GraftPlanBridge.expr(b)))
 }

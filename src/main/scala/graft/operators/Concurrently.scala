@@ -17,8 +17,7 @@ package graft.operators
   * the second arm's job-scheduling latency, on a cluster it back-fills
   * the tail exactly as the guide describes. Results are unchanged by
   * construction: each arm is deterministic and they share no mutable
-  * state (Staged scopes are per-frame with atomic release; the
-  * function-registry registrations are idempotent).
+  * state (Staged scopes are per-frame with atomic release).
   *
   * Failure contract: both arms are awaited, the first failure
   * propagates (unwrapped) exactly as it would have sequentially. */

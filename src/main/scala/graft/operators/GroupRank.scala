@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.graft.GraftPlanBridge
 
 /** Distributed within-group ranking — `row_number() OVER (PARTITION BY
   * group ORDER BY order)` WITHOUT one window partition per group.
@@ -456,8 +455,7 @@ object GroupRank {
     val keyed = df.withColumn("__k", key)
       .withColumn("__v", value.map(_.cast("long")).getOrElse(lit(1L)))
     val bs = boundarySketch(keyed, "__k", parts)
-    val bucket = GraftPlanBridge.column(graft.functions.RangeBucketExpr(
-      GraftPlanBridge.expr(col("__k")), bs))
+    val bucket = graft.functions.RangeBucketExpr.column(col("__k"), bs)
     val bucketed = keyed.withColumn("__b", bucket)
     // map-side-combined: only buckets × groups rows reach the exchange
     val counts = bucketed.groupBy("__b", groupCols: _*)

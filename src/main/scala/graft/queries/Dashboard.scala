@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, StructField, StructType}
 import graft.Tables
+import graft.functions.JsonIntExpr
 import OracleSafe._
 
 /** The reference dashboard's four serving queries (reference web-app
@@ -98,9 +99,8 @@ object Dashboard extends QueryPack {
     * from_json throughput locally). Same oracle as [[parseProps]]; the
     * expression's contract IS the oracle regex. */
   def parsePropsNative(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.JsonIntExpr.register(spark)
     Tables.events(spark, d)
-      .select(col("event_id"), expr("json_int(props, 'k')").as("k"))
+      .select(col("event_id"), JsonIntExpr.column(col("props"), lit("k")).as("k"))
       .orderBy("event_id")
   }
 

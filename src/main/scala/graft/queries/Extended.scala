@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.functions.{FreqItemsAgg, QuantileSketchAgg}
 import OracleSafe._
 
 /** Operators beyond the reference's own surface that a real deployment
@@ -83,11 +84,11 @@ object Extended extends QueryPack {
     * sibling above is the oracle-checked reference and
     * QuantileSketchSpec pins the bound. */
   def quantilesSketch(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.QuantileSketchAgg.register(spark, 256, Seq(0.25, 0.5, 0.75))
     Tables.orders(spark, d)
       .select(col("o_orderstatus"), col("o_totalprice").cast("double").as("x"))
       .groupBy(col("o_orderstatus"))
-      .agg(expr("quantile_sketch(x)").as("qs"), count(lit(1)).as("n"))
+      .agg(QuantileSketchAgg.column(col("x"), 256, Seq(0.25, 0.5, 0.75)).as("qs"),
+        count(lit(1)).as("n"))
       .select(col("o_orderstatus"), col("qs")(0).as("p25_est"),
         col("qs")(1).as("p50_est"), col("qs")(2).as("p75_est"), col("n"))
       .orderBy("o_orderstatus")
@@ -429,10 +430,9 @@ object Extended extends QueryPack {
     * rows-only (estimates depend on merge order; the guarantee itself is
     * pinned in FreqItemsSpec). */
   def freqItems(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.FreqItemsAgg.register(spark, 3)
     Tables.events(spark, d)
       .groupBy((col("user_id") % 10).as("bucket"))
-      .agg(expr("freq_items(event_type)").as("m"))
+      .agg(FreqItemsAgg.column(col("event_type"), 3).as("m"))
       .select(col("bucket"), explode(col("m")).as(Seq("item", "est_count")))
       .orderBy("bucket", "item")
   }
@@ -448,11 +448,10 @@ object Extended extends QueryPack {
     * [[freqItems]] (rows-only, estimated counts), this one
     * hash-matches a plain SQL oracle. */
   def freqItemsVerified(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.FreqItemsAgg.register(spark, 7)
     val ev = Tables.events(spark, d)
       .select((col("user_id") % 10).as("bucket"), col("event_type"))
     val cand = ev.groupBy("bucket")
-      .agg(expr("freq_items(event_type)").as("m"))
+      .agg(FreqItemsAgg.column(col("event_type"), 7).as("m"))
       .select(col("bucket"), explode(map_keys(col("m"))).as("event_type"))
     val counts = ev.groupBy("bucket", "event_type").agg(count(lit(1)).as("cnt"))
     val totals = ev.groupBy("bucket").agg(count(lit(1)).as("n"))
@@ -702,8 +701,8 @@ object Extended extends QueryPack {
     * set, where AQE broadcasts the name table at this scale. */
   /** The FastSS blocking key stage: each name's {self + 1-deletion
     * variants} hashed to 8-byte keys — (len+1) rows per record. Exposed
-    * for the stage profiler (tools/ProfileR6 fuzzy) so its timings
-    * measure the very expression the query runs. */
+    * for stage profiling (the r6 fuzzy-join profile, SCALE.md §Round-6)
+    * so its timings measure the very expression the query runs. */
   private[graft] def fuzzyVariantsOf(names: DataFrame): DataFrame =
     names.select(col("id"),
       explode(expr(

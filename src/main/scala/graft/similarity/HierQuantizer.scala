@@ -104,7 +104,6 @@ object HierQuantizer {
 
   private def trainImpl(spark: SparkSession, all: DataFrame, n: Long, nlist: Int,
       iters: Int, forceDistributedSub: Boolean): Model = {
-    VectorFunctions.register(spark)
     val k1 = math.max(1, ceilIsqrt(nlist))
     val k2 = math.max(1, (nlist + k1 - 1) / k1)
     val base = all.select(col("vec_id"), col("v"))
@@ -159,7 +158,7 @@ object HierQuantizer {
     // way trainCentroids' collect did, without the driver round-trip.
     val trained = (1 to iters).foldLeft(Materialize(seed)) { (subs, _) =>
       val assigned = supAssigned.join(subs, "sup")
-        .withColumn("c_sim", expr("cosine_sim(v, cv)"))
+        .withColumn("c_sim", VectorFunctions.cosineSim(col("v"), col("cv")))
         .groupBy(col("vec_id"))
         .agg(min(struct((-col("c_sim")).as("ns"), col("sup"), col("scid"),
           col("v"))).as("w"))
@@ -219,7 +218,7 @@ object HierQuantizer {
     val supTop = df.withColumn("sup",
       explode(Similarity.nearestCellsCol(col("v"), supCentroids(model.supers), s1)))
     val cellScored = supTop.join(model.subs, "sup")
-      .withColumn("c_sim", expr("cosine_sim(v, cv)"))
+      .withColumn("c_sim", VectorFunctions.cosineSim(col("v"), col("cv")))
     if (soft == 1)
       cellScored.groupBy(col("vec_id"))
         .agg(min(struct((-col("c_sim")).as("ns"), col("sup"), col("scid"),
@@ -256,7 +255,7 @@ object HierQuantizer {
     // rows per query per map partition instead (assignCells' note).
     graft.plans.TopKPerKey(
         broadcast(q).join(model.subs)
-          .withColumn("c_sim", expr("cosine_sim(v, cv)"))
+          .withColumn("c_sim", VectorFunctions.cosineSim(col("v"), col("cv")))
           .drop("cv"),
         Seq("vec_id"),
         Seq(col("c_sim").desc, col("sup").asc, col("scid").asc), k = nprobe)

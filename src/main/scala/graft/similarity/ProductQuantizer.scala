@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.{PqAllCodesExpr, PqNearestCodeExpr, VectorFunctions}
 
 /** Product quantization (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search"): split each (unit-normalized) vector into
@@ -24,19 +25,11 @@ import org.apache.spark.sql.types.DecimalType
   * run-to-run determinism. */
 object ProductQuantizer {
 
-  // codegen'd native squared-L2 ([[graft.functions.SqEuclidean]]):
-  // identical sequential accumulation to the aggregate(zip_with(...))
-  // fold it replaced, so every distance is bit-for-bit unchanged —
-  // but the loop runs inside whole-stage codegen instead of an
-  // interpreted lambda per element
-  private val sqDist = "sq_dist(%s, %s)"
-
   /** (vec_id, u): each vector unit-normalized. The norm is floored at a
     * tiny positive value so an all-zero vector maps to the zero vector
     * instead of NaNs (0/0) that would poison every distance it
     * touches. */
   private def unitVectors(vecs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(vecs.sparkSession) // sq_dist
     vecs
       .withColumn("nrm", greatest(lit(1e-300), expr(
         "sqrt(aggregate(transform(v, x -> x * x), CAST(0 AS DOUBLE), (acc, x) -> acc + x))")))
@@ -82,10 +75,8 @@ object ProductQuantizer {
     * blow-up and the (vec_id, m) hash-agg Exchange are gone — the
     * min-struct (d, cid) ordering is replicated bit-for-bit. */
   private def assign(sub: DataFrame, cents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.graft.GraftPlanBridge
     val (ids, book) = codebookArrays(cents)
-    sub.withColumn("cid", GraftPlanBridge.column(graft.functions.PqNearestCodeExpr(
-      GraftPlanBridge.expr(col("m")), GraftPlanBridge.expr(col("sv")), ids, book)))
+    sub.withColumn("cid", PqNearestCodeExpr.column(col("m"), col("sv"), ids, book))
       .select(col("vec_id"), col("m"), col("cid"), col("sv"))
   }
 
@@ -168,10 +159,8 @@ object ProductQuantizer {
     * per-row function of (u, codebook); the codes array (subspace
     * order, same (d, cid) winners) is bit-for-bit unchanged. */
   private def encodeU(u: DataFrame, cents: DataFrame, subDim: Int): DataFrame = {
-    import org.apache.spark.sql.execution.graft.GraftPlanBridge
     val (ids, book) = codebookArrays(cents)
-    u.select(col("vec_id"), GraftPlanBridge.column(graft.functions.PqAllCodesExpr(
-      GraftPlanBridge.expr(col("u")), ids, book, subDim)).as("codes"))
+    u.select(col("vec_id"), PqAllCodesExpr.column(col("u"), ids, book, subDim).as("codes"))
   }
 
   /** ADC top-k: query sub-vectors × codebook = the per-query lookup
@@ -236,7 +225,12 @@ object ProductQuantizer {
     querySub
       .withColumnRenamed("vec_id", "query_id")
       .join(broadcast(cents), "m")
-      .withColumn("d", expr(sqDist.format("sv", "cv")))
+      // codegen'd native squared-L2 ([[graft.functions.SqEuclidean]]):
+      // identical sequential accumulation to the aggregate(zip_with(...))
+      // fold it replaced, so every distance is bit-for-bit unchanged —
+      // but the loop runs inside whole-stage codegen instead of an
+      // interpreted lambda per element
+      .withColumn("d", VectorFunctions.sqDist(col("sv"), col("cv")))
       .select(col("query_id"), col("m"), col("cid"), col("d"))
 
   /** The candidate-restricted ADC ranking tail shared by every PQ

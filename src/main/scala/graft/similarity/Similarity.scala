@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.VectorFunctions
+import graft.functions.{LshBucketKeysExpr, NearestCellsExpr, VectorFunctions}
 import graft.queries.QueryPack
 
 /** Similarity search over the `embeddings` table (`vec_id`, `embedding
@@ -23,7 +23,6 @@ object Similarity extends QueryPack {
 
   /** embeddings with the float vector cast to ARRAY<DOUBLE> once. */
   private[graft] def vecs(spark: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(spark)
     Tables.embeddings(spark, d)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -80,7 +79,7 @@ object Similarity extends QueryPack {
     val a = vecs(spark, d).select(col("vec_id").as("vec_a"), col("v").as("va"))
     val b = vecs(spark, d).select(col("vec_id").as("vec_b"), col("v").as("vb"))
     a.join(b, col("vec_a") < col("vec_b"))
-      .withColumn("cos_sim", expr("cosine_sim(va, vb)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("va"), col("vb")))
       .filter(col("cos_sim") >= 0.4)
       .select("vec_a", "vec_b", "cos_sim")
       .orderBy("vec_a", "vec_b")
@@ -112,7 +111,7 @@ object Similarity extends QueryPack {
         greatest(col("pid"), col("cid")).as("vec_b"),
         when(col("pid") < col("cid"), col("pv")).otherwise(col("cv")).as("va"),
         when(col("pid") < col("cid"), col("cv")).otherwise(col("pv")).as("vb"))
-      .withColumn("cos_sim", expr("cosine_sim(va, vb)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("va"), col("vb")))
       .filter(col("cos_sim") >= 0.4)
       .select("vec_a", "vec_b", "cos_sim")
       .distinct() // both-sampled pairs arrive once per orientation
@@ -136,7 +135,7 @@ object Similarity extends QueryPack {
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
     graft.plans.TopKPerKey(
       c.join(broadcast(q))
-        .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+        .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
         .select("query_id", "neighbor_id", "cos_sim"),
       Seq("query_id"), Seq(col("cos_sim").desc, col("neighbor_id").asc), k = 5)
       .withColumn("rank", row_number().over(w)) // ≤ queries×5 rows
@@ -169,7 +168,7 @@ object Similarity extends QueryPack {
     graft.plans.TopKPerKey(
       c.join(broadcast(q))
         .filter(col("n_label") =!= col("q_label"))
-        .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+        .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
         .select(col("query_id"), col("q_label").cast("long").as("q_label"),
           col("neighbor_id"), col("n_label").cast("long").as("n_label"),
           col("cos_sim")),
@@ -229,7 +228,7 @@ object Similarity extends QueryPack {
     val b = e.filter(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("tgt_id"), col("v").as("bv"))
     b.join(broadcast(a))
-      .withColumn("cos_sim", expr("cosine_sim(av, bv)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("av"), col("bv")))
       .select("src_id", "tgt_id", "cos_sim")
   }
 
@@ -392,7 +391,6 @@ object Similarity extends QueryPack {
     * vectors. */
   private[graft] def bitextScoredFrom(all: DataFrame,
       cand0: DataFrame): DataFrame = {
-    VectorFunctions.register(all.sparkSession)
     val cand = cand0
       .filter((col("vec_a") % 2) =!= (col("vec_b") % 2))
       .select(
@@ -401,7 +399,7 @@ object Similarity extends QueryPack {
     cand
       .join(all.select(col("vec_id").as("src_id"), col("v").as("av")), "src_id")
       .join(all.select(col("vec_id").as("tgt_id"), col("v").as("bv")), "tgt_id")
-      .withColumn("cos_sim", expr("cosine_sim(av, bv)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("av"), col("bv")))
       .select("src_id", "tgt_id", "cos_sim")
   }
 
@@ -655,7 +653,7 @@ object Similarity extends QueryPack {
         slice(col("v"), 1, MrlPrefixDims).as("cp"))
     val cand = graft.plans.TopKPerKey(
       cPre.join(broadcast(q.select("query_id", "qp")))
-        .withColumn("pre_sim", expr("cosine_sim(qp, cp)"))
+        .withColumn("pre_sim", VectorFunctions.cosineSim(col("qp"), col("cp")))
         .select("query_id", "neighbor_id", "pre_sim"),
       Seq("query_id"), Seq(col("pre_sim").desc, col("neighbor_id").asc),
       k = MrlCandidates)
@@ -666,7 +664,7 @@ object Similarity extends QueryPack {
         .join(all.select(col("vec_id").as("neighbor_id"), col("v").as("cv")),
           "neighbor_id")
         .join(broadcast(q.select("query_id", "qv")), "query_id")
-        .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+        .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
         .select("query_id", "neighbor_id", "pre_sim", "cos_sim"),
       Seq("query_id"), Seq(col("cos_sim").desc, col("neighbor_id").asc),
       k = 5)
@@ -714,10 +712,10 @@ object Similarity extends QueryPack {
     * [[graft.functions.LshBucketKeysExpr]] pass; `posexplode` yields the
     * (table, bucket) pairs. Approximate ⇒ rows-only check (no oracle). */
   def annLsh(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.LshBucketKeysExpr.register(spark, "lsh_buckets", planes, BitsPerTable)
     val base = vecs(spark, d)
       .select(col("vec_id"), col("v"),
-        posexplode(expr("lsh_buckets(v)")).as(Seq("tbl", "bucket")))
+        posexplode(LshBucketKeysExpr.column(col("v"), planes, BitsPerTable))
+          .as(Seq("tbl", "bucket")))
     val q = base.filter(col("vec_id") < 100)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("tbl"), col("bucket"))
     val c = base.filter(col("vec_id") >= 100)
@@ -730,7 +728,7 @@ object Similarity extends QueryPack {
       c.join(q, Seq("tbl", "bucket"))
         .select(col("query_id"), col("neighbor_id"), col("qv"), col("cv"))
         .dropDuplicates("query_id", "neighbor_id") // may collide in several tables
-        .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+        .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
         .select("query_id", "neighbor_id", "cos_sim"),
       Seq("query_id"), Seq(col("cos_sim").desc, col("neighbor_id").asc), k = 5)
       .withColumn("rank", row_number().over(w)) // ≤ queries×5 rows
@@ -754,11 +752,10 @@ object Similarity extends QueryPack {
     * no new kernel needed. */
   private val MpTables = 4
   def annLshMultiProbe(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.LshBucketKeysExpr.register(spark, "lsh_buckets_mp",
-      planes.take(MpTables * BitsPerTable), BitsPerTable)
     val base = vecs(spark, d)
       .select(col("vec_id"), col("v"),
-        posexplode(expr("lsh_buckets_mp(v)")).as(Seq("tbl", "bucket")))
+        posexplode(LshBucketKeysExpr.column(col("v"),
+          planes.take(MpTables * BitsPerTable), BitsPerTable)).as(Seq("tbl", "bucket")))
     // corpus side: 1 key per (vector, table) — the stored index
     val c = base.filter(col("vec_id") >= 100)
       .select(col("vec_id").as("neighbor_id"), col("v").as("cv"), col("tbl"), col("bucket"))
@@ -775,7 +772,7 @@ object Similarity extends QueryPack {
       c.join(q, Seq("tbl", "bucket"))
         .select(col("query_id"), col("neighbor_id"), col("qv"), col("cv"))
         .dropDuplicates("query_id", "neighbor_id")
-        .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+        .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
         .select("query_id", "neighbor_id", "cos_sim"),
       Seq("query_id"), Seq(col("cos_sim").desc, col("neighbor_id").asc), k = 5)
       .withColumn("rank", row_number().over(w)) // ≤ queries×5 rows
@@ -917,16 +914,13 @@ object Similarity extends QueryPack {
   /** `nearest_cells(vcol)` column bound to a collected centroid model. */
   private[graft] def nearestCellsCol(vcol: org.apache.spark.sql.Column,
       centroids: DataFrame, k: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.execution.graft.GraftPlanBridge
     val (cids, cvs) = centroidArrays(centroids)
-    GraftPlanBridge.column(
-      graft.functions.NearestCellsExpr(GraftPlanBridge.expr(vcol), cids, cvs, k))
+    NearestCellsExpr.column(vcol, cids, cvs, k)
   }
 
   def annIvf(spark: SparkSession, d: String): DataFrame = {
     val NList = 16
     val NProbe = 4
-    VectorFunctions.register(spark)
     val all = vecs(spark, d)
     val centroids = trainCentroids(spark, all, NList, iters = 2)
     val assigned = nearestLists(centroids, all, "v", 1, "list_id") // 1 list per vector
@@ -946,7 +940,7 @@ object Similarity extends QueryPack {
     graft.plans.TopKPerKey(
       c.join(q, "list_id")
         .dropDuplicates("query_id", "neighbor_id")
-        .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+        .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
         .select("query_id", "neighbor_id", "cos_sim"),
       Seq("query_id"), Seq(col("cos_sim").desc, col("neighbor_id").asc), k = 5)
       .withColumn("rank", row_number().over(w)) // ≤ queries×5 rows
@@ -983,7 +977,7 @@ object Similarity extends QueryPack {
     shortlist
       .join(v.select(col("vec_id").as("query_id"), col("v").as("qv")), "query_id")
       .join(v.select(col("vec_id").as("neighbor_id"), col("v").as("cv")), "neighbor_id")
-      .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select("query_id", "neighbor_id", "cos_sim", "rank")
@@ -1016,7 +1010,6 @@ object Similarity extends QueryPack {
   /** Same over an already-loaded `(vec_id, label, v ARRAY<DOUBLE>)`
     * frame — for known-answer tests on handcrafted vectors. */
   def embedLabelSimOf(vectors: DataFrame): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val e = vectors
       .select(col("vec_id"), col("label"), posexplode(col("v")).as(Seq("pos", "x")))
     val cent = e.groupBy("label", "pos")
@@ -1029,7 +1022,7 @@ object Similarity extends QueryPack {
     val a = cent.select(col("label").as("label_a"), col("c").as("ca"))
     val b = cent.select(col("label").as("label_b"), col("c").as("cb"))
     a.join(broadcast(b), col("label_a") < col("label_b"))
-      .withColumn("cos_sim", expr("cosine_sim(ca, cb)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("ca"), col("cb")))
       .select("label_a", "label_b", "cos_sim")
       .orderBy("label_a", "label_b")
   }
@@ -1122,13 +1115,9 @@ object Similarity extends QueryPack {
     * oracle ([[bucketSql]]'s technique with the raw dot kept instead
     * of its sign bit). */
   def embedProject(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.execution.graft.GraftPlanBridge
     val all = vecs(spark, d)
     val cols = (0 until ProjDims).map { j =>
-      (GraftPlanBridge.column(graft.functions.DotProduct(
-          GraftPlanBridge.expr(col("v")),
-          GraftPlanBridge.expr(lit(projPlanes(j))))) * lit(0.25))
-        .as(f"p$j%02d")
+      (VectorFunctions.dotProduct(col("v"), lit(projPlanes(j))) * lit(0.25)).as(f"p$j%02d")
     }
     all.select(col("vec_id") +: cols: _*).orderBy("vec_id")
   }
@@ -1161,12 +1150,9 @@ object Similarity extends QueryPack {
     * composition + the measured cautionary tale; QueriesSpec floors
     * recall at the non-regression level, not a quality claim. */
   def annProjected(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.execution.graft.GraftPlanBridge
     val all = vecs(spark, d)
     val pcols = (0 until ProjDims).map { j =>
-      GraftPlanBridge.column(graft.functions.DotProduct(
-          GraftPlanBridge.expr(col("v")),
-          GraftPlanBridge.expr(lit(projPlanes(j))))) * lit(0.25)
+      VectorFunctions.dotProduct(col("v"), lit(projPlanes(j))) * lit(0.25)
     }
     val proj = all.select(col("vec_id"), array(pcols: _*).as("pv"))
     val q = proj.filter(col("vec_id") < 10)
@@ -1181,7 +1167,7 @@ object Similarity extends QueryPack {
     // replaces the window outright.
     val shortlist = graft.plans.TopKPerKey(
       c.join(broadcast(q))
-        .withColumn("proj_sim", expr("cosine_sim(qp, cp)"))
+        .withColumn("proj_sim", VectorFunctions.cosineSim(col("qp"), col("cp")))
         .select("query_id", "neighbor_id", "proj_sim"),
       Seq("query_id"), Seq(col("proj_sim").desc, col("neighbor_id").asc), k = 20)
       .select("query_id", "neighbor_id")
@@ -1190,7 +1176,7 @@ object Similarity extends QueryPack {
     shortlist
       .join(all.select(col("vec_id").as("query_id"), col("v").as("qv")), "query_id")
       .join(all.select(col("vec_id").as("neighbor_id"), col("v").as("cv")), "neighbor_id")
-      .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(wE))
       .filter(col("rank") <= 5)
       .select("query_id", "neighbor_id", "cos_sim", "rank")
@@ -1214,7 +1200,6 @@ object Similarity extends QueryPack {
     * [[annIvfPqAuto]] derives from the data. */
   private def annIvfPqWith(spark: SparkSession, d: String,
       nlist: Int, nprobe: Int, m: Int, subDim: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val all = vecs(spark, d)
     val centroids = trainCentroids(spark, all, nlist, iters = 2)
     val assigned = nearestLists(centroids, all, "v", 1, "list_id")
@@ -1249,7 +1234,7 @@ object Similarity extends QueryPack {
     shortlist
       .join(all.select(col("vec_id").as("query_id"), col("v").as("qv")), "query_id")
       .join(all.select(col("vec_id").as("neighbor_id"), col("v").as("cv")), "neighbor_id")
-      .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select("query_id", "neighbor_id", "cos_sim", "rank")
@@ -1268,7 +1253,6 @@ object Similarity extends QueryPack {
     * DISTRIBUTED cell frame. Approximate ⇒ rows-only; the recall
     * floor is [[annHierVerified]]'s hash-checked gate. */
   def annHier(spark: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(spark)
     val all = vecs(spark, d)
     val n = all.count()
     val nlist = nlistAnnForCorpus(n)
@@ -1287,7 +1271,7 @@ object Similarity extends QueryPack {
     graft.plans.TopKPerKey(
       c.join(q, "list_id")
         .dropDuplicates("query_id", "neighbor_id")
-        .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+        .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
         .select("query_id", "neighbor_id", "cos_sim"),
       Seq("query_id"), Seq(col("cos_sim").desc, col("neighbor_id").asc), k = 5)
       .withColumn("rank", row_number().over(w)) // ≤ queries×5 rows
@@ -1322,7 +1306,6 @@ object Similarity extends QueryPack {
     * way). */
   private def annIvfPqHierWith(spark: SparkSession, d: String, n: Long,
       nlist: Int, nprobe: Int, m: Int, subDim: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val all = vecs(spark, d)
     val model = HierQuantizer.train(spark, all.select("vec_id", "v"), n, nlist)
     val assigned = HierQuantizer.assignCells(model,
@@ -1576,7 +1559,7 @@ object Similarity extends QueryPack {
     shortlist
       .join(all.select(col("vec_id").as("query_id"), col("v").as("qv")), "query_id")
       .join(all.select(col("vec_id").as("neighbor_id"), col("v").as("cv")), "neighbor_id")
-      .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select("query_id", "neighbor_id", "cos_sim", "rank")
@@ -1610,7 +1593,7 @@ object Similarity extends QueryPack {
     sub.select(col("vec_id").as("doc_a"), col("v").as("va"))
       .join(sub.select(col("vec_id").as("doc_b"), col("v").as("vb")),
         col("doc_a") < col("doc_b"))
-      .filter(expr("cosine_sim(va, vb)") >= threshold)
+      .filter(VectorFunctions.cosineSim(col("va"), col("vb")) >= threshold)
       .select("doc_a", "doc_b")
 
   /** The REGISTERED exact-dedup audit: [[semanticDedup]] restricted to
@@ -1652,30 +1635,27 @@ object Similarity extends QueryPack {
     * the vectors re-attach by id. */
   private[graft] def lshNearDupPairs(spark: SparkSession, d: String,
       threshold: Double): DataFrame =
-    lshNearDupPairsOf(spark, vecs(spark, d), threshold, NumTables, BitsPerTable)
+    lshNearDupPairsOf(vecs(spark, d), threshold, NumTables, BitsPerTable)
 
   /** Same pipeline with the table/bit geometry free — the bits ∝ log n
     * scale knob ([[planesFor]]). The registered query pins (8, 4) for
     * the oracle; [[graft.tools.ScaleR7]] drives other geometries for
     * the occupancy curve. */
-  private[graft] def lshNearDupPairsOf(spark: SparkSession, vectors: DataFrame,
+  private[graft] def lshNearDupPairsOf(vectors: DataFrame,
       threshold: Double, tables: Int, bits: Int): DataFrame =
-    verifyPairs(vectors, lshCandidatesOf(spark, vectors, tables, bits), threshold)
+    verifyPairs(vectors, lshCandidatesOf(vectors, tables, bits), threshold)
 
   /** The candidate stage alone — (vec_a < vec_b) id pairs sharing a
     * (table, bucket) key. Split out so [[graft.tools.ScaleR7]] can
     * count candidates with exactly the query's own join. */
-  private[graft] def lshCandidatesOf(spark: SparkSession, vectors: DataFrame,
+  private[graft] def lshCandidatesOf(vectors: DataFrame,
       tables: Int, bits: Int): DataFrame = {
-    VectorFunctions.register(spark)
-    val fname = s"lsh_buckets_${tables}_$bits"
-    graft.functions.LshBucketKeysExpr.register(spark, fname, planesFor(tables, bits), bits)
     // bucket frame materialized ONCE with its (tbl, bucket) layout
     // declared (r18, KeyedStore scaladoc): the LSH key expression ran
     // once per self-join side and the join exchanged both scans
+    val keys = LshBucketKeysExpr.column(col("v"), planesFor(tables, bits), bits)
     val base = graft.operators.KeyedStore.byKeys(vectors
-      .select(col("vec_id"), posexplode(expr(s"$fname(v)")).as(Seq("tbl", "bucket"))),
-      "tbl", "bucket")
+      .select(col("vec_id"), posexplode(keys).as(Seq("tbl", "bucket"))), "tbl", "bucket")
     base.select(col("vec_id").as("vec_a"), col("tbl"), col("bucket"))
       .join(base.select(col("vec_id").as("vec_b"), col("tbl"), col("bucket")),
         Seq("tbl", "bucket"))
@@ -1691,7 +1671,7 @@ object Similarity extends QueryPack {
     cand
       .join(vectors.select(col("vec_id").as("vec_a"), col("v").as("va")), "vec_a")
       .join(vectors.select(col("vec_id").as("vec_b"), col("v").as("vb")), "vec_b")
-      .filter(expr("cosine_sim(va, vb)") >= threshold)
+      .filter(VectorFunctions.cosineSim(col("va"), col("vb")) >= threshold)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
 
   /** [[semanticDedup]] with the quadratic pair stage replaced by
@@ -1777,10 +1757,8 @@ object Similarity extends QueryPack {
     val sliced = Array.tabulate(NumTables * bits) { i =>
       autoPlanes((i / bits) * AutoMaxBits + (i % bits))
     }
-    val fname = s"lsh_buckets_auto_$bits"
-    graft.functions.LshBucketKeysExpr.register(spark, fname, sliced, bits)
-    val base = vectors
-      .select(col("vec_id"), posexplode(expr(s"$fname(v)")).as(Seq("tbl", "bucket")))
+    val base = vectors.select(col("vec_id"),
+      posexplode(LshBucketKeysExpr.column(col("v"), sliced, bits)).as(Seq("tbl", "bucket")))
     val cand = base.select(col("vec_id").as("vec_a"), col("tbl"), col("bucket"))
       .join(base.select(col("vec_id").as("vec_b"), col("tbl"), col("bucket")),
         Seq("tbl", "bucket"))
@@ -1851,7 +1829,6 @@ object Similarity extends QueryPack {
   private[graft] def ivfCandidatesAmong(spark: SparkSession, all: DataFrame,
       sub: DataFrame, nlist: Int, softAssign: Int,
       nKnown: Long = -1L): DataFrame = {
-    VectorFunctions.register(spark)
     // callers that already hold the corpus count (the auto policies,
     // the octave sweeps) get the capped training sample (VERDICT r16
     // #4); a -1 sentinel keeps every fixed-geometry registered path on
@@ -1890,7 +1867,6 @@ object Similarity extends QueryPack {
     * best `softAssign` cells among their children. */
   private[graft] def ivfCandidatesHierAmong(spark: SparkSession, all: DataFrame,
       sub: DataFrame, n: Long, nlist: Int, softAssign: Int, s1: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val model = HierQuantizer.train(spark, all.select("vec_id", "v"), n, nlist)
     val assigned = HierQuantizer.assignCells(model,
         sub.select("vec_id", "v"), soft = softAssign, s1 = s1, "cell")
@@ -1923,10 +1899,9 @@ object Similarity extends QueryPack {
     * tie-break) — hash-checked end to end, unlike the k-means-based
     * variants. */
   def semanticIncremental(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.LshBucketKeysExpr.register(spark, "lsh_buckets", planes, BitsPerTable)
     val all = vecs(spark, d)
     val base = all.select(col("vec_id"), col("v"),
-      posexplode(expr("lsh_buckets(v)")).as(Seq("tbl", "bucket")))
+      posexplode(LshBucketKeysExpr.column(col("v"), planes, BitsPerTable)).as(Seq("tbl", "bucket")))
     val isBatch = col("vec_id") % 8 === 7
     val q = base.filter(isBatch)
       .select(col("vec_id").as("batch_id"), col("tbl"), col("bucket"))
@@ -1937,7 +1912,7 @@ object Similarity extends QueryPack {
     val ver = cand
       .join(all.select(col("vec_id").as("batch_id"), col("v").as("qv")), "batch_id")
       .join(all.select(col("vec_id").as("corpus_id"), col("v").as("cv")), "corpus_id")
-      .withColumn("cos_sim", expr("cosine_sim(qv, cv)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("cv")))
       .filter(col("cos_sim") >= 0.4)
     // argmax as a hash aggregate (max cos, ties → min corpus_id):
     // the same min-struct trick as trainCentroids — negation is an
@@ -2068,12 +2043,12 @@ object Similarity extends QueryPack {
     *
     * Soft assignment is wider here than the fixed gate's (vs its 2):
     * at constant occupancy the agreement decays with duplicate
-    * DENSITY, which grows with SF in this corpus (IvfAutoProbe's flat
-    * sweep, SCALE.md §r8), and the r10 two-level quantizer adds a
-    * super-cell boundary near-dups can split across — HierProbe's
-    * (s1 × soft) sweep at n=2000 picked (4, 6) as the cheapest
-    * setting clearing the floor with margin (see the knob comment at
-    * the call). Candidates stay linear: per-cell work is still the
+    * DENSITY, which grows with SF in this corpus (the flat probe-width
+    * sweep, SCALE.md §r8 `semantic_dedup_ivf_auto`), and the r10
+    * two-level quantizer adds a super-cell boundary near-dups can split
+    * across — the r10 (s1 × soft) sweep at n=2000 picked (4, 6) as
+    * the cheapest setting clearing the floor with margin (see the knob
+    * comment at the call). Candidates stay linear: per-cell work is still the
     * occupancy-bounded constant, ×soft of the single-assign form. */
   def semanticDedupIvfAuto(spark: SparkSession, d: String): DataFrame = {
     val all = vecs(spark, d)
@@ -2095,7 +2070,7 @@ object Similarity extends QueryPack {
     // EITHER generator — the subset law is structural for ANY candidate
     // set restricted to the probe set, and the agreement floor is
     // measured for both (flat soft=4: r9's green rows; hier knobs from
-    // HierProbe's (s1 × soft) sweep at sf0.1 (n=2000, k1=k2=6):
+    // the r10 (s1 × soft) sweep at sf0.1 (n=2000, k1=k2=6; SCALE.md §r10):
     // agreement 0.87 at (2,4) — the super level, not the cell count,
     // was the recall bottleneck — 0.90 at (3,4), 0.98 at (4,6), 0.998
     // at (4,8); (4,6) clears the 0.9 floor with margin at constant

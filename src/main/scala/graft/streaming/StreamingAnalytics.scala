@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.{FreqItemsAgg, LshBucketKeysExpr, MinHashBandsRowExpr, VectorFunctions}
 
 /** Incremental maintenance of the dashboard aggregates (the alternative
   * ST6 path: instead of re-scanning the table per 5 s poll, keep the
@@ -74,9 +75,8 @@ object StreamingAnalytics {
     * exactly that. */
   def freqItemsStream(events: DataFrame, key: String, item: String,
       k: Int = 7): DataFrame = {
-    graft.functions.FreqItemsAgg.register(events.sparkSession, k)
     events.groupBy(col(key))
-      .agg(expr(s"freq_items($item)").as("heavy_hitters"))
+      .agg(FreqItemsAgg.column(col(item), k).as("heavy_hitters"))
   }
 
   /** Stream-stream interval join as a library operator — the streaming
@@ -118,9 +118,8 @@ object StreamingAnalytics {
     * same per-row kernel the stream probe uses. At scale this is the
     * persisted "LSH index" table, partitioned by band key. */
   def bandIndexOf(history: DataFrame): DataFrame = {
-    graft.functions.MinHashBandsRowExpr.register(history.sparkSession)
     history.select(col("doc_id").as("ref_id"),
-      posexplode(expr("minhash_bands_row(text)")).as(Seq("band", "bkey")))
+      posexplode(MinHashBandsRowExpr.column(col("text"))).as(Seq("band", "bkey")))
   }
 
   /** Online near-duplicate detection: incoming documents checked against
@@ -135,13 +134,17 @@ object StreamingAnalytics {
     * dedup collisions and exact-verify per micro-batch in foreachBatch —
     * the same verify stage the batch path uses. */
   def nearDupStream(incoming: DataFrame, bandIndex: DataFrame): DataFrame = {
-    graft.functions.MinHashBandsRowExpr.register(incoming.sparkSession)
     incoming.select(col("doc_id"),
-        posexplode(expr("minhash_bands_row(text)")).as(Seq("band", "bkey")))
+        posexplode(MinHashBandsRowExpr.column(col("text"))).as(Seq("band", "bkey")))
       .join(bandIndex, Seq("band", "bkey"))
       .filter(col("doc_id") =!= col("ref_id"))
       .select("doc_id", "ref_id", "band")
   }
+
+  /** The (8, 4) hyperplane bucket keys of a float `embedding` column. */
+  private def bucketKeys(embedding: org.apache.spark.sql.Column) =
+    LshBucketKeysExpr.column(embedding.cast("array<double>"),
+      graft.similarity.Similarity.planesFor(8, 4), 4)
 
   /** Hyperplane bucket index of a stored embedding corpus — one row
     * per (vector, table) with the vector carried for in-stream verify;
@@ -150,14 +153,9 @@ object StreamingAnalytics {
     * oracle-pinned configuration, so `semantic_incremental`'s batch
     * results and this index agree bucket-for-bucket). */
   def lshBucketIndexOf(corpus: DataFrame): DataFrame = {
-    val s = corpus.sparkSession
-    graft.functions.VectorFunctions.register(s)
-    graft.functions.LshBucketKeysExpr.register(s, "lsh_buckets_idx",
-      graft.similarity.Similarity.planesFor(8, 4), 4)
     corpus.select(col("vec_id").as("ref_id"),
       col("embedding").cast("array<double>").as("rv"),
-      posexplode(expr("lsh_buckets_idx(cast(embedding as array<double>))"))
-        .as(Seq("tbl", "bucket")))
+      posexplode(bucketKeys(col("embedding"))).as(Seq("tbl", "bucket")))
   }
 
   /** Online SEMANTIC near-duplicate detection — the streaming form of
@@ -176,17 +174,12 @@ object StreamingAnalytics {
     * downstream, where the batch query's hash-checked form already
     * defines it. */
   def semanticProbeStream(incoming: DataFrame, bucketIndex: DataFrame): DataFrame = {
-    val s = incoming.sparkSession
-    graft.functions.VectorFunctions.register(s)
-    graft.functions.LshBucketKeysExpr.register(s, "lsh_buckets_idx",
-      graft.similarity.Similarity.planesFor(8, 4), 4)
     incoming.select(col("vec_id"),
         col("embedding").cast("array<double>").as("qv"),
-        posexplode(expr("lsh_buckets_idx(cast(embedding as array<double>))"))
-          .as(Seq("tbl", "bucket")))
+        posexplode(bucketKeys(col("embedding"))).as(Seq("tbl", "bucket")))
       .join(bucketIndex, Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("ref_id"))
-      .withColumn("cos_sim", expr("cosine_sim(qv, rv)"))
+      .withColumn("cos_sim", VectorFunctions.cosineSim(col("qv"), col("rv")))
       .filter(col("cos_sim") >= 0.4)
       .select("vec_id", "ref_id", "tbl", "cos_sim")
   }
@@ -389,7 +382,6 @@ object StreamingAnalytics {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        graft.functions.VectorFunctions.register(spark)
         // in-batch dedup FIRST: two files delivering the same vec_id in
         // one trigger would both survive the table anti-join and append
         // twice — and a duplicated posting row doubles that vector's

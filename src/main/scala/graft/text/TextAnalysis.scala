@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.{BestFitPackExpr, RepetitionStatsExpr, RollingHashExpr}
 import graft.queries.QueryPack
 
 /** Text-analysis operators over the `documents` table: language ID,
@@ -94,9 +95,8 @@ object TextAnalysis extends QueryPack {
     * [[graft.functions.RollingHashExpr]] — the oracle reproduces the
     * identical fold in SQL. */
   def fingerprints(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.RollingHashExpr.register(spark)
     Tables.documents(spark, d)
-      .withColumn("fp", expr("rolling_hash(text)"))
+      .withColumn("fp", RollingHashExpr.column(col("text")))
       .select("doc_id", "fp")
       .orderBy("doc_id")
   }
@@ -284,9 +284,8 @@ object TextAnalysis extends QueryPack {
     // two long[] sorts ([[graft.functions.RepetitionStatsExpr]]);
     // gopherGatesHofOf below is the built-in-functions formulation it
     // is equality-pinned against (TextGopherSpec)
-    graft.functions.RepetitionStatsExpr.register(documents.sparkSession)
     documents
-      .withColumn("rs", expr("repetition_stats(text)"))
+      .withColumn("rs", RepetitionStatsExpr.column(col("text")))
       .select(col("doc_id"),
         col("rs.n_tokens").as("n_tokens"),
         col("rs.n_tri").as("n_tri"),
@@ -816,11 +815,8 @@ object TextAnalysis extends QueryPack {
       // ≤ chunkDocs structs per row — the fold's bounded working set
       .agg(array_sort(collect_list(struct(col("rk"), col("doc_id"),
         col("n_tokens")))).as("docs"))
-      .withColumn("bins", org.apache.spark.sql.execution.graft
-        .GraftPlanBridge.column(graft.functions.BestFitPackExpr(
-          org.apache.spark.sql.execution.graft.GraftPlanBridge.expr(
-            expr("transform(docs, d -> d.n_tokens)")),
-          PackBin)))
+      .withColumn("bins",
+        BestFitPackExpr.column(expr("transform(docs, d -> d.n_tokens)"), PackBin))
       .select(col("source"), col("quartile"), col("chunk"),
         explode(arrays_zip(col("docs"), col("bins"))).as("z"))
       .select(col("source"), col("quartile"),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.BloomPrune
@@ -14,8 +14,8 @@ import graft.operators.BloomPrune
   * Bloom composition touches history map-side only, so its exchange
   * volume is flat in history size. This tool turns that from an
   * argument into a measured curve: per variant and multiplier, wall
-  * seconds and shuffle-write records/bytes (ScaleR8's stage-metrics
-  * listener), plus a result-count equality check between variants.
+  * seconds and shuffle-write records/bytes ([[StageMetrics]]), plus a
+  * result-count equality check between variants.
   *
   * Amplification adds NON-MATCHING history (o_custkey shifted into a
   * disjoint key range per replica) — the realistic regime: history
@@ -30,12 +30,7 @@ object AntiJoinAb {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val mults = sys.env.getOrElse("ANTI_AB_MULTS", "1,4,16,64")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder("graft-anti-join-ab", s"local[$cpus]", 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val metrics = new StageMetrics(spark)

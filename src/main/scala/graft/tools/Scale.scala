@@ -67,12 +67,8 @@ object Scale {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Spark's default 200 shuffle partitions, as the recorded sweeps ran
+    val spark = graft.GraftSession.builder("graft-scale", s"local[$cpus]", 200).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val modes: Map[String, (SparkSession, String) => Unit] = Map(
       "novelty" -> novelty, "noveltyskew" -> noveltySkew,
@@ -236,7 +232,6 @@ object Scale {
     * ~N(0, 1/√dim) background at ANY corpus size. Fully deterministic
     * (xxhash64-derived components) and the PLANTED truth is known. */
   private def plantedVecs(spark: SparkSession, mult: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val dim = 32
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     def unit(c: org.apache.spark.sql.Column) = // signed hash → [-1, 1]

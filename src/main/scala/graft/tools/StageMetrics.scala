@@ -2,15 +2,17 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Cumulative task-metric listener for the A/B probes (originally the
-  * r8 sweep's instrument; extracted when the per-round ScaleR* mains
-  * were folded into [[Scale]]): run time, GC, spill, shuffle
-  * records/bytes, peak execution memory — snapshot deltas bracket a
-  * measured block. */
+/** Cumulative scheduler and task-metric listener for the profiling and
+  * A/B tools ([[QueryProfile]], [[AntiJoinAb]]): job, stage and task
+  * counts, run time, GC, spill, shuffle records/bytes, peak execution
+  * memory — snapshot deltas bracket a measured block. */
 final class StageMetrics(spark: SparkSession) extends SparkListener {
+  val jobs = new AtomicLong
+  val stages = new AtomicLong
+  val tasks = new AtomicLong
   val runTimeMs = new AtomicLong
   val gcTimeMs = new AtomicLong
   val memSpill = new AtomicLong
@@ -22,7 +24,11 @@ final class StageMetrics(spark: SparkSession) extends SparkListener {
   val peakExecMem = new AtomicLong
   spark.sparkContext.addSparkListener(this)
 
+  override def onJobStart(ev: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+
   override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
+    stages.incrementAndGet()
+    tasks.addAndGet(ev.stageInfo.numTasks)
     val m = ev.stageInfo.taskMetrics
     if (m != null) {
       runTimeMs.addAndGet(m.executorRunTime)
@@ -37,10 +43,11 @@ final class StageMetrics(spark: SparkSession) extends SparkListener {
     }
   }
 
-  case class Snap(runTimeMs: Long, gcTimeMs: Long, memSpill: Long,
-      diskSpill: Long, shufReadRec: Long, shufReadBytes: Long,
-      shufWriteRec: Long, shufWriteBytes: Long) {
-    def -(o: Snap): Snap = Snap(runTimeMs - o.runTimeMs,
+  case class Snap(jobs: Long, stages: Long, tasks: Long, runTimeMs: Long,
+      gcTimeMs: Long, memSpill: Long, diskSpill: Long, shufReadRec: Long,
+      shufReadBytes: Long, shufWriteRec: Long, shufWriteBytes: Long) {
+    def -(o: Snap): Snap = Snap(jobs - o.jobs, stages - o.stages,
+      tasks - o.tasks, runTimeMs - o.runTimeMs,
       gcTimeMs - o.gcTimeMs, memSpill - o.memSpill,
       diskSpill - o.diskSpill, shufReadRec - o.shufReadRec,
       shufReadBytes - o.shufReadBytes, shufWriteRec - o.shufWriteRec,
@@ -48,7 +55,8 @@ final class StageMetrics(spark: SparkSession) extends SparkListener {
   }
 
   private def read(): Snap =
-    Snap(runTimeMs.get, gcTimeMs.get, memSpill.get, diskSpill.get,
+    Snap(jobs.get, stages.get, tasks.get, runTimeMs.get, gcTimeMs.get,
+      memSpill.get, diskSpill.get,
       shufReadRec.get, shufReadBytes.get, shufWriteRec.get,
       shufWriteBytes.get)
 

@@ -223,7 +223,8 @@ object GraftPlanBridge {
     * count, and Spark's `RepartitionByExpression` uses exactly the
     * `HashPartitioning` declared here), optionally followed by
     * narrow, partitioning-preserving ops (`sortWithinPartitions`,
-    * projections). `keys` are resolved against `df`'s output by name.
+    * projections). Each of `keys` must resolve to exactly one column of
+    * `df`'s output under the session's resolver.
     *
     * Returns the checkpointed frame plus the backing RDD — callers
     * unpersist the RDD when the loop ends (Dataset.unpersist is a
@@ -234,14 +235,23 @@ object GraftPlanBridge {
     val df = df0.asInstanceOf[DataFrame]
     val spark = df.sparkSession
     val qe = df.queryExecution
+    // each key must name exactly one output column under the session's
+    // resolver: a duplicate name would silently declare the layout on
+    // whichever column came first
+    val attrs = qe.analyzed.output
+    val resolver = spark.sessionState.conf.resolver
+    val keyAttrs = keys.map { k =>
+      attrs.filter(a => resolver(a.name, k)) match {
+        case Seq(a) => a
+        case found => throw new IllegalArgumentException(
+          s"checkpointHashPartitioned: key '$k' matches ${found.size} columns " +
+            s"in ${attrs.map(_.name)}")
+      }
+    }
     // toRdd reuses row buffers per partition — copy, as Dataset.checkpoint does
     val rdd = qe.toRdd.map(_.copy())
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rdd.count() // materialize now: loop rounds must read blocks, not race
-    val attrs = qe.analyzed.output
-    val keyAttrs = keys.map(k => attrs.find(_.name == k).getOrElse(
-      throw new IllegalArgumentException(
-        s"checkpointHashPartitioned: no column '$k' in ${attrs.map(_.name)}")))
     val part = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
       keyAttrs, rdd.getNumPartitions)
     // declared only when the caller ALSO ran sortWithinPartitions on

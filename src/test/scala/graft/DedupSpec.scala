@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.functions.{MinHashAgg, MinHashBandsRowExpr}
 
 /** Sketch-operator properties the SQL oracle can't check. */
 class DedupSpec extends SparkSpec {
@@ -26,17 +27,14 @@ class DedupSpec extends SparkSpec {
   }
 
   test("per-row band kernel emits bit-identical keys to the aggregate path") {
-    graft.functions.MinHashAgg.registerBands(spark,
-      graft.functions.MinHashAgg.DefaultA, graft.functions.MinHashAgg.DefaultB,
-      graft.functions.MinHashAgg.DefaultBands)
-    graft.functions.MinHashBandsRowExpr.register(spark)
     val corpus = Tables.documents(spark, sf0001)
     val aggKeys = Dedup.hashedShingles(corpus)
       .withColumn("h", expr("shingle & 4294967295"))
-      .groupBy("doc_id").agg(expr("minhash_bands(h)").as("bks"))
+      .groupBy("doc_id").agg(MinHashAgg.column(col("h"), MinHashAgg.DefaultA,
+        MinHashAgg.DefaultB, MinHashAgg.DefaultBands).as("bks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val rowKeys = corpus
-      .select(col("doc_id"), expr("minhash_bands_row(text)").as("bks"))
+      .select(col("doc_id"), MinHashBandsRowExpr.column(col("text")).as("bks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     // agg path has no group for shingle-less docs; row path emits empty
     assert(rowKeys.keySet === corpus.select("doc_id").as[Long].collect().toSet)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.FreqItemsAgg
 
 /** Misra–Gries heavy-hitters guarantee, pinned: any item with true
   * frequency > n/(k+1) survives the sketch, and surviving estimates
@@ -10,12 +11,11 @@ class FreqItemsSpec extends SparkSpec {
   import spark.implicits._
 
   private def sketch(parts: Int, k: Int): Map[String, Long] = {
-    graft.functions.FreqItemsAgg.register(spark, k)
     // 1000 rows: "hot" 400, "warm" 300, tail of 30 singletons × 10
     val data = Seq.fill(400)("hot") ++ Seq.fill(300)("warm") ++
       (1 to 30).flatMap(i => Seq.fill(10)(s"tail$i"))
     data.toDF("s").repartition(parts)
-      .agg(expr("freq_items(s)").as("m"))
+      .agg(FreqItemsAgg.column(col("s"), k).as("m"))
       .select(explode(col("m"))).as[(String, Long)].collect().toMap
   }
 
@@ -33,9 +33,8 @@ class FreqItemsSpec extends SparkSpec {
   }
 
   test("exact when distinct items fit in k counters") {
-    graft.functions.FreqItemsAgg.register(spark, k = 8)
     val m = (Seq.fill(7)("a") ++ Seq.fill(3)("b")).toDF("s").repartition(3)
-      .agg(expr("freq_items(s)").as("m"))
+      .agg(FreqItemsAgg.column(col("s"), 8).as("m"))
       .select(explode(col("m"))).as[(String, Long)].collect().toMap
     assert(m === Map("a" -> 7L, "b" -> 3L))
   }

@@ -11,9 +11,8 @@ class JsonFieldSpec extends SparkSpec {
   import spark.implicits._
 
   private def scan(rows: (String, String)*): Seq[Option[Int]] = {
-    JsonIntExpr.register(spark)
     rows.toDF("s", "key")
-      .select(expr("json_int(s, key)").as("v"))
+      .select(JsonIntExpr.column(col("s"), col("key")).as("v"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getInt(0))).toSeq
   }
 
@@ -34,13 +33,12 @@ class JsonFieldSpec extends SparkSpec {
   }
 
   test("agrees with from_json on the corpus and with the oracle regex") {
-    JsonIntExpr.register(spark)
     val ev = Tables.events(spark, sf0001)
     val viaJson = ev.select(col("event_id"),
         from_json(col("props"), StructType(Seq(StructField("k", IntegerType))))
           .getField("k").as("k"))
       .orderBy("event_id").collect().toSeq
-    val viaScan = ev.select(col("event_id"), expr("json_int(props, 'k')").as("k"))
+    val viaScan = ev.select(col("event_id"), JsonIntExpr.column(col("props"), lit("k")).as("k"))
       .orderBy("event_id").collect().toSeq
     val viaRegex = ev.select(col("event_id"),
         regexp_extract(col("props"), "\"k\": *(-?[0-9]+)", 1).cast("int").as("k"))
@@ -51,9 +49,8 @@ class JsonFieldSpec extends SparkSpec {
   }
 
   test("interpreted eval agrees with codegen") {
-    JsonIntExpr.register(spark)
     val df = Seq("""{"k": 1}""", """{"k": -2}""", """{"x": 3}""").toDF("s")
-    def run(): Seq[Option[Int]] = df.select(expr("json_int(s, 'k')").as("v"))
+    def run(): Seq[Option[Int]] = df.select(JsonIntExpr.column(col("s"), lit("k")).as("v"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getInt(0))).toSeq
     val cg = run()
     spark.conf.set("spark.sql.codegen.wholeStage", "false")

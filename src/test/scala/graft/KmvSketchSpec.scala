@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.functions.KmvSketchAgg
 
 /** Laws of the KMV/Theta distinct sketch ([[graft.functions.KmvSketchAgg]])
   * and the overlap estimators built on it. */
@@ -9,9 +10,8 @@ class KmvSketchSpec extends SparkSpec {
   import spark.implicits._
 
   private def sketchOf(hashes: Seq[Long], k: Int, parts: Int) = {
-    graft.functions.KmvSketchAgg.register(spark, k)
     hashes.toDF("h").repartition(parts)
-      .agg(expr("kmv_sketch(h)").as("sk"))
+      .agg(KmvSketchAgg.column(col("h"), k).as("sk"))
       .head().getSeq[Long](0)
   }
 
@@ -48,10 +48,9 @@ class KmvSketchSpec extends SparkSpec {
     val k = 256
     val n = 20000
     // deterministic "hashes": xxhash64 of 1..n via Spark itself
-    graft.functions.KmvSketchAgg.register(spark, k)
     val est = spark.range(n.toLong)
       .select(xxhash64(col("id")).as("h"))
-      .agg(expr("kmv_sketch(h)").as("sk"))
+      .agg(KmvSketchAgg.column(col("h"), k).as("sk"))
       .select(
         when(size(col("sk")) === k,
           lit((k - 1).toDouble) /

@@ -87,4 +87,17 @@ class MaterializeSpec extends SparkSpec {
       assert(!root.exists(), "local mode must not write durable temp parquet")
     } finally spark.conf.unset("spark.graft.materialize.dir")
   }
+
+  test("checkpointHashPartitioned: a key must name exactly one column") {
+    import org.apache.spark.sql.execution.graft.GraftPlanBridge
+    val twoKs = spark.range(4).select(col("id").as("k"), (col("id") * 2).as("k"))
+    val dup = intercept[IllegalArgumentException] {
+      GraftPlanBridge.checkpointHashPartitioned(twoKs.repartition(2), Seq("k"))
+    }
+    assert(dup.getMessage.contains("matches 2 columns"))
+    val none = intercept[IllegalArgumentException] {
+      GraftPlanBridge.checkpointHashPartitioned(frame.repartition(2, col("id")), Seq("nope"))
+    }
+    assert(none.getMessage.contains("matches 0 columns"))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.MinHashAgg
 
 /** Hand-computed goldens and partitioning-invariance checks for the
   * round-2 query surface — properties the DuckDB oracle proves at
@@ -250,12 +251,10 @@ class NewQueryGoldensSpec extends SparkSpec {
       (2L, "completely different words nothing shared at all here truly"),
       (3L, "the quick brown fox jumps over the lazy dog again and again"))
       .toDF("doc_id", "text")
-    graft.functions.MinHashAgg.registerBands(spark,
-      graft.functions.MinHashAgg.DefaultA, graft.functions.MinHashAgg.DefaultB,
-      graft.functions.MinHashAgg.DefaultBands)
     val bands = graft.dedup.Dedup.hashedShingles(docs)
       .withColumn("h", expr("shingle & 4294967295"))
-      .groupBy("doc_id").agg(expr("minhash_bands(h)").as("bks"))
+      .groupBy("doc_id").agg(MinHashAgg.column(col("h"), MinHashAgg.DefaultA,
+        MinHashAgg.DefaultB, MinHashAgg.DefaultBands).as("bks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(bands(0L).length === 32)
     assert(bands(0L) === bands(3L)) // identical docs → identical band keys

@@ -62,7 +62,6 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("distributed aggregate matches the bound against exact percentiles") {
-    QuantileSketchAgg.register(spark, 256, Seq(0.25, 0.5, 0.75))
     val exact = Tables.orders(spark, sf0001)
       .select(col("o_orderstatus"), col("o_totalprice").cast("double").as("x"))
       .as[(String, Double)].collect().groupBy(_._1)
@@ -75,7 +74,7 @@ class QuantileSketchSpec extends SparkSpec {
       .select(col("o_orderstatus"), col("o_totalprice").cast("double").as("x"))
       .repartition(13)
       .groupBy(col("o_orderstatus"))
-      .agg(expr("quantile_sketch(x)").as("qs"))
+      .agg(QuantileSketchAgg.column(col("x"), 256, Seq(0.25, 0.5, 0.75)).as("qs"))
       .select(col("o_orderstatus"), col("qs")(0).as("p25_est"),
         col("qs")(1).as("p50_est"), col("qs")(2).as("p75_est"))
       .as[(String, Double, Double, Double)].collect()

@@ -14,10 +14,18 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("every registered query runs at sf0.001") {
+    // the noop sink evaluates every output column; count() would let the
+    // optimizer prune the columns no aggregate needs
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf0001).count()
-      assert(n >= 0, s"$name failed")
+      try fn(spark, sf0001).write.format("noop").mode("overwrite").save()
+      catch { case e: Exception => fail(s"$name failed", e) }
     }
+    // queries bind their expressions as typed columns: none leaves a
+    // temporary function behind that a fresh session would not have
+    def temporary(s: org.apache.spark.sql.SparkSession) =
+      s.catalog.listFunctions().collect().filter(_.isTemporary).map(_.name).toSet
+    val leaked = temporary(spark) -- temporary(spark.newSession())
+    assert(leaked.isEmpty, s"temporary functions registered by queries: $leaked")
   }
 
   test("every oracle key has a matching query") {
@@ -471,14 +479,14 @@ class QueriesSpec extends SparkSpec {
     // the JL property on this corpus: projected cosine tracks original
     // cosine for the exact near-dup pairs (the pairs the projection
     // exists to pre-screen) — mean absolute error bounded
-    graft.functions.VectorFunctions.register(spark)
     val pcols = array((0 until 16).map(j => col(f"p$j%02d")): _*)
     val pv = proj.select(col("vec_id"), pcols.as("pv"))
     val pairs = Similarity.embedNearDup(spark, sf0001)
       .select("vec_a", "vec_b", "cos_sim")
       .join(pv.select(col("vec_id").as("vec_a"), col("pv").as("pa")), "vec_a")
       .join(pv.select(col("vec_id").as("vec_b"), col("pv").as("pb")), "vec_b")
-      .select(col("cos_sim"), expr("cosine_sim(pa, pb)").as("proj_sim"))
+      .select(col("cos_sim"),
+        graft.functions.VectorFunctions.cosineSim(col("pa"), col("pb")).as("proj_sim"))
       .collect()
     assert(pairs.nonEmpty)
     val mae = pairs.map(r => math.abs(r.getDouble(0) - r.getDouble(1))).sum / pairs.length

@@ -401,7 +401,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
 
   test("annIndexStream: stream-built postings == batch encode; replay appends nothing") {
     val in = tmpDir("ai-in"); val post = tmpDir("ai-post"); val ck = tmpDir("ai-ck")
-    graft.functions.VectorFunctions.register(spark)
     val all = Tables.embeddings(spark, sf0001)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     // frozen models, trained once from the full corpus (the offline build)

@@ -9,9 +9,8 @@ class VectorFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   private def sim(a: Seq[Double], b: Seq[Double]): java.lang.Double = {
-    VectorFunctions.register(spark)
     Seq((a, b)).toDF("a", "b")
-      .select(expr("cosine_sim(a, b)")).as[java.lang.Double].collect().head
+      .select(VectorFunctions.cosineSim($"a", $"b")).as[java.lang.Double].collect().head
   }
 
   test("orthogonal, identical, and opposite vectors") {
@@ -25,17 +24,15 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   test("null input yields null") {
-    VectorFunctions.register(spark)
     val r = Seq((Some(Seq(1.0)), Option.empty[Seq[Double]])).toDF("a", "b")
-      .select(expr("cosine_sim(a, b)")).collect().head
+      .select(VectorFunctions.cosineSim($"a", $"b")).collect().head
     assert(r.isNullAt(0))
   }
 
   test("dot_product: golden values, sequential-fold parity, null passthrough") {
-    VectorFunctions.register(spark)
     def dot(a: Seq[Double], b: Seq[Double]): Double =
       Seq((a, b)).toDF("a", "b")
-        .select(expr("dot_product(a, b)")).as[Double].collect().head
+        .select(VectorFunctions.dotProduct($"a", $"b")).as[Double].collect().head
     assert(dot(Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)) === 32.0)
     assert(dot(Seq(1.0, 0.0), Seq(0.0, 1.0)) === 0.0)
     // bit-exact against the same sequential fold the oracle runs
@@ -45,8 +42,7 @@ class VectorFunctionsSpec extends SparkSpec {
     val p = e.head._2.map(x => x * 0.5 - 0.1)
     val got = Tables.embeddings(spark, sf0001).limit(20)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .select($"vec_id", expr("dot_product(v, " +
-        p.map(_.toString + "D").mkString("array(", ", ", ")") + ")").as("d"))
+      .select($"vec_id", VectorFunctions.dotProduct($"v", lit(p.toArray)).as("d"))
       .as[(Long, Double)].collect().toMap
     for ((id, v) <- e) {
       var acc = 0.0
@@ -54,23 +50,22 @@ class VectorFunctionsSpec extends SparkSpec {
       assert(got(id) === acc, s"vec $id")
     }
     val r = Seq((Some(Seq(1.0)), Option.empty[Seq[Double]])).toDF("a", "b")
-      .select(expr("dot_product(a, b)")).collect().head
+      .select(VectorFunctions.dotProduct($"a", $"b")).collect().head
     assert(r.isNullAt(0))
   }
 
   test("interpreted eval agrees with codegen over real embeddings") {
-    VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sf0001).limit(50)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val pairs = e.select($"vec_id".as("ia"), $"v".as("va"))
       .crossJoin(e.select($"vec_id".as("ib"), $"v".as("vb")))
       .filter($"ia" < $"ib")
     // codegen path (whole-stage) vs forced-interpreted path
-    val cg = pairs.select($"ia", $"ib", expr("cosine_sim(va, vb)").as("s"))
+    val cg = pairs.select($"ia", $"ib", VectorFunctions.cosineSim($"va", $"vb").as("s"))
       .orderBy("ia", "ib").as[(Long, Long, Double)].collect()
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp = try pairs.select($"ia", $"ib", expr("cosine_sim(va, vb)").as("s"))
+    val interp = try pairs.select($"ia", $"ib", VectorFunctions.cosineSim($"va", $"vb").as("s"))
       .orderBy("ia", "ib").as[(Long, Long, Double)].collect()
     finally {
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
@@ -84,9 +79,8 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   test("sq_dist: hand values and bit-identity with the aggregate fold") {
-    VectorFunctions.register(spark)
     val r = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 0.0, 7.0))).toDF("a", "b")
-      .select(expr("sq_dist(a, b)")).as[Double].head()
+      .select(VectorFunctions.sqDist($"a", $"b")).as[Double].head()
     assert(r === 4.0 + 16.0)
     // the expression replaced this exact fold in ProductQuantizer — the
     // sequential accumulation must match it bit-for-bit on real data
@@ -95,7 +89,7 @@ class VectorFunctionsSpec extends SparkSpec {
     val pairs = e.select($"vec_id".as("ia"), $"v".as("va"))
       .crossJoin(e.select($"vec_id".as("ib"), $"v".as("vb")))
       .filter($"ia" < $"ib")
-    val native = pairs.select($"ia", $"ib", expr("sq_dist(va, vb)").as("d"))
+    val native = pairs.select($"ia", $"ib", VectorFunctions.sqDist($"va", $"vb").as("d"))
       .orderBy("ia", "ib").as[(Long, Long, Double)].collect()
     val folded = pairs.select($"ia", $"ib",
         expr("aggregate(zip_with(va, vb, (x, y) -> (x - y) * (x - y)), " +
