@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.InsertTimeExpr
 
 /** Partitioned, sort-ordered columnar sink — the MergeTree analog.
   *
@@ -29,9 +30,19 @@ object EventSink {
   def withEventMonth(df: DataFrame): DataFrame =
     df.withColumn("event_month", date_format(col("event_time"), "yyyyMM"))
 
-  /** Append `df` to `path` as a partitioned, locally-sorted parquet table. */
+  /** `processing_time DateTime DEFAULT now()` (reference
+    * generate_data.py:169,190; SURVEY ST5): every row of one insert gets
+    * the same insert time, taken when the insert starts. A frame that
+    * already carries `processing_time` keeps it, as a supplied value
+    * overrides a ClickHouse DEFAULT. */
+  private def withInsertTime(df: DataFrame): DataFrame =
+    if (df.columns.contains("processing_time")) df
+    else df.withColumn("processing_time", InsertTimeExpr.column(java.time.Instant.now()))
+
+  /** Append `df` to `path` as a partitioned, locally-sorted parquet
+    * table, stamped with this append's insert time. */
   def append(df: DataFrame, path: String): Unit =
-    withEventMonth(df)
+    withEventMonth(withInsertTime(df))
       .sortWithinPartitions("event_month", "event_time", "product_id")
       .write.mode("append")
       .partitionBy("event_month")

@@ -16,11 +16,17 @@ import graft.ingest.{EventSink, IngestTransform}
   * maps to
   *
   *   `readStream` (kafka or file/text source behind one interface)
-  *     → `from_json` + corrupt-row drop (S4)
+  *     → `from_json` + corrupt-row drop (S4), one parse per event
   *     → `IngestTransform.typedSales` / `typedWarehouse` (ST2 — stateless,
   *        no watermark needed: the reference MVs deliberately do no
   *        event-time filtering, generate_data.py:205)
-  *     → `foreachBatch` append to partitioned sorted parquet (S5/S6)
+  *     → `foreachBatch` append to partitioned sorted parquet (S5/S6),
+  *        which stamps `processing_time` with one insert time per
+  *        micro-batch (ST5, the MergeTree's `DEFAULT now()`)
+  *
+  * Nothing in a micro-batch's plan changes from one batch to the next
+  * except its input files; the insert time is bound outside the
+  * generated code, so steady batches compile no new classes.
   *
   * Delivery: the reference is at-least-once end to end (producer acks=1 →
   * Kafka-engine offset commit per block, duplicates possible). Kafka source
@@ -121,7 +127,7 @@ object StreamingPipeline {
       checkpointPath: String,
       trigger: Trigger = Trigger.AvailableNow()): Pipeline =
     new Pipeline(spark, topic,
-      () => spark.readStream.text(inputDir).withColumnRenamed("value", "value"),
+      () => spark.readStream.text(inputDir),
       targetPath, checkpointPath, trigger)
 
   /** Optional exactly-once-by-key upgrade over the reference's at-least-once

@@ -1,11 +1,20 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.ingest.{EventSink, IngestTransform}
+import graft.schema.EventSchemas
+import graft.streaming.StreamingPipeline
+import graft.streaming.StreamingPipeline.{Sales, Warehouse}
 
 /** The MV-transform semantics from FIXTURES.md §1c: corrupt-JSON skip
-  * (S4), null-price drop (P3), lenient timestamp parse (F1),
-  * processing-time stamping (F12), decimal casts (F2). */
+  * (S4), null-price drop (P3), lenient timestamp parse (F1), decimal
+  * casts (F2); one JSON parse per event, checked against the plain
+  * `from_json` formulation. Processing-time stamping (F12) happens on
+  * insert and is checked in [[EventSinkSpec]]. */
 class IngestTransformSpec extends SparkSpec {
   import spark.implicits._
 
@@ -54,13 +63,6 @@ class IngestTransformSpec extends SparkSpec {
     assert(dt === org.apache.spark.sql.types.DecimalType(9, 2))
   }
 
-  test("processing_time is stamped (F12) and non-ASCII strings survive") {
-    val row = IngestTransform.salesFromJson(salesDf)
-      .filter($"event_id" === "e1").collect().head
-    assert(row.getAs[java.sql.Timestamp]("processing_time") != null)
-    assert(row.getAs[String]("product_name") === "система письмо")
-  }
-
   test("warehouse transform parses its 11-column shape (P2)") {
     val m = """{"event_id":"m1","event_type":"stock_movement","event_time":"2026-08-12 10:00:01","product_id":17,"product_name":"n","category":"c","warehouse":"Москва","quantity":42,"movement_type":"supply","source":"ООО Ромашка","responsible":"Иванов Иван"}"""
     val out = IngestTransform.warehouseFromJson(Seq(m, corrupt).toDF("value"))
@@ -80,5 +82,144 @@ class IngestTransformSpec extends SparkSpec {
     val back = spark.read.parquet(dir)
     assert(back.count() === 2)
     assert(back.filter($"event_time".isNull).count() === 1)
+  }
+
+  test("each event is parsed once: one JsonToStructs in the executed plan") {
+    val dir = tmpDir("parse-once")
+    Files.write(Paths.get(dir, "lines.json"), String.join("\n", goodSale, corrupt).getBytes("UTF-8"))
+    val text = spark.read.text(dir)
+    for ((name, df) <- Seq("sales" -> IngestTransform.salesFromJson(text),
+        "warehouse" -> IngestTransform.warehouseFromJson(text))) {
+      df.write.format("noop").mode("overwrite").save()
+      val plan = df.queryExecution.executedPlan
+      val parses = plan.collect { case node => node.expressions.map(_.collect {
+        case j: JsonToStructs => j }.size).sum }.sum
+      assert(parses === 1, s"$name: from_json must run once per line:\n$plan")
+    }
+  }
+
+  // The ingest formulation before the single-parse transform, kept
+  // verbatim as the reference: from_json, filter e / e.event_id not null,
+  // e.*, the typed SELECT, the price filter.
+  private object Reference {
+    private val money = EventSchemas.money
+    private def ts(c: Column) = IngestTransform.bestEffortTimestamp(c)
+
+    def salesFromJson(raw: DataFrame): DataFrame = {
+      val parsed = raw
+        .select(from_json(col("value"), EventSchemas.salesRaw).as("e"))
+        .filter(col("e").isNotNull && col("e.event_id").isNotNull)
+      typedSales(parsed.select(col("e.*")))
+    }
+
+    def warehouseFromJson(raw: DataFrame): DataFrame = {
+      val parsed = raw
+        .select(from_json(col("value"), EventSchemas.warehouseRaw).as("e"))
+        .filter(col("e").isNotNull && col("e.event_id").isNotNull)
+      typedWarehouse(parsed.select(col("e.*")))
+    }
+
+    def typedSales(raw: DataFrame): DataFrame = raw
+      .select(
+        col("event_id"), col("event_type"),
+        ts(col("event_time")).as("event_time"),
+        col("product_id"), col("product_name"), col("category"),
+        col("quantity"),
+        col("price").cast(money).as("price"),
+        col("discount").cast(money).as("discount"),
+        col("total").cast(money).as("total"),
+        col("store_id"), col("cashier_id"), col("customer_id"))
+      .filter(col("price").isNotNull)
+      .withColumn("processing_time", current_timestamp())
+
+    def typedWarehouse(raw: DataFrame): DataFrame = raw
+      .select(
+        col("event_id"), col("event_type"),
+        ts(col("event_time")).as("event_time"),
+        col("product_id"), col("product_name"), col("category"),
+        col("warehouse"), col("quantity"), col("movement_type"),
+        col("source"), col("responsible"))
+      .withColumn("processing_time", current_timestamp())
+
+    def of(topic: StreamingPipeline.Topic): DataFrame => DataFrame = topic match {
+      case Sales     => salesFromJson
+      case Warehouse => warehouseFromJson
+    }
+  }
+
+  private def transformOf(topic: StreamingPipeline.Topic): DataFrame => DataFrame = topic match {
+    case Sales     => IngestTransform.salesFromJson
+    case Warehouse => IngestTransform.warehouseFromJson
+  }
+
+  private def q(s: String) = "\"" + s + "\""
+  private def saleFields(id: String): Seq[(String, String)] = Seq(
+    "event_id" -> q(id), "event_type" -> q("sale"), "event_time" -> q("2026-08-12 10:00:00"),
+    "product_id" -> "17", "product_name" -> q("p"), "category" -> q("c"), "quantity" -> "3",
+    "price" -> "4.5", "discount" -> "0.15", "total" -> "3.82", "store_id" -> "7",
+    "cashier_id" -> "12", "customer_id" -> q("c1"))
+  private def moveFields(id: String): Seq[(String, String)] = Seq(
+    "event_id" -> q(id), "event_type" -> q("stock_movement"),
+    "event_time" -> q("2026-08-12 10:00:01"), "product_id" -> "17", "product_name" -> q("n"),
+    "category" -> q("c"), "warehouse" -> q("w"), "quantity" -> "42",
+    "movement_type" -> q("supply"), "source" -> q("s"), "responsible" -> q("r"))
+
+  /** One JSON object: `fields` with each of `set` replacing the field of
+    * its name (or added) and `drop` left out. */
+  private def wire(fields: Seq[(String, String)], set: Seq[(String, String)] = Nil,
+      drop: String = ""): String = {
+    val replaced = set.map(_._1).toSet + drop
+    (fields.filterNot(f => replaced(f._1)) ++ set)
+      .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+  }
+
+  /** Every edge the parse can meet, in both wire shapes; each topic reads
+    * all of them, the other topic's lines included. */
+  private val edgeLines: Seq[String] = Seq(
+    """{"event_id": "x", broken""",
+    "",
+    "null",
+    "[" + wire(saleFields("arr")) + "]") ++
+    Seq(saleFields _, moveFields _).zipWithIndex.flatMap { case (fields, k) => Seq(
+      wire(fields(s"ok$k")),
+      wire(fields(s"noid$k"), drop = "event_id"),
+      wire(fields(s"nullid$k"), Seq("event_id" -> "null")),
+      wire(fields(s"abcprice$k"), Seq("price" -> q("abc"))),
+      wire(fields(s"abcqty$k"), Seq("quantity" -> q("abc"))),
+      wire(fields(s"nullprice$k"), Seq("price" -> "null")),
+      wire(fields(s"extra$k"), Seq("extra" -> """{"a":[1,2]}""", "more" -> q("x"))),
+      wire(fields(s"cyr$k"), Seq("product_name" -> q("система письмо"),
+        "category" -> q("Электроника"))),
+      wire(fields(s"iso$k"), Seq("event_time" -> q("2026-08-12T10:00:00"))),
+      wire(fields(s"garbage$k"), Seq("event_time" -> q("garbage"))))
+    }
+
+  /** Rows without processing_time, in one order. */
+  private def rowsOf(df: DataFrame): Seq[Row] =
+    df.drop("processing_time").collect().toSeq.sortBy(_.toString)
+
+  test("single-parse transform equals the from_json reference, batch and stream, both topics") {
+    for (topic <- Seq(Sales, Warehouse)) {
+      val batch = edgeLines.toDF("value")
+      val want = rowsOf(Reference.of(topic)(batch))
+      assert(want.nonEmpty, s"${topic.name}: the reference keeps the well-formed lines")
+      assert(rowsOf(transformOf(topic)(batch)) === want, s"${topic.name}: batch")
+
+      val in = tmpDir("diff-in")
+      Files.write(Paths.get(in, "lines.json"), String.join("\n", edgeLines: _*).getBytes("UTF-8"))
+      val refOut = tmpDir("diff-ref")
+      val ref = Reference.of(topic)(spark.readStream.text(in)).writeStream
+        .option("checkpointLocation", tmpDir("diff-ref-ckpt"))
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, _: Long) => EventSink.append(b, refOut) }
+        .start()
+      ref.awaitTermination()
+      val out = tmpDir("diff-out")
+      val p = StreamingPipeline.textDir(spark, topic, in, out, tmpDir("diff-ckpt"))
+      p.attach(); p.processAllAvailable(); p.detach()
+      val streamed = rowsOf(spark.read.parquet(out))
+      assert(streamed === rowsOf(spark.read.parquet(refOut)), s"${topic.name}: stream")
+      assert(streamed.size === want.size)
+    }
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.StreamingPipeline
 import graft.streaming.StreamingPipeline.{Sales, Warehouse}
 
@@ -78,5 +80,24 @@ class StreamingPipelineSpec extends SparkSpec {
     p.attach(); p.processAllAvailable(); p.detach()
     val row = spark.read.parquet(out).collect().head
     assert(row.getAs[String]("movement_type") === "supply")
+  }
+
+  test("steady micro-batches compile no code: the compilation count stops after the second batch") {
+    val in = tmpDir("cg-in"); val stage = tmpDir("cg-stage")
+    val out = tmpDir("cg-out"); val ckpt = tmpDir("cg-ckpt")
+    val p = StreamingPipeline.textDir(spark, Sales, in, out, ckpt, Trigger.ProcessingTime(0L))
+    // one file per micro-batch, moved in whole so no batch reads half of it
+    def batch(i: Int): Long = {
+      writeLines(stage, s"b$i.json", (1 to 20).map(j => sale(s"s$i-$j", s"2026-08-12 1$i:00:00", "10.00")))
+      Files.move(Paths.get(stage, s"b$i.json"), Paths.get(in, s"b$i.json"),
+        StandardCopyOption.ATOMIC_MOVE)
+      p.processAllAvailable()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    }
+    p.attach()
+    val compilations = try (1 to 5).map(batch) finally p.detach()
+    assert(spark.read.parquet(out).count() === 100)
+    assert(compilations.drop(1).distinct.size === 1,
+      s"compilation count after each batch: ${compilations.mkString(", ")}")
   }
 }
