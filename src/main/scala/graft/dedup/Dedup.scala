@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{GramPosHashesExpr, KmvSketchAgg, MinHashAgg, MinHashBandsRowExpr,
@@ -614,7 +615,7 @@ object Dedup extends QueryPack {
         // `next` is materialized — drop them now rather than waiting for
         // GC-driven cleanup (long sessions would otherwise accumulate a
         // round's worth of blocks per iteration)
-        labels.unpersist()
+        GraftPlanBridge.releaseCheckpoint(labels)
         labels = next
       }
       val singletons = nodes
@@ -693,10 +694,9 @@ object Dedup extends QueryPack {
       val nextCount = next.count() // materializes the lazy checkpoint
       // both sets are distinct: equal iff same size and no new edge
       converged = nextCount == edgeCount && next.exceptAll(edges).isEmpty
-      val prev = edges
+      GraftPlanBridge.releaseCheckpoint(edges)
       edges = next
       edgeCount = nextCount
-      prev.unpersist()
     }
     val members = edges
       .select(col("v").as("doc_id"), col("u").as("cluster_id"))
@@ -734,7 +734,7 @@ object Dedup extends QueryPack {
     * many-way exact copies), then MinHash/LSH near-dup on the exact
     * survivors only, components closed, and one survivor (smallest
     * doc_id) kept per cluster. Returns the surviving (doc_id, text)
-    * rows. This is the composition ScaleSmoke measures: the sketch
+    * rows. This is the composition `tools.Scale smoke` measures: the sketch
     * passes scale with the corpus, the near-dup verify scales with the
     * survivor set. */
   def dedupCorpus(docs: DataFrame, threshold: Double = 0.8): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -729,8 +730,7 @@ object Extended extends QueryPack {
     // partitions.
     val spark = names.sparkSession
     val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val (variants, _) = org.apache.spark.sql.execution.graft.GraftPlanBridge
-      .checkpointHashPartitioned(
+    val (variants, _) = GraftPlanBridge.checkpointHashPartitioned(
         fuzzyVariantsOf(names)
           .repartition(nParts, col("vh")).sortWithinPartitions("vh"),
         Seq("vh"), sortedByKeys = true)
@@ -1073,6 +1073,10 @@ object Extended extends QueryPack {
       .localCheckpoint()
     var r = 0
     var frontier = true
+    // the frames the previous round's lazy `next` reads: released once
+    // this round's count has materialized `next` (releasing them any
+    // earlier would delete blocks `next` still has to read)
+    var superseded = Seq.empty[DataFrame]
     while (r < rounds && frontier) {
       r += 1
       // LAZY (r18): the count right below is the first action and
@@ -1083,6 +1087,8 @@ object Extended extends QueryPack {
       // materialization job per round bought nothing
       val dead = deg.filter(col("dg") < lit(k)).select("n").localCheckpoint(false)
       val nDead = dead.count()
+      superseded.foreach(GraftPlanBridge.releaseCheckpoint)
+      superseded = Seq(deg, dead)
       frontier = nDead > 0
       def hinted(df: DataFrame): DataFrame =
         if (nDead <= bcastCap) broadcast(df) else df
@@ -1103,8 +1109,6 @@ object Extended extends QueryPack {
           // caller's terminal action on the last round) materializes
           // it — same strictly-later-action argument as `dead` above
           .localCheckpoint(false)
-        deg.unpersist()
-        dead.unpersist()
         deg = next
       }
     }
@@ -1182,8 +1186,7 @@ object Extended extends QueryPack {
     // rounds read cheap deserialized blocks.
     val spark = half.sparkSession
     val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val (edges, edgesRdd) = org.apache.spark.sql.execution.graft
-      .GraftPlanBridge.checkpointHashPartitioned(
+    val (edges, edgesRdd) = GraftPlanBridge.checkpointHashPartitioned(
         half.select(col("pa").as("a"), col("pb").as("b"))
           .union(half.select(col("pb").as("a"), col("pa").as("b")))
           .repartition(nParts, col("a"))
@@ -1212,7 +1215,7 @@ object Extended extends QueryPack {
     if (!bcast) edgesJoin.count()
     for (_ <- 1 to rounds) {
       val next = lpaRound(edgesJoin, labels, bcast).localCheckpoint()
-      labels.unpersist()
+      GraftPlanBridge.releaseCheckpoint(labels)
       labels = next
     }
     // community sizes run on the final O(nodes) label frame; the

@@ -1,9 +1,7 @@
 package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.functions.{DetMix, VectorFunctions}
 import graft.operators.Materialize
 
@@ -21,13 +19,18 @@ import graft.operators.Materialize
   * into `k1 ≈ √nlist` SUPER-cells, each holding `k2 = ⌈nlist/k1⌉`
   * sub-cells. Then:
   *
-  *  - the only DRIVER-HELD / BROADCAST model is the k1 super
-  *    centroids — O(√nlist) = sublinear in the corpus forever;
-  *  - the k1·k2 ≈ nlist sub-centroids live as a DISTRIBUTED frame
-  *    keyed by super-cell, joined (hash-partitioned equi-join on
-  *    `sup`) never collected;
+  *  - the only model compiled into per-row assignment is the k1
+  *    super centroids — O(√nlist) = sublinear in the corpus forever;
+  *  - the k1·k2 ≈ nlist sub-centroids are a frame keyed by
+  *    super-cell, met through an equi-join on `sup`
+  *    ([[assignCells]], [[queryCells]]);
   *  - per-vector assignment scores k1 supers + s1·k2 subs =
   *    O(√nlist), not O(nlist).
+  *
+  * Training is NOT sublinear in driver memory: the sub level trains
+  * through the grouped [[Lloyd]] trainer (one group per super-cell),
+  * which hands the ≈ nlist sub-cells to the driver between rounds —
+  * the same model size the flat quantizer collects every round.
   *
   * Training follows FAISS's train-on-sample discipline: both levels
   * train on bounded DETERMINISTIC samples (the repo's one sampling
@@ -49,8 +52,8 @@ import graft.operators.Materialize
 object HierQuantizer {
 
   /** `supers`: (sup, sv) — the broadcastable O(√nlist) top level.
-    * `subs`: (sup, scid, cv) — distributed, ≈nlist rows, never
-    * collected. Cell id = `sup * k2 + scid`. */
+    * `subs`: (sup, scid, cv) — ≈nlist rows, joined on `sup`. Cell id =
+    * `sup * k2 + scid`. */
   final case class Model(supers: DataFrame, subs: DataFrame, k1: Int, k2: Int) {
     def cellId(sup: org.apache.spark.sql.Column,
         scid: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -94,88 +97,34 @@ object HierQuantizer {
   /** Train the two-level model. `all` must carry (vec_id, v); `n` is
     * its count (callers already have it — no second scan). */
   def train(spark: SparkSession, all: DataFrame, n: Long, nlist: Int,
-      iters: Int = 2): Model = trainImpl(spark, all, n, nlist, iters, forceDistributedSub = false)
-
-  /** Test seam: sub level forced through the distributed rounds —
-    * LocalTrainSpec pins local == distributed. */
-  private[graft] def trainDistributedForTest(spark: SparkSession, all: DataFrame,
-      n: Long, nlist: Int, iters: Int = 2): Model =
-    trainImpl(spark, all, n, nlist, iters, forceDistributedSub = true)
-
-  private def trainImpl(spark: SparkSession, all: DataFrame, n: Long, nlist: Int,
-      iters: Int, forceDistributedSub: Boolean): Model = {
+      iters: Int = 2): Model = {
     val k1 = math.max(1, ceilIsqrt(nlist))
     val k2 = math.max(1, (nlist + k1 - 1) / k1)
     val base = all.select(col("vec_id"), col("v"))
 
     // ---- level 1: k1 super-centroids on an O(64·k1) sample ----
-    // trainCentroids' driver collect is exactly right HERE: the model
-    // it holds is O(√nlist), the bounded-by-construction level.
     val supSample = sampled(base, n, SupPerCell * k1)
     val supers = Similarity.trainCentroids(spark, supSample, k1, iters)
       .select(col("cid").as("sup"), col("cv").as("sv"))
 
-    // ---- level 2: k2 sub-centroids per super-cell, DISTRIBUTED ----
+    // ---- level 2: k2 sub-centroids per super-cell ----
     val subSample = sampled(base, n, math.min(SubTrainCap, SubPerCell * nlist))
     // single-super assignment of the training sample: per-row argmax
     // against the plan-time super model ([[graft.functions
     // .NearestCellsExpr]], r17) — the supers are O(√nlist)
-    // driver-local by construction, so the old broadcast-join ×k1 +
-    // sample-wide hash-agg Exchange is a pure function of (v, supers);
-    // ordering ties identical to the min-struct it replaces
-    val supAssignedPlan = subSample.select(
+    // driver-local by construction, so this is a pure function of
+    // (v, supers) with the min-struct's tie order
+    val supAssigned = subSample.select(
       Similarity.nearestCellsCol(col("v"), supCentroids(supers), 1)
-        .getItem(0).as("sup"),
-      col("vec_id"), col("v"))
-    // bounded samples (every driver SF; SubTrainCap bounds the rest up
-    // to LocalTrain.RowCap) collect once and run the sub-level Lloyd
-    // rounds driver-locally with bit-identical arithmetic
-    // ([[LocalTrain.lloydHier]], r18) — no per-round Materialize jobs,
-    // no per-round distributed pass over the sample; past the cap the
-    // distributed loop below keeps its exact previous plan
-    (if (forceDistributedSub) None else LocalTrain.collectHier(supAssignedPlan)) match {
-      case Some(rows) =>
-        val s0 = spark
-        import s0.implicits._
-        val trainedLocal =
-          LocalTrain.lloydHier(rows, k2, iters).toDF("sup", "scid", "cv")
-        return Model(supers, patchDeadSupers(supers, trainedLocal), k1, k2)
-      case None => ()
-    }
-    val supAssigned = Materialize(supAssignedPlan)
-    // id-seeded per super-cell: first k2 sample vectors by vec_id. The
-    // window runs over the bounded sample keyed by sup — fine at scale.
-    val wSeed = Window.partitionBy(col("sup")).orderBy(col("vec_id"))
-    val seed = supAssigned
-      .withColumn("rn", row_number().over(wSeed))
-      .filter(col("rn") <= k2)
-      .select(col("sup"), (col("rn") - 1).cast("long").as("scid"),
-        col("v").as("cv"))
-    // Lloyd rounds with the model ON THE CLUSTER: per round one
-    // hash-join on sup (each sample vector meets its cell's k2 subs),
-    // min-struct argmax, decimal-exact per-dimension means. No collect
-    // anywhere — the materialize between rounds truncates lineage the
-    // way trainCentroids' collect did, without the driver round-trip.
-    val trained = (1 to iters).foldLeft(Materialize(seed)) { (subs, _) =>
-      val assigned = supAssigned.join(subs, "sup")
-        .withColumn("c_sim", VectorFunctions.cosineSim(col("v"), col("cv")))
-        .groupBy(col("vec_id"))
-        .agg(min(struct((-col("c_sim")).as("ns"), col("sup"), col("scid"),
-          col("v"))).as("w"))
-        .select(col("w.sup").as("sup"), col("w.scid").as("scid"),
-          col("w.v").as("v"))
-      val updated = assigned
-        .select(col("sup"), col("scid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("sup", "scid", "pos")
-        .agg(sum(col("x").cast(DecimalType(28, 12)))
-               .cast(DecimalType(38, 12)).as("sx"),
-             count(lit(1)).as("cnt"))
-        .groupBy("sup", "scid")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, " +
-          "CAST(sx AS DOUBLE) / cnt))), p -> p.col2)").as("cv"))
-      Materialize(updated.select("sup", "scid", "cv"))
-    }
-    Model(supers, Materialize(patchDeadSupers(supers, trained)), k1, k2)
+        .getItem(0).as("g"),
+      col("vec_id").as("id"), col("v"))
+    // one Lloyd group per super-cell, seeded with its first k2 sample
+    // vectors by vec_id (scid = rank)
+    val s = spark
+    import s.implicits._
+    val trained = Lloyd.train(supAssigned, k2, iters, Lloyd.SubCells)
+      .toDF("sup", "scid", "cv")
+    Model(supers, patchDeadSupers(supers, trained), k1, k2)
   }
 
   /** ADVICE r10: a super-cell that attracted no training-sample

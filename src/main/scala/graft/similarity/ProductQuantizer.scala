@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.functions.{PqAllCodesExpr, PqNearestCodeExpr, VectorFunctions}
+import graft.functions.{PqAllCodesExpr, VectorFunctions}
 
 /** Product quantization (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search"): split each (unit-normalized) vector into
@@ -18,11 +18,10 @@ import graft.functions.{PqAllCodesExpr, PqNearestCodeExpr, VectorFunctions}
   * On unit vectors, squared L2 is `2 − 2·cosine`, so ADC ranking
   * approximates the cosine ranking the exact operators use.
   *
-  * All Lloyd training runs as ONE distributed pass per iteration over
-  * every subspace at once (subspace id `m` is just a column); centroid
-  * state is `M × K × subDim` doubles, collected per iteration exactly
-  * like [[Similarity.trainCentroids]]. Means are decimal-exact for
-  * run-to-run determinism. */
+  * The codebook trains through the one grouped Lloyd trainer
+  * ([[Lloyd]]), one group per subspace `m`: every subspace at once,
+  * driver-locally whenever the sub-vector rows fit [[Lloyd.RowCap]].
+  * Means are decimal-exact for run-to-run determinism. */
 object ProductQuantizer {
 
   /** (vec_id, u): each vector unit-normalized. The norm is floored at a
@@ -68,86 +67,23 @@ object ProductQuantizer {
     (ids, book)
   }
 
-  /** Nearest codeword per (vector, subspace) row; ties broken by cid.
-    * Per-row expression against the plan-time codebook
-    * ([[graft.functions.PqNearestCodeExpr]], r17): the winner is a pure
-    * function of (m, sv, codebook), so the old broadcast-join × K
-    * blow-up and the (vec_id, m) hash-agg Exchange are gone — the
-    * min-struct (d, cid) ordering is replicated bit-for-bit. */
-  private def assign(sub: DataFrame, cents: DataFrame): DataFrame = {
-    val (ids, book) = codebookArrays(cents)
-    sub.withColumn("cid", PqNearestCodeExpr.column(col("m"), col("sv"), ids, book))
-      .select(col("vec_id"), col("m"), col("cid"), col("sv"))
-  }
-
   /** Train the `M × K` codebook with Lloyd iterations. Returns
     * (m, cid, cv). Deterministic (decimal-exact means, id-seeded). */
   def train(spark: SparkSession, vecs: DataFrame,
-      m: Int, subDim: Int, k: Int, iters: Int): DataFrame = {
-    val sub = subVectors(vecs, m, subDim).cache()
-    // training is eager (each Lloyd pass collects its centroids), so the
-    // cache has done its work by the time trainFrom returns — release it
-    // rather than leak a cached relation until the caller's clearCache
-    try trainFrom(spark, sub, k, iters) finally sub.unpersist()
-  }
+      m: Int, subDim: Int, k: Int, iters: Int): DataFrame =
+    trainFrom(spark, subVectors(vecs, m, subDim), k, iters)
 
-  /** Same, over an already-built (and ideally cached) sub-vector frame —
-    * lets [[adcTopK]] share one explode across train/encode/LUT.
-    *
-    * Bounded inputs (every driver SF; the FAISS train-on-sample
-    * discipline bounds the rest) collect once and iterate driver-
-    * locally with bit-identical arithmetic ([[LocalTrain]], r18 —
-    * same rationale as [[Similarity.trainCentroids]]); past
-    * [[LocalTrain.RowCap]] the distributed form keeps its exact
-    * previous plan. */
+  /** Same, over an already-built sub-vector frame — lets [[adcTopK]]
+    * share one explode across train/encode/LUT. Seeds are the first `k`
+    * vectors by vec_id in every subspace (cid = rank, which also holds
+    * for non-zero-based or sparse id spaces). */
   private def trainFrom(spark: SparkSession, sub: DataFrame,
-      k: Int, iters: Int): DataFrame = {
-    val s0 = spark
-    LocalTrain.collectPq(sub) match {
-      case Some(sample) =>
-        import s0.implicits._
-        LocalTrain.lloydPq(sample, k, iters).toDF("m", "cid", "cv")
-      case None => trainFromDistributed(spark, sub, k, iters)
-    }
-  }
-
-  /** Test seam: the public [[train]] geometry forced through the
-    * distributed Lloyd — LocalTrainSpec pins local == distributed. */
-  private[graft] def trainDistributedForTest(spark: SparkSession, vecs: DataFrame,
-      m: Int, subDim: Int, k: Int, iters: Int): DataFrame = {
-    val sub = subVectors(vecs, m, subDim).cache()
-    try trainFromDistributed(spark, sub, k, iters) finally sub.unpersist()
-  }
-
-  private[similarity] def trainFromDistributed(spark: SparkSession, sub: DataFrame,
       k: Int, iters: Int): DataFrame = {
     val s = spark
     import s.implicits._
-    // seed from the first k vectors IN RANK ORDER (not `vec_id < k`,
-    // which breaks for non-zero-based or sparse id spaces)
-    val seedIds = sub.select(col("vec_id")).distinct()
-      .orderBy("vec_id").limit(k)
-      .withColumn("cid",
-        (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
-    // collect the M×K seed immediately: every iteration then starts from
-    // a local centroid frame, so the first Lloyd pass doesn't re-plan the
-    // distinct + rank + join seed pipeline inside its own collect
-    val seed = sub.join(seedIds, "vec_id")
-      .select(col("m"), col("cid"), col("sv").as("cv"))
-      .as[(Int, Int, Seq[Double])].collect().toSeq.toDF("m", "cid", "cv")
-    (1 to iters).foldLeft(seed) { (cents, _) =>
-      val updated = assign(sub, cents)
-        .select(col("m"), col("cid"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("m", "cid", "pos")
-        .agg(sum(col("x").cast(DecimalType(28, 12)))
-               .cast(DecimalType(38, 12)).as("sx"),
-             count(lit(1)).as("n"))
-        .groupBy("m", "cid")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, " +
-          "CAST(sx AS DOUBLE) / n))), p -> p.col2)").as("cv"))
-      updated.select(col("m"), col("cid"), col("cv"))
-        .as[(Int, Int, Seq[Double])].collect().toSeq.toDF("m", "cid", "cv")
-    }
+    Lloyd.train(sub.select(col("m").as("g"), col("vec_id").as("id"), col("sv").as("v")),
+      k, iters, Lloyd.Pq)
+      .map { case (m, cid, cv) => (m.toInt, cid.toInt, cv) }.toDF("m", "cid", "cv")
   }
 
   /** Encode every vector of a `(vec_id, u)` frame as its M codes:
@@ -169,7 +105,7 @@ object ProductQuantizer {
       m: Int, subDim: Int, k: Int, iters: Int,
       isQuery: org.apache.spark.sql.Column, topK: Int): DataFrame = {
     // one normalize, materialized ONCE via localCheckpoint: training
-    // (every Lloyd pass is an eager collect), encode, and the LUT all
+    // (an eager collect of the sub-vector rows), encode, and the LUT all
     // read the materialized unit-vector blocks instead of re-running
     // the normalize pipeline (r17: the checkpoint moved from the
     // exploded sub-vector frame to the 1-row-per-vector unit frame —
@@ -290,9 +226,9 @@ object ProductQuantizer {
       candidates: DataFrame, // (query_id, neighbor_id)
       m: Int, subDim: Int, k: Int, iters: Int,
       isQuery: org.apache.spark.sql.Column, topK: Int): DataFrame = {
-    // LAZY checkpoint: the training seed collect right below is the
-    // first action through `uf`, so one job materializes the normalize
-    // AND reads the seed off it; every later stage reads the blocks
+    // LAZY checkpoint: the training collect right below is the first
+    // action through `uf`, so one job materializes the normalize AND
+    // reads the training rows off it; every later stage reads the blocks
     val uf = unitVectors(vecs).localCheckpoint(false)
     val cents = trainFrom(spark, subOfU(uf, m, subDim), k, iters)
     val codes = encodeU(uf.join(vecs.filter(!isQuery).select("vec_id"), "vec_id"),

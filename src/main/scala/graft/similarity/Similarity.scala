@@ -780,74 +780,21 @@ object Similarity extends QueryPack {
       .orderBy("query_id", "rank")
   }
 
-  /** Lloyd-iteration k-means training for the IVF coarse quantizer.
-    * Each iteration is one distributed pass: broadcast the centroids,
-    * assign every vector to its nearest (cosine), recompute each
-    * centroid as the element-wise mean of its members (posexplode →
-    * per-dimension sum/count → reassembled in dimension order). The
-    * centroid set itself is tiny model state (`nlist × dim` doubles), so
-    * it is collected and re-broadcast per iteration — the same
-    * driver-holds-the-model structure MLlib's KMeans uses, which keeps
-    * every iteration's plan flat instead of nesting joins. Deterministic:
-    * seeded from the first `nlist` vectors by id, ties broken by cid, and
-    * the per-dimension means are summed in exact decimal (the repo's
-    * never-sum-doubles policy) so the centroids are identical for any
-    * partitioning or core count. A cluster that loses every member drops
-    * out of the model (standard Lloyd behavior — nlist is an upper
-    * bound). */
-  /** Entry point: the training frame is collected ONCE when it fits
-    * [[LocalTrain.RowCap]] (every registered path since the train-on-
-    * sample caps — at the driver's SFs the whole corpus fits) and the
-    * Lloyd iterations run driver-locally with bit-identical arithmetic
-    * ([[LocalTrain]], r18: the model was already driver-held between
-    * iterations; this removes the per-iteration distributed pass, at
-    * 100 TB the per-iteration re-derivation of the capped sample from
-    * the corpus). Past the cap the probe early-terminates and the
-    * distributed form below keeps its exact previous plan. */
+  /** Lloyd k-means training for the IVF coarse quantizer: `nlist`
+    * cells seeded from the first `nlist` vectors by id, assignment by
+    * cosine (ties to the smaller cid), decimal-exact means so the
+    * centroids are identical for any partitioning or core count. A
+    * cluster that loses every member drops out of the model (nlist is
+    * an upper bound). The one grouped trainer ([[Lloyd]], one group)
+    * runs it, driver-locally whenever the training frame fits
+    * [[Lloyd.RowCap]]. Returns (cid, cv), cid = the seed's vec_id. */
   def trainCentroids(spark: SparkSession, all: DataFrame,
-      nlist: Int, iters: Int): DataFrame = {
-    val s0 = spark
-    LocalTrain.collectFlat(all) match {
-      case Some(sample) =>
-        import s0.implicits._
-        LocalTrain.lloydFlat(sample, nlist, iters).toDF("cid", "cv")
-      case None => trainCentroidsDistributed(spark, all, nlist, iters)
-    }
-  }
-
-  private[graft] def trainCentroidsDistributed(spark: SparkSession, all: DataFrame,
       nlist: Int, iters: Int): DataFrame = {
     val s = spark
     import s.implicits._
-    // collect the seed immediately (same as ProductQuantizer): the first
-    // Lloyd pass then starts from a local centroid frame instead of
-    // re-planning the TakeOrdered seed inside its own collect
-    val seed = all.orderBy("vec_id").limit(nlist)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-      .as[(Long, Seq[Double])].collect().toSeq.toDF("cid", "cv")
-    (1 to iters).foldLeft(seed) { (cents, _) =>
-      // argmax similarity per ROW against the plan-time model
-      // ([[graft.functions.NearestCellsExpr]], r17): the winner is a
-      // pure function of (v, centroids), so no corpus × nlist join
-      // blow-up and no corpus-wide hash-agg Exchange per Lloyd round —
-      // the expression replicates the old min(struct(-sim, cid, v))
-      // ordering (sim DESC with ±0.0 equated, ties to the smaller cid)
-      // bit-for-bit, and vec_id is unique, so the (cid, v) multiset is
-      // identical to the aggregate's
-      val assigned = all.select(
-        nearestCellsCol(col("v"), cents, 1).getItem(0).as("cid"), col("v"))
-      val updated = assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos")
-        .agg(sum(col("x").cast(org.apache.spark.sql.types.DecimalType(28, 12)))
-               .cast(org.apache.spark.sql.types.DecimalType(38, 12)).as("sx"),
-             count(lit(1)).as("n"))
-        .groupBy("cid")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, " +
-          "CAST(sx AS DOUBLE) / n))), p -> p.col2)").as("cv"))
-      updated.select(col("cid"), col("cv")).as[(Long, Seq[Double])]
-        .collect().toSeq.toDF("cid", "cv")
-    }
+    Lloyd.train(all.select(lit(0L).as("g"), col("vec_id").as("id"), col("v")),
+      nlist, iters, Lloyd.Flat)
+      .map { case (_, cid, cv) => (cid, cv) }.toDF("cid", "cv")
   }
 
   /** Absolute cap on the flat coarse quantizer's k-means TRAINING
@@ -877,12 +824,6 @@ object Similarity extends QueryPack {
       all.filter(graft.functions.DetMix.lehmerMix(col("vec_id")) % lit(n / cap) === 0),
       nlist, iters)
 
-  /** IVF-style ANN: a k-means coarse quantizer ([[trainCentroids]], 2
-    * Lloyd iterations) partitions vectors into `nlist` inverted lists; a
-    * query scans only its `nprobe` nearest lists. Same scale shape as
-    * [[annLsh]] — the probe is an equi-join on the list id — but with
-    * data-adaptive cells instead of fixed hyperplanes. Approximate ⇒
-    * rows-only. */
   /** Nearest coarse-quantizer lists for every row of `df`: the single
     * assignment (n = 1) or the n-probe expansion, both as a PER-ROW
     * expression against the plan-time centroid model
@@ -918,6 +859,12 @@ object Similarity extends QueryPack {
     NearestCellsExpr.column(vcol, cids, cvs, k)
   }
 
+  /** IVF-style ANN: a k-means coarse quantizer ([[trainCentroids]], 2
+    * Lloyd iterations) partitions vectors into `nlist` inverted lists; a
+    * query scans only its `nprobe` nearest lists. Same scale shape as
+    * [[annLsh]] — the probe is an equi-join on the list id — but with
+    * data-adaptive cells instead of fixed hyperplanes. Approximate ⇒
+    * rows-only. */
   def annIvf(spark: SparkSession, d: String): DataFrame = {
     val NList = 16
     val NProbe = 4

@@ -27,21 +27,23 @@ private[tools] object Amplify {
     require(maxId < IdShift,
       s"amplification shift $IdShift must exceed max $what $maxId")
 
-  /** Disjoint id-shifted document copies through one scan — the
+  /** Disjoint id-shifted copies of `base` through one scan — the
     * ScaleR11+ octave shape, shift asserted past the base id range. */
-  def amplifiedDocs(spark: SparkSession, d: String,
-      mult: Int): DataFrame = {
-    val maxId = graft.Tables.documents(spark, d)
-      .agg(max(col("doc_id"))).collect()(0).getLong(0)
-    assertClears(maxId, "doc_id")
+  def amplified(base: DataFrame, idCol: String, mult: Int): DataFrame = {
+    val spark = base.sparkSession
+    assertClears(base.agg(max(col(idCol))).collect()(0).getLong(0), idCol)
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    graft.Tables.documents(spark, d)
-      .select(col("doc_id"), col("source"), col("text"))
-      .crossJoin(spark.range(mult).select(col("id").as("copy")))
-      .select((col("doc_id") + col("copy") * lit(IdShift)).as("doc_id"),
-        col("source"), col("text"))
+    base.crossJoin(spark.range(mult).select(col("id").as("copy")))
+      .withColumn(idCol, col(idCol) + col("copy") * lit(IdShift))
+      .drop("copy")
       .repartition(parts)
   }
+
+  /** [[amplified]] documents: (doc_id, source, text). */
+  def amplifiedDocs(spark: SparkSession, d: String,
+      mult: Int): DataFrame =
+    amplified(graft.Tables.documents(spark, d)
+      .select(col("doc_id"), col("source"), col("text")), "doc_id", mult)
 
   /** Narrow variant: id-shifted copies of the documents' LENGTH STATS
     * only. Sweeps that rank/sum over (n_chars, n_tokens) must tokenize

@@ -53,6 +53,14 @@ import graft.tools.Amplify.{bytesPolicy, mults, timed}
   *    reporting sketch time (expected FLAT in the mult: the rewrite's
   *    +3 model-sized jobs are constant while the saved corpus scan
   *    grows).
+  *  - `smoke` — the manual scale smoke: the corpus amplified `mult`×
+  *    (default 20) with shifted ids, then the operators whose scaling
+  *    SCALE.md claims (exact dedup, minhash / span scrub on the
+  *    exact-dedup survivors, simhash, gopher gates, PII scrub,
+  *    nb_classify, DSIR, LSH bucket keys), one timed line each;
+  *    SCALE_SMOKE_FULL=1 adds the raw quadratic minhash and the
+  *    boilerplate-hot ngram plain-vs-prefix head-to-head. Runs at the
+  *    32 shuffle partitions its recorded rows used.
   *  - `bitextivf` additionally A/Bs the CAPPED k-means training
   *    sample (VERDICT r16 #4, `IvfTrainCap` via `nKnown`) against the
   *    uncapped trainer, same planted-recall floor on both arms;
@@ -74,7 +82,7 @@ object Scale {
       "novelty" -> novelty, "noveltyskew" -> noveltySkew,
       "bitext" -> bitext, "bitextivf" -> bitextIvfOnly,
       "bitextmu" -> bitextMutual, "ppskeyed" -> ppsKeyed,
-      "curve" -> curve, "mixcov" -> mixCov)
+      "curve" -> curve, "mixcov" -> mixCov, "smoke" -> smoke)
     val which = args.headOption.getOrElse("novelty")
     require(modes.contains(which),
       s"unknown mode '$which' — expected ${modes.keys.toSeq.sorted.mkString("|")}")
@@ -569,6 +577,89 @@ object Scale {
         f"window_s=$tWin%7.2f mismatches=$mismatches%d")
       require(mismatches == 0, "keyed and window arms must agree row-for-row")
       docs.unpersist()
+    }
+  }
+
+  // --------------------------------------------------------- smoke --
+
+  private def smoke(spark: SparkSession, d: String): Unit = {
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    def time(name: String)(f: => Long): Unit = {
+      val (n, s) = timed(f)
+      println(f"[scale-smoke] $name%-40s $s%8.2f s  ($n rows)")
+    }
+    def survivors(docs: DataFrame): DataFrame = docs.groupBy("text")
+      .agg(min(col("doc_id")).as("doc_id"))
+      .select("doc_id", "text")
+    for (mult <- mults("SCALE_MULTS", Seq(20))) {
+      val docs = Amplify.amplifiedDocs(spark, d, mult).cache()
+      val nDocs = docs.count()
+      println(s"[scale-smoke] mult=$mult docs=$nDocs")
+      // The amplified corpus makes EVERY doc a `mult`-way exact duplicate —
+      // the adversarial hot-shingle case: ~mult²/2 true pairs per text, so
+      // exact near-dup verification is output-bound by construction.
+      // The production composition: exact dedup first (collapses identical
+      // texts in one cheap hash aggregate), near-dup only on survivors.
+      time("dedup_exact (amplified)")(survivors(docs).count())
+      time("minhash on exact-dedup survivors") {
+        graft.dedup.Dedup.minhashLshOf(survivors(docs)).count()
+      }
+      if (sys.env.contains("SCALE_SMOKE_FULL")) {
+        // the raw quadratic case, for the record (output ~ mult² × planted)
+        time("dedup_minhash (no pre-dedup)")(graft.dedup.Dedup.minhashLshOf(docs).count())
+        // Hot-shingle head-to-head on the shape prefix filtering is built
+        // for: DISSIMILAR docs sharing boilerplate (license-header style).
+        // The boilerplate shingles appear in every doc, so the plain
+        // inverted join emits ~|boilerplate| × n²/2 candidate pairs that
+        // all fail verification, while the frequency ordering evicts
+        // exactly those shingles from every prefix. (A corpus of true
+        // duplicates is NOT this case — there the output itself is
+        // quadratic and no candidate filter can help.)
+        val boiler = " copyright notice all rights reserved this document" +
+          " is provided as is without warranty of any kind express or implied"
+        val bdocs = graft.Tables.documents(spark, d).limit(5000)
+          .withColumn("text", concat(col("text"), lit(boiler)))
+        time("ngram plain (boilerplate-hot)")(graft.dedup.Dedup.ngramJaccardOf(bdocs).count())
+        time("ngram prefix-filtered (boilerplate-hot)") {
+          graft.dedup.Dedup.ngramJaccardPrefixOf(bdocs).count()
+        }
+      }
+      time("simhash fingerprints")(graft.dedup.Dedup.simhashFingerprints(docs).count())
+      // scan-bandwidth stages: force the expensive columns through an
+      // aggregate (a bare count would prune them away)
+      time("gopher gates (amplified)") {
+        graft.text.TextAnalysis.gopherGatesOf(docs)
+          .agg(sum(col("dup_tri_frac")), sum(col("top_bigram_frac"))).collect(); nDocs
+      }
+      time("pii scrub (amplified)") {
+        graft.text.TextAnalysis.piiScrubOf(docs)
+          .agg(sum(col("red_len")), sum(col("n_emails"))).collect(); nDocs
+      }
+      // span_scrub on the raw amplification is adversarial by
+      // construction (every 5-gram is a mult-way cross-doc duplicate →
+      // ~all positions covered); the production composition scrubs
+      // AFTER exact dedup, same as minhash.
+      time("span_scrub on exact-dedup survivors") {
+        graft.dedup.Dedup.spanScrubOf(survivors(docs))
+          .agg(sum(col("n_scrubbed"))).collect(); nDocs
+      }
+      time("nb_classify (amplified)") {
+        graft.text.TextAnalysis.nbClassifyOf(docs.withColumn("lang",
+          concat(lit("l"), (col("doc_id") % 5).cast("string")))).count()
+      }
+      time("dsir score+resample (amplified)") {
+        graft.text.TextAnalysis.dsirResampleOf(docs.withColumn("source",
+          concat(lit("src"), (col("doc_id") % 20).cast("string")))).count()
+      }
+      val embeddings = Amplify.amplified(graft.Tables.embeddings(spark, d), "vec_id", mult)
+        .cache()
+      println(s"[scale-smoke] vectors=${embeddings.count()}")
+      time("lsh bucket keys (all vecs)") {
+        embeddings.select(col("vec_id"), graft.functions.LshBucketKeysExpr.column(
+          col("embedding").cast("array<double>"), Array.fill(32, 64)(0.5), 4)).count()
+      }
+      docs.unpersist()
+      embeddings.unpersist()
     }
   }
 }

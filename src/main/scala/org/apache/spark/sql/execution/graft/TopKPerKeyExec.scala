@@ -206,6 +206,18 @@ object GraftPlanBridge {
   def column(e: Expression): org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
+  /** Drop a `localCheckpoint`ed frame's blocks now. `Dataset.unpersist`
+    * only looks in the cache manager, so on a checkpointed frame it is a
+    * no-op and the blocks wait for GC-driven cleanup; they belong to
+    * the RDD behind the frame's `LogicalRDD`. The frame must not be read
+    * again, nor any lazy frame built on it that is still unmaterialized. */
+  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case other => throw new IllegalArgumentException(
+        s"releaseCheckpoint: not a checkpointed frame (${other.nodeName})")
+    }
+
   /** `localCheckpoint()` that KEEPS a hash partitioning visible to the
     * planner (r18). `Dataset.localCheckpoint` under AQE builds its
     * `LogicalRDD` with unknown partitioning, so a loop that re-joins /

@@ -142,6 +142,22 @@ class DedupSpec extends SparkSpec {
     assert(rounds <= 10, s"pointer doubling needed $rounds rounds on a ${n}-chain")
   }
 
+  test("clusterLabels releases each superseded round's checkpoint") {
+    // Dataset.unpersist is a no-op on a localCheckpoint'd frame, so a
+    // loop that "released" its rounds that way kept one persistent RDD
+    // per round until GC ran
+    val n = 256L
+    val chain = (1L until n).map(i => (i, i + 1))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (_, rounds) = Dedup.clusterLabelsWithRounds(
+      (1L to n).toDF("doc_id"), chain.toDF("doc_a", "doc_b"))
+    val added = sc.getPersistentRDDs.keySet -- before
+    // what stays: the pair set, the self-loop frame, the final labels
+    assert(rounds >= 5, s"a ${n}-chain should take several rounds, took $rounds")
+    assert(added.size <= 3, s"$rounds rounds left ${added.size} new persistent RDDs")
+  }
+
   test("clusterLabels: empty pair set leaves every doc its own cluster") {
     val nodes = (1L to 5L).toDF("doc_id")
     val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")

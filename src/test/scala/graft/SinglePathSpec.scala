@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guard for the single paths: engine expressions bind as
   * typed Columns (never a session-global temp function looked up by
-  * name), and every session comes from [[GraftSession.builder]]. */
+  * name), every session comes from [[GraftSession.builder]], and every
+  * k-means trains through the one grouped Lloyd trainer. */
 class SinglePathSpec extends AnyFunSuite {
 
   private def sources: Seq[Path] = {
@@ -29,5 +30,15 @@ class SinglePathSpec extends AnyFunSuite {
   test("every session is built by the one factory") {
     assert(filesWith("SparkSession" + ".builder(") ===
       Seq("src/main/scala/graft/GraftSession.scala"))
+  }
+
+  test("one Lloyd trainer: no per-quantizer loop or seam, one decimal mean") {
+    // split so this file does not match itself
+    for (name <- Seq("lloyd" + "Flat", "lloyd" + "Pq", "lloyd" + "Hier",
+        "Distributed" + "ForTest", "trainCentroids" + "Distributed",
+        "trainFrom" + "Distributed"))
+      assert(filesWith(name).isEmpty, name)
+    assert(filesWith("DecimalType" + "(28, 12)").filter(_.startsWith("src/main/")) ===
+      Seq("src/main/scala/graft/similarity/Lloyd.scala"))
   }
 }
