@@ -1,9 +1,9 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.Fixpoint
 import graft.functions.{GramPosHashesExpr, KmvSketchAgg, MinHashAgg, MinHashBandsRowExpr,
   RollingHashExpr, ShingleHashesExpr, SimHashAgg}
 import graft.queries.QueryPack
@@ -506,45 +506,37 @@ object Dedup extends QueryPack {
     clusterLabelsWithRounds(nodes, pairs)._1
 
   private[graft] def clusterLabelsWithRounds(
-      nodes: DataFrame, pairs: DataFrame): (DataFrame, Int) = {
-    // materialize the pair set ONCE before fanning it into the two union
-    // branches: edges.cache() alone still plans the (possibly expensive —
-    // LSH + verify) pair pipeline into both branches, and the round loop
-    // would pay its final stages twice. The checkpointed pair set is tiny
-    // (the near-dup sliver), the pipeline above it is not.
-    val p = pairs.localCheckpoint()
-    // SELF-LOOPS folded into the static edge frame (r18, guide §2.4):
-    // with (n, n) rows for every edge-bearing node, each round's hop is
-    // `min(cluster_id over neighbors ∪ self)` in ONE edge-join +
-    // aggregate — algebraically identical to the old
-    // `least(self, coalesce(nbrMin, self))` but without the per-round
-    // left-outer join of the label frame against the vote aggregate
-    // (two exchanges of O(nodes) rows per round, and their AQE stage
-    // jobs, gone from every CC consumer: the dedup cluster family,
-    // split_by_cluster, entity_resolution, the semantic_dedup arms).
-    // LAZY: the convergence sum below is the first action and
-    // materializes it through the labels-init lineage; the edge cache
-    // (round 1's action) reads the blocks strictly later
-    val loops = p.select(col("doc_a").as("src"))
-      .union(p.select(col("doc_b").as("src"))).distinct()
-      .localCheckpoint(false)
-    val edges = p
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .union(loops.select(col("src"), col("src").as("dst")))
-      .cache()
-    try {
+      nodes: DataFrame, pairs: DataFrame): (DataFrame, Int) =
+    Fixpoint(pairs.sparkSession, "cc") { fx =>
+      // materialize the pair set ONCE before fanning it into the two union
+      // branches: edges.cache() alone still plans the (possibly expensive —
+      // LSH + verify) pair pipeline into both branches, and the round loop
+      // would pay its final stages twice. The checkpointed pair set is tiny
+      // (the near-dup sliver), the pipeline above it is not.
+      val p = fx.keep(pairs, eager = true)
+      // SELF-LOOPS folded into the static edge frame (r18, guide §2.4):
+      // with (n, n) rows for every edge-bearing node, each round's hop is
+      // `min(cluster_id over neighbors ∪ self)` in ONE edge-join +
+      // aggregate — algebraically identical to the old
+      // `least(self, coalesce(nbrMin, self))` but without the per-round
+      // left-outer join of the label frame against the vote aggregate
+      // (two exchanges of O(nodes) rows per round, and their AQE stage
+      // jobs, gone from every CC consumer: the dedup cluster family,
+      // split_by_cluster, entity_resolution, the semantic_dedup arms).
+      // The convergence sum below materializes it through the
+      // labels-init lineage; the edge cache (round 1's action) reads the
+      // blocks strictly later
+      val loops = fx.keep(p.select(col("doc_a").as("src"))
+        .union(p.select(col("doc_b").as("src"))).distinct())
+      val edges = fx.cache(p
+        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+        .union(loops.select(col("src"), col("src").as("dst"))))
       // propagate only over docs that have at least one edge — at corpus
       // scale the pair graph is a sliver of the node set, and singletons
       // (their own cluster by definition) need no iterations at all
-      // LAZY checkpoints throughout the loop: the convergence-sum
-      // aggregate right after each one is the first action, so one job
-      // both materializes the round's labels and reads the sum off
-      // them — an eager checkpoint would pay a separate job per round
-      // just to materialize
-      var labels = loops.select(col("src").as("doc_id"))
-        .select(col("doc_id"), col("doc_id").as("cluster_id"))
-        .localCheckpoint(false)
+      var labels = fx.checkpoint(loops.select(col("src").as("doc_id"))
+        .select(col("doc_id"), col("doc_id").as("cluster_id")))
       // labels only ever decrease, so the exact decimal sum of all labels
       // is strictly monotone until the fixpoint: one cheap aggregate per
       // round instead of a join-and-count change detection (decimal, not
@@ -558,10 +550,7 @@ object Dedup extends QueryPack {
         if (s == null) java.math.BigDecimal.ZERO else s
       }
       var prevSum = labelSum(labels)
-      var converged = false
-      var rounds = 0
-      while (!converged) {
-        rounds += 1
+      fx.loop() { round =>
         // the self-loop rows make this aggregate the WHOLE hop: every
         // node votes its own label alongside its neighbors', so the
         // old `least(self, coalesce(nbrMin, self))` outer join is this
@@ -605,25 +594,18 @@ object Dedup extends QueryPack {
         // this corpus (measured: every CC round re-paid ~2.5 core-s —
         // semantic_dedup exec 7 → 33 core-s), so the rounds keep their
         // AQE-planned shuffle joins.
-        val next =
-          (if (rounds <= 2) hopPlan else viaPrev(viaPrev(hopPlan)))
-            .localCheckpoint(false)
-        val s = labelSum(next) // first action: materializes `next` too
-        converged = s.compareTo(prevSum) == 0
+        labels = fx.checkpoint(
+          if (round <= 2) hopPlan else viaPrev(viaPrev(hopPlan)))
+        val s = labelSum(labels) // first action: materializes `labels` too
+        val converged = s.compareTo(prevSum) == 0
         prevSum = s
-        // the superseded round's checkpoint blocks are dead the moment
-        // `next` is materialized — drop them now rather than waiting for
-        // GC-driven cleanup (long sessions would otherwise accumulate a
-        // round's worth of blocks per iteration)
-        GraftPlanBridge.releaseCheckpoint(labels)
-        labels = next
+        converged
       }
       val singletons = nodes
         .join(labels.select("doc_id"), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      (labels.union(singletons), rounds)
-    } finally edges.unpersist()
-  }
+      labels.union(singletons)
+    }
 
   /** Connected components by alternating star contraction (Kiveris et
     * al., "Connected Components in MapReduce and Beyond"): the
@@ -649,64 +631,61 @@ object Dedup extends QueryPack {
     clusterLabelsStarWithRounds(nodes, pairs)._1
 
   private[graft] def clusterLabelsStarWithRounds(
-      nodes: DataFrame, pairs: DataFrame): (DataFrame, Int) = {
-    // canonical undirected edge set (u < v), materialized once
-    var edges = pairs
-      .select(least(col("doc_a"), col("doc_b")).as("u"),
-              greatest(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    def largeStar(e: DataFrame): DataFrame = {
-      val dir = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = dir.groupBy("u")
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      // for every neighbor v > u: edge (m, v); m < u < v keeps it canonical
-      dir.join(mins, "u")
-        .filter(col("v") > col("u") && col("v") =!= col("m"))
-        .select(col("m").as("u"), col("v"))
-        .distinct()
+      nodes: DataFrame, pairs: DataFrame): (DataFrame, Int) =
+    Fixpoint(pairs.sparkSession, "star") { fx =>
+      // canonical undirected edge set (u < v), materialized once
+      var edges = fx.checkpoint(pairs
+        .select(least(col("doc_a"), col("doc_b")).as("u"),
+                greatest(col("doc_a"), col("doc_b")).as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct(), eager = true)
+      def largeStar(e: DataFrame): DataFrame = {
+        val dir = e.select(col("u"), col("v"))
+          .union(e.select(col("v").as("u"), col("u").as("v")))
+        val mins = dir.groupBy("u")
+          .agg(least(min(col("v")), first(col("u"))).as("m"))
+        // for every neighbor v > u: edge (m, v); m < u < v keeps it canonical
+        dir.join(mins, "u")
+          .filter(col("v") > col("u") && col("v") =!= col("m"))
+          .select(col("m").as("u"), col("v"))
+          .distinct()
+      }
+      def smallStar(e: DataFrame): DataFrame = {
+        // group by the larger endpoint: its smaller neighbors + itself all
+        // re-point at the smallest neighbor
+        val mins = e.groupBy(col("v")).agg(min(col("u")).as("m"))
+        e.join(mins, "v")
+          .filter(col("u") =!= col("m"))
+          .select(col("m").as("u"), col("u").as("v"))
+          .union(mins.select(col("m").as("u"), col("v")))
+          .distinct()
+      }
+      // one count per FRAME, carried across rounds (r17): the loop used
+      // to re-count the cached previous edge set every round (a whole
+      // job just to re-read a number it had already computed), and the
+      // eager checkpoint paid another job before the count; the lazy
+      // checkpoint's materializing action IS the count now — per round:
+      // one count + (only on a size tie) the exceptAll check, down from
+      // four actions.
+      var edgeCount = edges.count()
+      if (edgeCount > 0) fx.loop() { _ =>
+        val next = fx.checkpoint(smallStar(largeStar(edges)))
+        val nextCount = next.count() // materializes the lazy checkpoint
+        // both sets are distinct: equal iff same size and no new edge
+        val converged = nextCount == edgeCount && next.exceptAll(edges).isEmpty
+        edges = next
+        edgeCount = nextCount
+        converged
+      }
+      val members = edges
+        .select(col("v").as("doc_id"), col("u").as("cluster_id"))
+        .union(edges.select(col("u").as("doc_id"), col("u").as("cluster_id"))
+          .distinct())
+      val singletons = nodes
+        .join(members.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("doc_id").as("cluster_id"))
+      members.union(singletons)
     }
-    def smallStar(e: DataFrame): DataFrame = {
-      // group by the larger endpoint: its smaller neighbors + itself all
-      // re-point at the smallest neighbor
-      val mins = e.groupBy(col("v")).agg(min(col("u")).as("m"))
-      e.join(mins, "v")
-        .filter(col("u") =!= col("m"))
-        .select(col("m").as("u"), col("u").as("v"))
-        .union(mins.select(col("m").as("u"), col("v")))
-        .distinct()
-    }
-    var rounds = 0
-    // one count per FRAME, carried across rounds (r17): the loop used
-    // to re-count the cached previous edge set every round (a whole
-    // job just to re-read a number it had already computed), and the
-    // eager checkpoint paid another job before the count; the lazy
-    // checkpoint's materializing action IS the count now — per round:
-    // one count + (only on a size tie) the exceptAll check, down from
-    // four actions.
-    var edgeCount = edges.count()
-    var converged = edgeCount == 0
-    while (!converged) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
-      rounds += 1
-      val nextCount = next.count() // materializes the lazy checkpoint
-      // both sets are distinct: equal iff same size and no new edge
-      converged = nextCount == edgeCount && next.exceptAll(edges).isEmpty
-      GraftPlanBridge.releaseCheckpoint(edges)
-      edges = next
-      edgeCount = nextCount
-    }
-    val members = edges
-      .select(col("v").as("doc_id"), col("u").as("cluster_id"))
-      .union(edges.select(col("u").as("doc_id"), col("u").as("cluster_id"))
-        .distinct())
-    val singletons = nodes
-      .join(members.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-    (members.union(singletons), rounds)
-  }
 
   /** Cluster assignment for every document: near-dup pairs from the
     * MinHash/LSH + exact-verify path (identical to the exhaustive ≥0.8
@@ -2046,12 +2025,12 @@ object Dedup extends QueryPack {
     "dedup_corpus" -> ((s: SparkSession, d: String) =>
       dedupCorpus(Tables.documents(s, d)).orderBy("doc_id")))
 
-  /** Shared closure fragment: exact >= 0.8 Jaccard pairs over the full
-    * documents table, recursive transitive closure, and `lab(doc_id,
-    * cluster_id)` = the smallest reachable doc_id (itself when
-    * isolated). Extended by the cluster/survivor oracles below. */
-  private val closureSql =
-    """WITH RECURSIVE toks AS (
+  /** The CTEs every shingle oracle below opens with: word trigrams per
+    * doc (`toks`, `sh`), shingle counts (`sz`), and the inverted-index
+    * intersection of every doc pair (`inter`). Defined before its users:
+    * object vals initialize in order. */
+  private val shingleCtes =
+    """toks AS (
       |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
       |  WHERE len(string_split(text, ' ')) >= 3),
       |sh AS (
@@ -2064,7 +2043,25 @@ object Dedup extends QueryPack {
       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ni
       |  FROM sh a JOIN sh b USING (shingle)
       |  WHERE a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** The per-source form of [[shingleCtes]]' first two CTEs. */
+  private val sourceShingleCtes =
+    """toks AS (
+      |  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
+      |  WHERE len(string_split(text, ' ')) >= 3),
+      |sh AS (
+      |  SELECT DISTINCT source,
+      |         unnest(list_transform(generate_series(1, len(t) - 2),
+      |                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
+      |  FROM toks),""".stripMargin
+
+  /** Shared closure fragment: exact >= 0.8 Jaccard pairs over the full
+    * documents table, recursive transitive closure, and `lab(doc_id,
+    * cluster_id)` = the smallest reachable doc_id (itself when
+    * isolated). Extended by the cluster/survivor oracles below. */
+  private val closureSql =
+    "WITH RECURSIVE " + shingleCtes + """,
       |pairs AS (
       |  SELECT doc_a, doc_b FROM inter
       |  JOIN sz x ON x.doc_id = doc_a
@@ -2087,20 +2084,7 @@ object Dedup extends QueryPack {
     * trigram construction, the distinct, and the inverted-index
     * intersection exactly. */
   private val jaccardSql =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 3),
-      |sh AS (
-      |  SELECT DISTINCT doc_id,
-      |         unnest(list_transform(generate_series(1, len(t) - 2),
-      |                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      |  FROM toks),
-      |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ni
-      |  FROM sh a JOIN sh b USING (shingle)
-      |  WHERE a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
+    "WITH " + shingleCtes + """
       |SELECT doc_a, doc_b,
       |       CAST(ni AS DOUBLE) / (x.n + y.n - ni) AS jaccard
       |FROM inter
@@ -2113,20 +2097,7 @@ object Dedup extends QueryPack {
     * inline DetMix split (the same literal formula the sample_det /
     * corpus_shard oracles use) and the val-first orientation. */
   private val splitLeakageSql =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 3),
-      |sh AS (
-      |  SELECT DISTINCT doc_id,
-      |         unnest(list_transform(generate_series(1, len(t) - 2),
-      |                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      |  FROM toks),
-      |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ni
-      |  FROM sh a JOIN sh b USING (shingle)
-      |  WHERE a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
+    "WITH " + shingleCtes + """,
       |pairs AS (
       |  SELECT doc_a, doc_b, CAST(ni AS DOUBLE) / (x.n + y.n - ni) AS jaccard
       |  FROM inter
@@ -2304,27 +2275,14 @@ object Dedup extends QueryPack {
         |ORDER BY b.doc_id""".stripMargin,
     // directional containment mirror of the inverted-index intersection
     "dedup_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |         unnest(list_transform(generate_series(1, len(t) - 2),
-        |                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-        |  FROM toks),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ni
-        |  FROM sh a JOIN sh b USING (shingle)
-        |  WHERE a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
+      ("WITH " + shingleCtes + """
         |SELECT doc_a, doc_b,
         |       CAST(ni AS DOUBLE) / least(x.n, y.n) AS containment
         |FROM inter
         |JOIN sz x ON x.doc_id = doc_a
         |JOIN sz y ON y.doc_id = doc_b
         |WHERE CAST(ni AS DOUBLE) / least(x.n, y.n) >= 0.9
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // string-shingle mirror of the hashed-shingle semi join
     "decontaminate" ->
       """WITH sh AS (
@@ -2382,14 +2340,7 @@ object Dedup extends QueryPack {
     // here vs 64-bit hashes in Spark — identical modulo the documented
     // 2^-64 xxhash collision caveat)
     "source_overlap" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |sh AS (
-        |  SELECT DISTINCT source,
-        |         unnest(list_transform(generate_series(1, len(t) - 2),
-        |                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-        |  FROM toks),
+      ("WITH " + sourceShingleCtes + """
         |sz AS (SELECT source, count(*) AS n FROM sh GROUP BY source),
         |inter AS (
         |  SELECT a.source AS source_a, b.source AS source_b,
@@ -2402,20 +2353,13 @@ object Dedup extends QueryPack {
         |FROM inter
         |JOIN sz x ON x.source = source_a
         |JOIN sz y ON y.source = source_b
-        |ORDER BY source_a, source_b""".stripMargin,
+        |ORDER BY source_a, source_b""".stripMargin),
     // the KMV gate: exact values recomputed from the shingle strings
     // (2^-64 hash-collision caveat as everywhere in the family); the
     // booleans are the gate — an estimator/merge regression flips one
     // Spark-side and hash-fails the row
     "source_overlap_kmv_verified" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |sh AS (
-        |  SELECT DISTINCT source,
-        |         unnest(list_transform(generate_series(1, len(t) - 2),
-        |                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-        |  FROM toks),
+      ("WITH " + sourceShingleCtes + """
         |sz AS (SELECT source, count(*) AS n FROM sh GROUP BY source),
         |inter AS (
         |  SELECT a.source AS source_a, b.source AS source_b,
@@ -2432,18 +2376,11 @@ object Dedup extends QueryPack {
         |       true AS sizes_within_bound,
         |       true AS shared_within_bound
         |FROM grid LEFT JOIN inter USING (source_a, source_b)
-        |ORDER BY source_a, source_b""".stripMargin,
+        |ORDER BY source_a, source_b""".stripMargin),
     // the novelty gate: same program, ORDERED pairs, difference/union
     // recomputed exactly from the shingle strings
     "source_novelty_kmv_verified" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |sh AS (
-        |  SELECT DISTINCT source,
-        |         unnest(list_transform(generate_series(1, len(t) - 2),
-        |                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-        |  FROM toks),
+      ("WITH " + sourceShingleCtes + """
         |sz AS (SELECT source, count(*) AS n FROM sh GROUP BY source),
         |inter AS (
         |  SELECT a.source AS source_a, b.source AS source_b,
@@ -2463,7 +2400,7 @@ object Dedup extends QueryPack {
         |       true AS novel_within_bound,
         |       true AS union_within_bound
         |FROM grid LEFT JOIN inter USING (source_a, source_b)
-        |ORDER BY source_a, source_b""".stripMargin,
+        |ORDER BY source_a, source_b""".stripMargin),
     // the mix-coverage gate: the SAME first-half-of-sorted-sources mix
     // policy, exact candidate-vs-mix-union set algebra from the
     // shingle strings. The source axis is the SHINGLE-BEARING sources
@@ -2517,14 +2454,7 @@ object Dedup extends QueryPack {
     // engine's 64-bit hashes: equal barring the family's 2^-64
     // collision caveat)
     "coverage_curve_kmv_verified" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |sh AS (
-        |  SELECT DISTINCT source,
-        |         unnest(list_transform(generate_series(1, len(t) - 2),
-        |                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-        |  FROM toks),
+      ("WITH " + sourceShingleCtes + """
         |srcs AS (
         |  SELECT source,
         |         CAST(ROW_NUMBER() OVER (ORDER BY source) AS BIGINT) AS rnk
@@ -2539,7 +2469,7 @@ object Dedup extends QueryPack {
         |       true AS union_within_bound,
         |       true AS marginal_within_bound
         |FROM srcs s LEFT JOIN cnt ON cnt.mr = s.rnk
-        |ORDER BY k""".stripMargin,
+        |ORDER BY k""".stripMargin),
     // full composition: exact survivors → near-dup closure over them →
     // keep docs that are their own component minimum
     // string-gram mirror of the hashed-gram scrub (equal barring 64-bit

@@ -30,9 +30,10 @@ import org.apache.spark.sql.functions.col
   * serializing the CPU-heavy verify behind it).
   *
   * Block lifecycle matches every other localCheckpoint in the engine:
-  * released by the ContextCleaner when the plan is GC'd (callers that
-  * can scope the release precisely hold the RDD handle via the bridge
-  * directly, as [[graft.queries.Extended.lpaOf]] does). */
+  * released by the ContextCleaner when the plan is GC'd (a loop that
+  * can scope the release precisely hands the frame to its
+  * [[graft.operators.Fixpoint]] driver, as [[graft.queries.Extended.lpaOf]]
+  * does). */
 object KeyedStore {
 
   def byKeys(df: DataFrame, keys: String*): DataFrame = {
@@ -41,6 +42,6 @@ object KeyedStore {
       .checkpointHashPartitioned(
         df.repartition(n, keys.map(col): _*)
           .sortWithinPartitions(keys.map(col): _*),
-        keys, sortedByKeys = true)._1
+        keys, sortedByKeys = true)
   }
 }

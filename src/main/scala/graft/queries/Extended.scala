@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.operators.Fixpoint
 import graft.functions.{FreqItemsAgg, QuantileSketchAgg}
 import OracleSafe._
 
@@ -730,7 +731,7 @@ object Extended extends QueryPack {
     // partitions.
     val spark = names.sparkSession
     val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val (variants, _) = GraftPlanBridge.checkpointHashPartitioned(
+    val variants = GraftPlanBridge.checkpointHashPartitioned(
         fuzzyVariantsOf(names)
           .repartition(nParts, col("vh")).sortWithinPartitions("vh"),
         Seq("vh"), sortedByKeys = true)
@@ -1065,56 +1066,41 @@ object Extended extends QueryPack {
   private[graft] val GraphBroadcastRowCap = 16000000L
 
   private[graft] def kcoreOf(half: DataFrame, k: Int, rounds: Int,
-      bcastCap: Long = GraphBroadcastRowCap): DataFrame = {
-    val edges = half.select(col("pa"), col("pb")).localCheckpoint()
-    var deg = edges.select(col("pa").as("n"))
-      .union(edges.select(col("pb").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("dg"))
-      .localCheckpoint()
-    var r = 0
-    var frontier = true
-    // the frames the previous round's lazy `next` reads: released once
-    // this round's count has materialized `next` (releasing them any
-    // earlier would delete blocks `next` still has to read)
-    var superseded = Seq.empty[DataFrame]
-    while (r < rounds && frontier) {
-      r += 1
-      // LAZY (r18): the count right below is the first action and
-      // materializes the frontier; every later consumer (the two decr
-      // branches, the anti join) runs in the round's SECOND action and
-      // reads the blocks — consumers in strictly later actions cannot
-      // race a lazy checkpoint, so the eager form's separate
-      // materialization job per round bought nothing
-      val dead = deg.filter(col("dg") < lit(k)).select("n").localCheckpoint(false)
-      val nDead = dead.count()
-      superseded.foreach(GraftPlanBridge.releaseCheckpoint)
-      superseded = Seq(deg, dead)
-      frontier = nDead > 0
-      def hinted(df: DataFrame): DataFrame =
-        if (nDead <= bcastCap) broadcast(df) else df
-      if (frontier) {
-        val decr = edges
-          .join(hinted(dead.select(col("n").as("pa"))), "pa")
-          .select(col("pb").as("n"))
-          .union(edges
-            .join(hinted(dead.select(col("n").as("pb"))), "pb")
-            .select(col("pa").as("n")))
-          .groupBy("n").agg(count(lit(1)).as("dec"))
-        val next = deg
-          .join(hinted(dead), Seq("n"), "left_anti")
-          .join(decr, Seq("n"), "left_outer")
-          .select(col("n"),
-            (col("dg") - coalesce(col("dec"), lit(0L))).as("dg"))
-          // LAZY (r18): the next round's frontier count (or the
-          // caller's terminal action on the last round) materializes
-          // it — same strictly-later-action argument as `dead` above
-          .localCheckpoint(false)
-        deg = next
+      bcastCap: Long = GraphBroadcastRowCap): DataFrame =
+    Fixpoint(half.sparkSession, "kcore") { fx =>
+      val edges = fx.keep(half.select(col("pa"), col("pb")), eager = true)
+      var deg = fx.checkpoint(edges.select(col("pa").as("n"))
+        .union(edges.select(col("pb").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("dg")), eager = true)
+      fx.loop(rounds) { _ =>
+        // the count right below materializes the frontier (and the
+        // previous round's `deg`); the two decr branches and the anti
+        // join read it in the round's second action
+        val dead = fx.checkpoint(deg.filter(col("dg") < lit(k)).select("n"))
+        val nDead = dead.count()
+        def hinted(df: DataFrame): DataFrame =
+          if (nDead <= bcastCap) broadcast(df) else df
+        if (nDead > 0) {
+          val decr = edges
+            .join(hinted(dead.select(col("n").as("pa"))), "pa")
+            .select(col("pb").as("n"))
+            .union(edges
+              .join(hinted(dead.select(col("n").as("pb"))), "pb")
+              .select(col("pa").as("n")))
+            .groupBy("n").agg(count(lit(1)).as("dec"))
+          // the next round's frontier count (or the caller's terminal
+          // action on the last round) materializes it
+          deg = fx.checkpoint(deg
+            .join(hinted(dead), Seq("n"), "left_anti")
+            .join(decr, Seq("n"), "left_outer")
+            .select(col("n"),
+              (col("dg") - coalesce(col("dec"), lit(0L))).as("dg")))
+        }
+        nDead == 0
       }
-    }
-    deg.filter(col("dg") > 0)
-      .select(col("n").as("node"), col("dg").as("core_degree"))
-  }
+      deg.filter(col("dg") > 0)
+        .select(col("n").as("node"), col("dg").as("core_degree"))
+    }._1
 
   /** Synchronous label-propagation rounds shared with the unrolled
     * oracle. 4 is the declared query semantics (not a convergence
@@ -1169,62 +1155,56 @@ object Extended extends QueryPack {
     * stream, never the edges. */
   private[graft] def lpaOf(half: DataFrame,
       rounds: Int = LpaRounds,
-      bcastCap: Long = GraphBroadcastRowCap): DataFrame = {
-    // DESERIALIZED checkpoint with the partitioning DECLARED (r18):
-    // the r17 form persisted this frame (columnar cache) because a
-    // plain localCheckpoint drops the hash partitioning and every
-    // round would re-exchange the vote stream — but the columnar
-    // decode measured ~2× the whole round cost at sf0.1
-    // (graph_communities exec 56.6 core-s persisted vs 29.5 with
-    // deserialized blocks, where the latter paid THREE extra vote-
-    // stream shuffles: 39 → 117 MB written). checkpointHashPartitioned
-    // is the missing corner: UnsafeRow blocks AND a truthful
-    // HashPartitioning(a, N) on the LogicalRDD — N pinned explicitly
-    // (sessions' byte-derived shuffle count) so AQE cannot coalesce
-    // the layout the declaration promises. Both vote aggregations
-    // stay partition-local (zero exchange, the LpaSpec pin), and the
-    // rounds read cheap deserialized blocks.
-    val spark = half.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val (edges, edgesRdd) = GraftPlanBridge.checkpointHashPartitioned(
-        half.select(col("pa").as("a"), col("pb").as("b"))
-          .union(half.select(col("pb").as("a"), col("pa").as("b")))
-          .repartition(nParts, col("a"))
-          // sorted by the PROBE key, not the partitioning key: each
-          // round's broadcast-hash probe then walks the label map in
-          // near-sorted order instead of randomly. Once |V| outgrows
-          // cache that's the round bottleneck — ScaleR8's A/B reads
-          // 33% off every vote round at 16× and 64× the bench graph
-          // (checksum-identical labels), for one partition-local sort
-          // paid once at materialize.
-          .sortWithinPartitions("b"),
-        Seq("a"))
-    var labels = edges.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    // the broadcast-cliff guard (see GraphBroadcastRowCap): past the
-    // cap the per-round label join runs partition-local against a
-    // SECOND edge copy partitioned by the join key `b` — per round the
-    // exchanges are then the O(nodes) label frame plus the map-side-
-    // combined vote stream, never the edges; under it (every measured
-    // scale through 256× = 5.12M labels) the zero-exchange broadcast
-    // form is byte-identical to before
-    val bcast = labels.count() <= bcastCap
-    val edgesJoin =
-      if (bcast) edges else edges.repartition(col("b")).persist()
-    if (!bcast) edgesJoin.count()
-    for (_ <- 1 to rounds) {
-      val next = lpaRound(edgesJoin, labels, bcast).localCheckpoint()
-      GraftPlanBridge.releaseCheckpoint(labels)
-      labels = next
-    }
-    // community sizes run on the final O(nodes) label frame; the
-    // eager label checkpoints make dropping the edge blocks safe here
-    // (the RDD handle, not Dataset.unpersist — a no-op on checkpoints)
-    edgesRdd.unpersist(blocking = false)
-    if (!bcast) edgesJoin.unpersist()
-    sizesOf(labels, bcast)
-  }
+      bcastCap: Long = GraphBroadcastRowCap): DataFrame =
+    Fixpoint(half.sparkSession, "lpa") { fx =>
+      // DESERIALIZED checkpoint with the partitioning DECLARED (r18):
+      // the r17 form persisted this frame (columnar cache) because a
+      // plain localCheckpoint drops the hash partitioning and every
+      // round would re-exchange the vote stream — but the columnar
+      // decode measured ~2× the whole round cost at sf0.1
+      // (graph_communities exec 56.6 core-s persisted vs 29.5 with
+      // deserialized blocks, where the latter paid THREE extra vote-
+      // stream shuffles: 39 → 117 MB written). checkpointHashPartitioned
+      // is the missing corner: UnsafeRow blocks AND a truthful
+      // HashPartitioning(a, N) on the LogicalRDD — N pinned explicitly
+      // (sessions' byte-derived shuffle count) so AQE cannot coalesce
+      // the layout the declaration promises. Both vote aggregations
+      // stay partition-local (zero exchange, the LpaSpec pin), and the
+      // rounds read cheap deserialized blocks.
+      val nParts = half.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      val edges = fx.track(GraftPlanBridge.checkpointHashPartitioned(
+          half.select(col("pa").as("a"), col("pb").as("b"))
+            .union(half.select(col("pb").as("a"), col("pa").as("b")))
+            .repartition(nParts, col("a"))
+            // sorted by the PROBE key, not the partitioning key: each
+            // round's broadcast-hash probe then walks the label map in
+            // near-sorted order instead of randomly. Once |V| outgrows
+            // cache that's the round bottleneck — ScaleR8's A/B reads
+            // 33% off every vote round at 16× and 64× the bench graph
+            // (checksum-identical labels), for one partition-local sort
+            // paid once at materialize.
+            .sortWithinPartitions("b"),
+          Seq("a")))
+      var labels = fx.checkpoint(edges.select(col("a").as("node")).distinct()
+        .select(col("node"), col("node").as("label")), eager = true)
+      // the broadcast-cliff guard (see GraphBroadcastRowCap): past the
+      // cap the per-round label join runs partition-local against a
+      // SECOND edge copy partitioned by the join key `b` — per round the
+      // exchanges are then the O(nodes) label frame plus the map-side-
+      // combined vote stream, never the edges; under it (every measured
+      // scale through 256× = 5.12M labels) the zero-exchange broadcast
+      // form is byte-identical to before
+      val bcast = labels.count() <= bcastCap
+      val edgesJoin =
+        if (bcast) edges else fx.cache(edges.repartition(col("b")))
+      if (!bcast) edgesJoin.count()
+      fx.loop(rounds) { _ =>
+        labels = fx.checkpoint(lpaRound(edgesJoin, labels, bcast), eager = true)
+        false
+      }
+      // community sizes run on the final O(nodes) label frame
+      sizesOf(labels, bcast)
+    }._1
 
   /** One synchronous vote round — exposed so the unit spec can pin
     * the zero-exchange plan property over a cached `a`-partitioned
@@ -1265,56 +1245,54 @@ object Extended extends QueryPack {
     * which this deliberately avoids — one more O(nodes) join × iters). */
   private[graft] def pagerankOf(pairs: DataFrame,
       iters: Int = PagerankIters,
-      bcastCap: Long = GraphBroadcastRowCap): DataFrame = {
-    // Adjacency-array form: the symmetric edge list folds into one row
-    // per node — (node, out-neighbor array, degree = array size). Each
-    // round then joins the broadcast rank frame against O(nodes) array
-    // rows and re-expands contributions with a codegen'd explode,
-    // instead of re-scanning and re-joining the O(edges) flat frame;
-    // the degree "join" of the old shape disappears into size(nbrs).
-    // Same integer contributions, same exact sums — hash-identical.
-    // (AQE coalesces this shuffle to ~12 partitions at sf0.1 — measured
-    // A/B shows that parallelism is sufficient for the loop's explode
-    // and an explicit-N pin only adds exchange cost, unlike the
-    // byte-tiny-but-CPU-heavy Multimodal id frames where pinning wins)
-    val adj = pairs.groupBy(col("pa"))
-      .agg(collect_list(col("pb")).as("nbrs"))
-      .select(col("pa"), col("nbrs"),
-        size(col("nbrs")).cast("long").as("d"))
-      .localCheckpoint()
-    val n = adj.count()
-    // empty graph: no nodes, no ranks — and no 1e12/0 below
-    if (n == 0) return adj.sparkSession.emptyDataFrame
-      .withColumn("node", lit(0L)).withColumn("rank", lit(0L)).limit(0)
-    val base = PagerankScale / n
-    var rank = adj.select(col("pa").as("node"), lit(base).as("rank"))
-    // rank is O(nodes) and localCheckpoint hides its (small) size from
-    // the planner, which would otherwise shuffle the adjacency table
-    // every round — broadcast it explicitly, GUARDED by the measured
-    // node count (the 256× broadcast-cliff lesson): past the cap the
-    // adjacency table hash-partitions by pa ONCE and each round
-    // shuffles only the O(nodes) rank side into it.
-    val bcast = n <= bcastCap
-    val adjLoop = if (bcast) adj else adj.repartition(col("pa")).persist()
-    if (!bcast) adjLoop.count()
-    for (_ <- 1 to iters) {
-      rank = adjLoop
-        .join(if (bcast) broadcast(rank) else rank, col("pa") === col("node"))
-        .select(explode(col("nbrs")).as("pb"), expr("rank div d").as("c"))
-        .groupBy("pb")
-        .agg(sum(col("c")).as("s"))
-        .select(col("pb").as("node"),
-          expr(s"(15 * ${base}L + 85 * s) div 100").as("rank"))
-        // LAZY (r17): the next round's broadcast build (or, on the last
-        // round, the caller's terminal action) is the materializing
-        // action — the eager form paid one extra job per iteration just
-        // to materialize the O(nodes) rank frame it was about to
-        // broadcast anyway
-        .localCheckpoint(false)
-    }
-    if (!bcast) adjLoop.unpersist()
-    rank
-  }
+      bcastCap: Long = GraphBroadcastRowCap): DataFrame =
+    Fixpoint(pairs.sparkSession, "pagerank") { fx =>
+      // Adjacency-array form: the symmetric edge list folds into one row
+      // per node — (node, out-neighbor array, degree = array size). Each
+      // round then joins the broadcast rank frame against O(nodes) array
+      // rows and re-expands contributions with a codegen'd explode,
+      // instead of re-scanning and re-joining the O(edges) flat frame;
+      // the degree "join" of the old shape disappears into size(nbrs).
+      // Same integer contributions, same exact sums — hash-identical.
+      // (AQE coalesces this shuffle to ~12 partitions at sf0.1 — measured
+      // A/B shows that parallelism is sufficient for the loop's explode
+      // and an explicit-N pin only adds exchange cost, unlike the
+      // byte-tiny-but-CPU-heavy Multimodal id frames where pinning wins)
+      val adj = fx.keep(pairs.groupBy(col("pa"))
+        .agg(collect_list(col("pb")).as("nbrs"))
+        .select(col("pa"), col("nbrs"),
+          size(col("nbrs")).cast("long").as("d")), eager = true)
+      val n = adj.count()
+      // empty graph: no nodes, no ranks — and no 1e12/0 below
+      if (n == 0) adj.sparkSession.emptyDataFrame
+        .withColumn("node", lit(0L)).withColumn("rank", lit(0L)).limit(0)
+      else {
+        val base = PagerankScale / n
+        var rank = adj.select(col("pa").as("node"), lit(base).as("rank"))
+        // rank is O(nodes) and localCheckpoint hides its (small) size from
+        // the planner, which would otherwise shuffle the adjacency table
+        // every round — broadcast it explicitly, GUARDED by the measured
+        // node count (the 256× broadcast-cliff lesson): past the cap the
+        // adjacency table hash-partitions by pa ONCE and each round
+        // shuffles only the O(nodes) rank side into it.
+        val bcast = n <= bcastCap
+        val adjLoop = if (bcast) adj else fx.cache(adj.repartition(col("pa")))
+        if (!bcast) adjLoop.count()
+        fx.loop(iters) { _ =>
+          // the next round's broadcast build (or, on the last round, the
+          // caller's terminal action) materializes the O(nodes) rank frame
+          rank = fx.checkpoint(adjLoop
+            .join(if (bcast) broadcast(rank) else rank, col("pa") === col("node"))
+            .select(explode(col("nbrs")).as("pb"), expr("rank div d").as("c"))
+            .groupBy("pb")
+            .agg(sum(col("c")).as("s"))
+            .select(col("pb").as("node"),
+              expr(s"(15 * ${base}L + 85 * s) div 100").as("rank")))
+          false
+        }
+        rank
+      }
+    }._1
 
   /** Z-score anomaly detection per event type: two-pass — per-type
     * moment statistics (the [[statsAgg]] decimal-exact formulation, so

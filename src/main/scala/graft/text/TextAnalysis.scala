@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.Fixpoint
 import graft.functions.{BestFitPackExpr, RepetitionStatsExpr, RollingHashExpr}
 import graft.queries.QueryPack
 
@@ -1384,8 +1385,11 @@ object TextAnalysis extends QueryPack {
 
   def bpeEncodeOf(spark: SparkSession, documents: DataFrame,
       merges: Int): DataFrame =
-    bpeLoopOf(spark, documents, merges)._2
-      .select(col("doc_id"),
+    encoded(bpeLoopOf(spark, documents, merges)._2)
+
+  /** [[bpeEncode]]'s output row per `(doc_id, t)` token array. */
+  private def encoded(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
         size(filter(col("t"), x => x.contains("@@"))).cast("long")
           .as("n_fused"),
@@ -1399,31 +1403,28 @@ object TextAnalysis extends QueryPack {
   private[graft] def bpeLoopOf(spark: SparkSession, documents: DataFrame,
       merges: Int): (DataFrame, DataFrame) = {
     import spark.implicits._
-    // corpus state stays an ARRAY column between rounds — the oracle's
-    // CTE chain keeps lists too, and re-joining/re-splitting text per
-    // round would only add two string passes per iteration
-    var toks = documents.select(col("doc_id"), split(col("text"), " ").as("t"))
     val learned = scala.collection.mutable.Buffer[(Long, String, String, Long)]()
-    var r = 1
-    var dry = false // corpus can run out of non-self pairs before `merges`
-    while (r <= merges && !dry) {
-      val top = adjPairs(toks)
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("a"), col("b")).limit(1)
-        .as[(String, String, Long)].collect().headOption
-      top match {
-        case None => dry = true
-        case Some((a, b, n)) =>
+    val (toks, _) = Fixpoint(spark, "bpe") { fx =>
+      // corpus state stays an ARRAY column between rounds — the oracle's
+      // CTE chain keeps lists too, and re-joining/re-splitting text per
+      // round would only add two string passes per iteration
+      var toks = documents.select(col("doc_id"), split(col("text"), " ").as("t"))
+      // the corpus can run out of non-self pairs before `merges`
+      fx.loop(merges) { r =>
+        val top = adjPairs(toks)
+          .groupBy("a", "b")
+          .agg(count(lit(1)).as("n"))
+          .orderBy(col("n").desc, col("a"), col("b")).limit(1)
+          .as[(String, String, Long)].collect().headOption
+        top.foreach { case (a, b, n) =>
           learned += ((r.toLong, a, b, n))
-          // LAZY (r17): the next round's argmax collect — or, on the
-          // last round, the caller's terminal action — materializes
-          // the rewrite, so the loop pays one job per merge instead of
-          // two (lineage still truncates at each materialization)
-          toks = toks.select(col("doc_id"), fuseCol(a, b).as("t"))
-            .localCheckpoint(false)
+          // the next round's argmax collect — or, on the last round, the
+          // caller's terminal action — materializes the rewrite
+          toks = fx.checkpoint(toks.select(col("doc_id"), fuseCol(a, b).as("t")))
+        }
+        top.isEmpty
       }
-      r += 1
+      toks
     }
     (learned.toSeq.toDF("rank", "a", "b", "n").orderBy("rank"), toks)
   }
@@ -1506,79 +1507,74 @@ object TextAnalysis extends QueryPack {
     bpeTrainIncOf(spark, Tables.documents(spark, d), BpeIncMerges)
 
   def bpeTrainIncOf(spark: SparkSession, documents: DataFrame,
-      merges: Int): DataFrame = {
+      merges: Int): DataFrame = Fixpoint(spark, "bpe_inc") { fx =>
     import spark.implicits._
-    var toks = documents.select(col("doc_id"), split(col("text"), " ").as("t"))
-      .localCheckpoint()
+    var toks = fx.checkpoint(
+      documents.select(col("doc_id"), split(col("text"), " ").as("t")), eager = true)
     // corpus partition count is INVARIANT across rounds: the per-round
     // unaffected ∪ rewritten union concatenates both sides' partitions,
     // which unchecked doubles them every merge (2^r empty tasks by round
     // r — measured as a hang at 120 merges); the narrow coalesce pins it
     val nParts = toks.rdd.getNumPartitions
-    var counts = adjPairs(toks).groupBy("a", "b")
-      .agg(count(lit(1)).as("n")).localCheckpoint()
+    var counts = fx.checkpoint(adjPairs(toks).groupBy("a", "b")
+      .agg(count(lit(1)).as("n")), eager = true)
     val learned = scala.collection.mutable.Buffer[(Long, String, String, Long)]()
-    var r = 1
-    var dry = false
-    while (r <= merges && !dry) {
+    fx.loop(merges) { r =>
       // model-state argmax over the counts FRAME — no corpus scan
       val top = counts.orderBy(col("n").desc, col("a"), col("b")).limit(1)
         .as[(String, String, Long)].collect().headOption
-      top match {
-        case None => dry = true
-        case Some((a, b, n)) =>
-          learned += ((r.toLong, a, b, n))
-          val (pa, pb) = (lit(a), lit(b))
-          // all-non-null boolean per element (coalesce absorbs the
-          // try_element_at NULL past the end) so the flag and its
-          // negation partition the corpus exactly
-          // containment prefilter (r18): the positional scan only runs
-          // on docs that contain BOTH tokens at all — two tight
-          // equality probes short-circuit the transform+exists array
-          // build for the (increasingly common, as merges rarify) docs
-          // that cannot match. exists ⊆ contains, so the flag is
-          // unchanged.
-          val hasPair = array_contains(col("t"), pa) &&
-            array_contains(col("t"), pb) && exists(
-            transform(col("t"), (x, i) =>
-              x === pa &&
-                coalesce(try_element_at(col("t"), i + lit(2)) === pb,
-                  lit(false))),
-            x => x)
-          // evaluate the flag ONCE per doc; both filters below read the
-          // checkpointed result. `flagged` stays EAGER — it is the
-          // round's fan-out point (the counts delta reads it through
-          // BOTH the rewritten and the affected branch within one job,
-          // and a lazy persist would let those scans race the flag
-          // computation — the clusterLabels hop lesson). The three
-          // single-consumer checkpoints below are LAZY since r17: the
-          // next round's argmax collect materializes the counts delta
-          // (and through it `rewritten`), and the next round's flag
-          // checkpoint materializes the new `toks` — so the loop pays
-          // two jobs per merge instead of five, with no scan racing
-          // (measured: 104 → ~40 jobs, see OPTIMIZATION_r17.md).
-          val flagged = toks.withColumn("aff", hasPair).localCheckpoint()
-          val affected = flagged.filter(col("aff")).select("doc_id", "t")
-          val rewritten = affected
-            .select(col("doc_id"), fuseCol(a, b).as("t")).localCheckpoint(false)
-          // counts ⊎ (pairs after − pairs before), zeros dropped: the
-          // only shuffle of the round, over the affected sliver's pairs
-          // plus the vocabulary-shaped counts frame
-          counts = counts.select(col("a"), col("b"), col("n").as("dn"))
-            .unionAll(adjPairs(rewritten).groupBy("a", "b")
-              .agg(count(lit(1)).as("dn")))
-            .unionAll(adjPairs(affected).groupBy("a", "b")
-              .agg((-count(lit(1))).as("dn")))
-            .groupBy("a", "b").agg(sum(col("dn")).as("n"))
-            .filter(col("n") > 0)
-            .localCheckpoint(false)
-          toks = flagged.filter(!col("aff")).select("doc_id", "t")
-            .unionAll(rewritten).coalesce(nParts).localCheckpoint(false)
+      top.foreach { case (a, b, n) =>
+        learned += ((r.toLong, a, b, n))
+        val (pa, pb) = (lit(a), lit(b))
+        // all-non-null boolean per element (coalesce absorbs the
+        // try_element_at NULL past the end) so the flag and its
+        // negation partition the corpus exactly
+        // containment prefilter (r18): the positional scan only runs
+        // on docs that contain BOTH tokens at all — two tight
+        // equality probes short-circuit the transform+exists array
+        // build for the (increasingly common, as merges rarify) docs
+        // that cannot match. exists ⊆ contains, so the flag is
+        // unchanged.
+        val hasPair = array_contains(col("t"), pa) &&
+          array_contains(col("t"), pb) && exists(
+          transform(col("t"), (x, i) =>
+            x === pa &&
+              coalesce(try_element_at(col("t"), i + lit(2)) === pb,
+                lit(false))),
+          x => x)
+        // evaluate the flag ONCE per doc; both filters below read the
+        // checkpointed result. `flagged` stays EAGER — it is the
+        // round's fan-out point (the counts delta reads it through
+        // BOTH the rewritten and the affected branch within one job,
+        // and a lazy persist would let those scans race the flag
+        // computation — the clusterLabels hop lesson). The three
+        // single-consumer checkpoints below are lazy since r17: the
+        // next round's argmax collect materializes the counts delta
+        // (and through it `rewritten`), and the next round's flag
+        // checkpoint materializes the new `toks` — so the loop pays
+        // two jobs per merge instead of five, with no scan racing
+        // (measured: 104 → ~40 jobs, see OPTIMIZATION_r17.md).
+        val flagged = fx.checkpoint(toks.withColumn("aff", hasPair), eager = true)
+        val affected = flagged.filter(col("aff")).select("doc_id", "t")
+        val rewritten = fx.checkpoint(
+          affected.select(col("doc_id"), fuseCol(a, b).as("t")))
+        // counts ⊎ (pairs after − pairs before), zeros dropped: the
+        // only shuffle of the round, over the affected sliver's pairs
+        // plus the vocabulary-shaped counts frame
+        counts = fx.checkpoint(counts.select(col("a"), col("b"), col("n").as("dn"))
+          .unionAll(adjPairs(rewritten).groupBy("a", "b")
+            .agg(count(lit(1)).as("dn")))
+          .unionAll(adjPairs(affected).groupBy("a", "b")
+            .agg((-count(lit(1))).as("dn")))
+          .groupBy("a", "b").agg(sum(col("dn")).as("n"))
+          .filter(col("n") > 0))
+        toks = fx.checkpoint(flagged.filter(!col("aff")).select("doc_id", "t")
+          .unionAll(rewritten).coalesce(nParts))
       }
-      r += 1
+      top.isEmpty
     }
     learned.toSeq.toDF("rank", "a", "b", "n").orderBy("rank")
-  }
+  }._1
 
   /** The train/apply SPLIT of the tokenizer lifecycle — the half
     * [[bpeEncode]]'s scaladoc promises but doesn't exercise: learn the
@@ -1603,15 +1599,8 @@ object TextAnalysis extends QueryPack {
       ._1.select("a", "b").collect()  // merge table: model state, ≤ merges rows
     val heldOut = documents.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
-    val applied = learned.foldLeft(heldOut)((df, r) =>
-      df.select(col("doc_id"), fuseCol(r.getString(0), r.getString(1)).as("t")))
-    applied
-      .select(col("doc_id"),
-        size(col("t")).cast("long").as("n_tokens"),
-        size(filter(col("t"), x => x.contains("@@"))).cast("long")
-          .as("n_fused"),
-        array_join(col("t"), " ").as("text_bpe"))
-      .orderBy("doc_id")
+    encoded(learned.foldLeft(heldOut)((df, r) =>
+      df.select(col("doc_id"), fuseCol(r.getString(0), r.getString(1)).as("t"))))
   }
 
   /** The corpus quality gate as a standalone stateless filter (length,

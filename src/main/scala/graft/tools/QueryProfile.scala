@@ -2,7 +2,10 @@ package graft.tools
 
 /** r17 optimization-round instrument: per-registered-query decomposition
   * of WHERE the bench seconds go — wall time, Spark job count, stage
-  * count, task count, summed executor run time, shuffle records/bytes —
+  * count, task count, summed executor run time, shuffle records/bytes,
+  * and `leaked`: the persistent RDDs the query still holds after its
+  * `noop` write and `clearCache()` (a diff of `getPersistentRDDs`, the
+  * most over the reps) —
   * so a plan change can be judged by the structural numbers (jobs,
   * exchanges, shuffled bytes) and not just a noisy wall clock.
   * Optionally dumps `.explain("formatted")` per query for the
@@ -25,6 +28,7 @@ object QueryProfile {
     spark.sparkContext.setLogLevel("WARN")
     graft.GraftSession.tuneShufflePartitions(spark, d)
     val metrics = new StageMetrics(spark)
+    val sc = spark.sparkContext
 
     val qs = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted.isEmpty || wanted(n) }
@@ -37,7 +41,7 @@ object QueryProfile {
       spark.catalog.clearCache()
     }
 
-    println("query\twall_s\tjobs\tstages\ttasks\texec_s\tshw_mb\tshr_mb\tshw_rec")
+    println("query\twall_s\tjobs\tstages\ttasks\texec_s\tshw_mb\tshr_mb\tshw_rec\tleaked")
     qs.foreach { case (name, fn) =>
       explainDir.foreach { dir =>
         try {
@@ -51,6 +55,7 @@ object QueryProfile {
       }
       val samples = (1 to reps).map { _ =>
         val before = metrics.snapshot()
+        val held = sc.getPersistentRDDs.keySet
         val t0 = System.nanoTime()
         val ok = try {
           fn(spark, d).write.format("noop").mode("overwrite").save(); true
@@ -59,10 +64,13 @@ object QueryProfile {
         }
         spark.catalog.clearCache()
         val wall = (System.nanoTime() - t0) / 1e9
-        (wall, ok, metrics.snapshot() - before)
+        (wall, ok, metrics.snapshot() - before, (sc.getPersistentRDDs.keySet -- held).size)
       }
-      val (wall, ok, m) = samples.minBy(_._1)
-      if (ok) println(f"$name\t$wall%.2f\t${m.jobs}\t${m.stages}\t${m.tasks}\t${m.runTimeMs / 1e3}%.2f\t${m.shufWriteBytes / 1e6}%.2f\t${m.shufReadBytes / 1e6}%.2f\t${m.shufWriteRec}")
+      val (wall, ok, m, _) = samples.minBy(_._1)
+      // the registry holds RDDs weakly, so a GC inside a sample can hide
+      // some: report the most any sample left
+      val leaked = samples.map(_._4).max
+      if (ok) println(f"$name\t$wall%.2f\t${m.jobs}\t${m.stages}\t${m.tasks}\t${m.runTimeMs / 1e3}%.2f\t${m.shufWriteBytes / 1e6}%.2f\t${m.shufReadBytes / 1e6}%.2f\t${m.shufWriteRec}\t$leaked")
       else println(s"$name\tFAILED")
     }
     spark.stop()

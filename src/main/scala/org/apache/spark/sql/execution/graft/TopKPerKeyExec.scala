@@ -2,7 +2,7 @@ package org.apache.spark.sql.execution.graft
 
 import scala.collection.mutable
 
-import org.apache.spark.SparkEnv
+import org.apache.spark.{MapOutputTrackerMaster, ShuffleDependency, SparkEnv}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
@@ -10,8 +10,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession, Strategy}
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode, UnsafeExternalRowSorter}
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, UnaryExecNode, UnsafeExternalRowSorter}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.storage.{BlockId, RDDBlockId, StorageLevel}
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 
 /** Group-wise top-k as a first-class operator: for each group key, the
@@ -213,10 +215,54 @@ object GraftPlanBridge {
     * again, nor any lazy frame built on it that is still unmaterialized. */
   def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case other => throw new IllegalArgumentException(
         s"releaseCheckpoint: not a checkpointed frame (${other.nodeName})")
     }
+
+  /** The RDD that holds `df`'s blocks: the one behind a checkpointed
+    * frame's `LogicalRDD`, or a cached frame's column buffers once they
+    * are built; None for any other frame. */
+  def blocksOf(df: org.apache.spark.sql.DataFrame): Option[RDD[_]] = df.queryExecution.logical match {
+    case r: LogicalRDD => Some(r.rdd)
+    case _ => df.sparkSession.sharedState.cacheManager.lookupCachedData(df.asInstanceOf[DataFrame])
+      .map(_.cachedRepresentation.cacheBuilder).filter(_.isCachedColumnBuffersLoaded)
+      .map(_.cachedColumnBuffers)
+  }
+
+  /** True when every partition of `rdd` has a block: one question to the
+    * block-manager master, no Spark job. */
+  def materialized(rdd: RDD[_]): Boolean = SparkEnv.get.blockManager.master
+    .getLocations(rdd.partitions.indices.map(i => RDDBlockId(rdd.id, i): BlockId).toArray)
+    .forall(_.nonEmpty)
+
+  /** Ids of the persisted RDDs a later action on `df` can read. The walk
+    * starts at the checkpoint and cache leaves of `df`'s plan, follows an
+    * RDD's lineage only while its blocks are incomplete, and crosses a
+    * shuffle only while that shuffle's map output is incomplete (an AQE
+    * plan runs its map stages when it is checkpointed, lazily or not).
+    * Runs no Spark job. */
+  def readable(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+    val tracker = SparkEnv.get.mapOutputTracker.asInstanceOf[MapOutputTrackerMaster]
+    val seen, held = mutable.Set.empty[Int]
+    def visit(rdd: RDD[_]): Unit = if (seen.add(rdd.id)) {
+      if (rdd.getStorageLevel != StorageLevel.NONE) held += rdd.id
+      if (!held(rdd.id) || !materialized(rdd)) rdd.dependencies.foreach {
+        case s: ShuffleDependency[_, _, _]
+            if tracker.getNumAvailableOutputs(s.shuffleId) == s.rdd.partitions.length =>
+        case d => visit(d.rdd)
+      }
+    }
+    def leaves(plan: LogicalPlan): Unit = plan.foreachWithSubqueries {
+      case r: LogicalRDD => visit(r.rdd)
+      case m: InMemoryRelation if m.cacheBuilder.isCachedColumnBuffersLoaded =>
+        visit(m.cacheBuilder.cachedColumnBuffers)
+      case m: InMemoryRelation => leaves(m.cacheBuilder.logicalPlan)
+      case _ =>
+    }
+    leaves(df.queryExecution.withCachedData)
+    held.toSet
+  }
 
   /** `localCheckpoint()` that KEEPS a hash partitioning visible to the
     * planner (r18). `Dataset.localCheckpoint` under AQE builds its
@@ -238,12 +284,10 @@ object GraftPlanBridge {
     * projections). Each of `keys` must resolve to exactly one column of
     * `df`'s output under the session's resolver.
     *
-    * Returns the checkpointed frame plus the backing RDD — callers
-    * unpersist the RDD when the loop ends (Dataset.unpersist is a
-    * no-op on checkpoint blocks). */
+    * Returns the checkpointed frame; [[releaseCheckpoint]] drops its
+    * blocks (Dataset.unpersist is a no-op on checkpoint blocks). */
   def checkpointHashPartitioned(df0: org.apache.spark.sql.DataFrame,
-      keys: Seq[String], sortedByKeys: Boolean = false)
-      : (org.apache.spark.sql.DataFrame, RDD[InternalRow]) = {
+      keys: Seq[String], sortedByKeys: Boolean = false): org.apache.spark.sql.DataFrame = {
     val df = df0.asInstanceOf[DataFrame]
     val spark = df.sparkSession
     val qe = df.queryExecution
@@ -272,8 +316,6 @@ object GraftPlanBridge {
     // sorts as well as its exchanges
     val ordering =
       if (sortedByKeys) keyAttrs.map(a => SortOrder(a, Ascending)) else Nil
-    (Dataset.ofRows(spark,
-      org.apache.spark.sql.execution.LogicalRDD(attrs, rdd, part,
-        ordering)(spark)), rdd)
+    Dataset.ofRows(spark, LogicalRDD(attrs, rdd, part, ordering)(spark))
   }
 }

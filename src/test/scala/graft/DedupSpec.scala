@@ -153,9 +153,9 @@ class DedupSpec extends SparkSpec {
     val (_, rounds) = Dedup.clusterLabelsWithRounds(
       (1L to n).toDF("doc_id"), chain.toDF("doc_a", "doc_b"))
     val added = sc.getPersistentRDDs.keySet -- before
-    // what stays: the pair set, the self-loop frame, the final labels
+    // what stays: the final labels the caller reads
     assert(rounds >= 5, s"a ${n}-chain should take several rounds, took $rounds")
-    assert(added.size <= 3, s"$rounds rounds left ${added.size} new persistent RDDs")
+    assert(added.size <= 1, s"$rounds rounds left ${added.size} new persistent RDDs")
   }
 
   test("clusterLabels: empty pair set leaves every doc its own cluster") {

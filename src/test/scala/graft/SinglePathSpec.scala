@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guard for the single paths: engine expressions bind as
   * typed Columns (never a session-global temp function looked up by
-  * name), every session comes from [[GraftSession.builder]], and every
-  * k-means trains through the one grouped Lloyd trainer. */
+  * name), every session comes from [[GraftSession.builder]], every
+  * k-means trains through the one grouped Lloyd trainer, and every
+  * fixpoint loop runs through the one driver. */
 class SinglePathSpec extends AnyFunSuite {
 
   private def sources: Seq[Path] = {
@@ -40,5 +41,16 @@ class SinglePathSpec extends AnyFunSuite {
       assert(filesWith(name).isEmpty, name)
     assert(filesWith("DecimalType" + "(28, 12)").filter(_.startsWith("src/main/")) ===
       Seq("src/main/scala/graft/similarity/Lloyd.scala"))
+  }
+
+  test("one fixpoint driver") {
+    // split so this file does not match itself
+    val callers = filesWith("release" + "Checkpoint").filterNot(
+      _ == "src/main/scala/org/apache/spark/sql/execution/graft/TopKPerKeyExec.scala")
+    assert(callers === Seq("src/main/scala/graft/operators/Fixpoint.scala"))
+    assert(filesWith("localCheckpoint" + "(false)").filter(p =>
+      Seq("dedup", "queries", "text").exists(d => p.startsWith(s"src/main/scala/graft/$d/"))).isEmpty)
+    assert(filesWith("var super" + "seded").isEmpty)
+    assert(filesWith("super" + "seded.foreach").isEmpty)
   }
 }
