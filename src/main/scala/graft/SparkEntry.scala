@@ -23,9 +23,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Dashboard.salesByHour(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each runs in
+    * its own [[graft.operators.Stage]] scope, so whatever the query
+    * materialized and its result cannot read is released when it returns. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.map(_.queries).reduce(_ ++ _)
+    packs.map(_.queries).reduce(_ ++ _).transform { (_, fn) =>
+      (spark: SparkSession, d: String) => graft.operators.Stage(spark)(_ => fn(spark, d))
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.Fixpoint
+import graft.operators.{Fixpoint, Stage}
 import graft.functions.{GramPosHashesExpr, KmvSketchAgg, MinHashAgg, MinHashBandsRowExpr,
   RollingHashExpr, ShingleHashesExpr, SimHashAgg}
 import graft.queries.QueryPack
@@ -156,23 +156,17 @@ object Dedup extends QueryPack {
     * unique (this one), that join is already near-linear and beats the
     * prefix-filtered variant's extra passes; see [[ngramJaccardPrefixOf]]
     * for the shape that wins once hot shingles appear. */
-  def ngramJaccardOf(docs: DataFrame): DataFrame = {
-    // hashed shingles: 8-byte join keys; materialized once via
-    // localCheckpoint because the set feeds three plan branches (sizes +
-    // both join sides). Checkpoint, not cache: cached relations live in
-    // the cache manager until an explicit unpersist/clearCache (a leak
-    // for a lazy returned plan — the PQ lesson from the round-3 advice),
-    // while checkpoint blocks are released when the plan is GC'd. The
-    // cost is lineage truncation: on a real cluster an executor loss
-    // re-runs the checkpointed stage instead of replaying lineage.
-    // UNRESTRICTED inverted-index self-join → shingle layout declared
-    // at materialize (r18, KeyedStore scaladoc): the intersection join
-    // runs exchange-free and sort-free; one pinned exchange of the
-    // index replaces the join's two. The candidate-RESTRICTED callers
-    // below keep the plain checkpoint deliberately — there the join
-    // exchanges only the restricted sliver, and exchanging the whole
-    // index once to save two sliver exchanges inverts at scale.
-    val sh = graft.operators.KeyedStore.byKeys(hashedShingles(docs), "shingle")
+  def ngramJaccardOf(docs: DataFrame): DataFrame = Stage(docs.sparkSession) { st =>
+    // hashed shingles: 8-byte join keys, materialized once because the
+    // set feeds three plan branches (sizes + both join sides).
+    // UNRESTRICTED inverted-index self-join → keyed by shingle (r18):
+    // the intersection join runs exchange-free and sort-free; one
+    // pinned exchange of the index replaces the join's two. The
+    // candidate-RESTRICTED callers below keep the plain checkpoint
+    // deliberately — there the join exchanges only the restricted
+    // sliver, and exchanging the whole index once to save two sliver
+    // exchanges inverts at scale.
+    val sh = st.byKeys(hashedShingles(docs), "shingle")
     jaccardOf(sh, None)
       .filter(col("jaccard") >= 0.8)
       .select("doc_a", "doc_b", "jaccard")
@@ -229,7 +223,7 @@ object Dedup extends QueryPack {
   def winnowPairs(spark: SparkSession, d: String): DataFrame =
     winnowPairsOf(Tables.documents(spark, d))
 
-  def winnowPairsOf(documents: DataFrame): DataFrame = {
+  def winnowPairsOf(documents: DataFrame): DataFrame = Stage(documents.sparkSession) { st =>
     val docs = documents
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= WinnowK)
@@ -247,13 +241,13 @@ object Dedup extends QueryPack {
     // `array_distinct` before the explode — the first shuffle the plan
     // pays is the df-count aggregate over the already-selected
     // fingerprints. Same O(n·W) per-doc compute either way.
-    // materialized ONCE, fp-layout declared (r18, KeyedStore scaladoc):
-    // un-stored, the rolling-hash + window-min selection pipeline ran
-    // THREE times (the df-count aggregate and both self-join sides)
-    // and the df-gate join + pair self-join each exchanged both scans
-    // by fp; now one pinned exchange at materialize and the gate join,
-    // the df aggregate and the pair join are all partition-local
-    val fps = graft.operators.KeyedStore.byKeys(docs
+    // materialized ONCE, keyed by fp (r18): un-stored, the rolling-hash
+    // + window-min selection pipeline ran THREE times (the df-count
+    // aggregate and both self-join sides) and the df-gate join + pair
+    // self-join each exchanged both scans by fp; now one pinned exchange
+    // at materialize and the gate join, the df aggregate and the pair
+    // join are all partition-local
+    val fps = st.byKeys(docs
       .select(col("doc_id"), transform(sequence(lit(1), size(col("t")) - (WinnowK - 1)),
         i => RollingHashExpr.column(concat_ws(" ", slice(col("t"), i, lit(WinnowK))))).as("hs"))
       .select(col("doc_id"), explode(array_distinct(expr(
@@ -287,9 +281,9 @@ object Dedup extends QueryPack {
     * happen. On this corpus (near-unique shingles) the extra frequency
     * and window passes cost more than they save — DedupSpec proves
     * equality, the bench runs the plain join. */
-  def ngramJaccardPrefixOf(docs: DataFrame, t: Double = 0.8): DataFrame = {
+  def ngramJaccardPrefixOf(docs: DataFrame, t: Double = 0.8): DataFrame = Stage(docs.sparkSession) { st =>
     import org.apache.spark.sql.expressions.Window
-    val sh = hashedShingles(docs).localCheckpoint()
+    val sh = st.checkpoint(hashedShingles(docs))
     val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val byRarity = Window.partitionBy(col("doc_id"))
       .orderBy(col("df"), col("shingle"))
@@ -302,10 +296,10 @@ object Dedup extends QueryPack {
     // plan branches, and the prefix pipeline (freq agg + two windows +
     // self-join) is the expensive part worth computing once — same
     // reason minhashLshOf checkpoints its candidates
-    val candidates = prefix.select(col("doc_id").as("doc_a"), col("shingle"))
+    val candidates = st.checkpoint(prefix.select(col("doc_id").as("doc_a"), col("shingle"))
       .join(prefix.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
       .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct().localCheckpoint()
+      .select("doc_a", "doc_b").distinct())
     jaccardOf(sh, Some(candidates))
       .filter(col("jaccard") >= t)
       .select("doc_a", "doc_b", "jaccard")
@@ -419,13 +413,12 @@ object Dedup extends QueryPack {
     minhashLshOf(Tables.documents(spark, d))
 
   /** Same over any (doc_id, text) frame. */
-  def minhashLshOf(docs: DataFrame): DataFrame = {
+  def minhashLshOf(docs: DataFrame): DataFrame = Stage(docs.sparkSession) { st =>
     // four plan branches read the shingles (signatures, sizes, both
     // verify-join sides) and three read the candidate pairs — checkpoint
-    // both so the explode+distinct and the banding pipeline run once
-    // each (see ngramJaccardOf for the checkpoint-vs-cache rationale)
-    val sh = hashedShingles(docs).localCheckpoint()
-    val candidates = lshCandidatesFrom(sh).localCheckpoint()
+    // both so the explode+distinct and the banding pipeline run once each
+    val sh = st.checkpoint(hashedShingles(docs))
+    val candidates = st.checkpoint(lshCandidatesFrom(sh))
     jaccardOf(sh, Some(candidates))
       .filter(col("jaccard") >= 0.8)
       .select("doc_a", "doc_b", "jaccard")
@@ -446,21 +439,19 @@ object Dedup extends QueryPack {
   def minhashLshRow(spark: SparkSession, d: String): DataFrame =
     minhashLshRowOf(Tables.documents(spark, d))
 
-  def minhashLshRowOf(docs: DataFrame): DataFrame = {
-    // (band, bkey) layout declared at materialize (r18; was a plain
-    // localCheckpoint whose hidden layout made the candidate self-join
-    // exchange both scans)
-    val banded = graft.operators.KeyedStore.byKeys(
+  def minhashLshRowOf(docs: DataFrame): DataFrame = Stage(docs.sparkSession) { st =>
+    // keyed by (band, bkey) (r18; was a plain checkpoint whose hidden
+    // layout made the candidate self-join exchange both scans)
+    val banded = st.byKeys(
       docs.select(col("doc_id"),
         posexplode(MinHashBandsRowExpr.column(col("text"))).as(Seq("band", "bkey"))),
       "band", "bkey")
-    val cand = banded.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
+    val cand = st.checkpoint(banded.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
       .join(banded.select(col("doc_id").as("doc_b"), col("band"), col("bkey")),
         Seq("band", "bkey"))
       .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-      .localCheckpoint()
-    val sh = hashedShingles(docs).localCheckpoint()
+      .select("doc_a", "doc_b").distinct())
+    val sh = st.checkpoint(hashedShingles(docs))
     jaccardOf(sh, Some(cand))
       .filter(col("jaccard") >= 0.8)
       .select("doc_a", "doc_b", "jaccard")
@@ -507,13 +498,13 @@ object Dedup extends QueryPack {
 
   private[graft] def clusterLabelsWithRounds(
       nodes: DataFrame, pairs: DataFrame): (DataFrame, Int) =
-    Fixpoint(pairs.sparkSession, "cc") { fx =>
+    Fixpoint(pairs.sparkSession, "cc") { (st, fx) =>
       // materialize the pair set ONCE before fanning it into the two union
-      // branches: edges.cache() alone still plans the (possibly expensive —
+      // branches: staging the edges alone still plans the (possibly expensive —
       // LSH + verify) pair pipeline into both branches, and the round loop
       // would pay its final stages twice. The checkpointed pair set is tiny
       // (the near-dup sliver), the pipeline above it is not.
-      val p = fx.keep(pairs, eager = true)
+      val p = st.checkpoint(pairs)
       // SELF-LOOPS folded into the static edge frame (r18, guide §2.4):
       // with (n, n) rows for every edge-bearing node, each round's hop is
       // `min(cluster_id over neighbors ∪ self)` in ONE edge-join +
@@ -526,9 +517,9 @@ object Dedup extends QueryPack {
       // The convergence sum below materializes it through the
       // labels-init lineage; the edge cache (round 1's action) reads the
       // blocks strictly later
-      val loops = fx.keep(p.select(col("doc_a").as("src"))
-        .union(p.select(col("doc_b").as("src"))).distinct())
-      val edges = fx.cache(p
+      val loops = st.checkpoint(p.select(col("doc_a").as("src"))
+        .union(p.select(col("doc_b").as("src"))).distinct(), eager = false)
+      val edges = st.stage(p
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         .union(loops.select(col("src"), col("src").as("dst"))))
@@ -632,7 +623,7 @@ object Dedup extends QueryPack {
 
   private[graft] def clusterLabelsStarWithRounds(
       nodes: DataFrame, pairs: DataFrame): (DataFrame, Int) =
-    Fixpoint(pairs.sparkSession, "star") { fx =>
+    Fixpoint(pairs.sparkSession, "star") { (_, fx) =>
       // canonical undirected edge set (u < v), materialized once
       var edges = fx.checkpoint(pairs
         .select(least(col("doc_a"), col("doc_b")).as("u"),
@@ -716,20 +707,18 @@ object Dedup extends QueryPack {
     * rows. This is the composition `tools.Scale smoke` measures: the sketch
     * passes scale with the corpus, the near-dup verify scales with the
     * survivor set. */
-  def dedupCorpus(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
+  def dedupCorpus(docs: DataFrame, threshold: Double = 0.8): DataFrame = Stage(docs.sparkSession) { st =>
     // the LSH banding underneath is calibrated for j >= 0.8 (32 bands ×
     // 4 rows); a lower threshold would need a different banding to keep
     // recall, so reject it instead of silently missing pairs
     require(threshold >= 0.8, s"threshold $threshold below the 0.8 LSH calibration")
     // materialized once: the survivor frame feeds the shingle pipeline,
     // the cluster node set, and the final semi join — three full
-    // re-aggregations of the corpus text without it (checkpoint, not
-    // cache, so nothing leaks past the returned plan's lifetime)
-    val exactSurvivors = docs
+    // re-aggregations of the corpus text without it
+    val exactSurvivors = st.checkpoint(docs
       .groupBy(col("text"))
       .agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id", "text")
-      .localCheckpoint()
+      .select("doc_id", "text"))
     val pairs = minhashLshRowOf(exactSurvivors)
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b")
@@ -789,39 +778,36 @@ object Dedup extends QueryPack {
   def dedupIncremental(spark: SparkSession, d: String): DataFrame =
     dedupIncrementalOf(Tables.documents(spark, d), batchSource = "src0")
 
-  def dedupIncrementalOf(docs: DataFrame, batchSource: String): DataFrame = {
+  def dedupIncrementalOf(docs: DataFrame, batchSource: String): DataFrame =
+      Stage(docs.sparkSession) { st =>
     val isBatch = col("source") === batchSource
-    val banded = docs.select(col("doc_id"), isBatch.as("in_batch"),
-        posexplode(MinHashBandsRowExpr.column(col("text"))).as(Seq("band", "bkey")))
-      .localCheckpoint()
+    val banded = st.checkpoint(docs.select(col("doc_id"), isBatch.as("in_batch"),
+        posexplode(MinHashBandsRowExpr.column(col("text"))).as(Seq("band", "bkey"))))
     // batch-centric candidates: a batch doc against ANY other doc
     // sharing a band (history in either id direction, batch both ways —
     // canonicalized to u < v for the shared verify)
-    val cand = banded.filter(col("in_batch"))
+    val cand = st.checkpoint(banded.filter(col("in_batch"))
       .select(col("doc_id").as("doc_q"), col("band"), col("bkey"))
       .join(banded.select(col("doc_id").as("doc_c"), col("band"), col("bkey")),
         Seq("band", "bkey"))
       .filter(col("doc_q") =!= col("doc_c"))
       .select(least(col("doc_q"), col("doc_c")).as("doc_a"),
         greatest(col("doc_q"), col("doc_c")).as("doc_b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // checkpoint-before-fan-out, same reason as [[clusterLabelsWithRounds]]:
     // the shingle frame feeds three subtrees inside jaccardOf, and the
     // verified sliver feeds both branches of the re-orient union below —
     // unmaterialized, the corpus shingle explode would plan (and run) 4×
-    val verified = jaccardOf(hashedShingles(docs).localCheckpoint(), Some(cand))
+    val verified = st.checkpoint(jaccardOf(st.checkpoint(hashedShingles(docs)), Some(cand))
       .filter(col("jaccard") >= 0.8)
-      .select("doc_a", "doc_b")
-      .localCheckpoint()
+      .select("doc_a", "doc_b"))
     // re-orient each verified pair around its batch member(s); `matches`
     // fans into the two grouped mins — materialize it once too
-    val matches = verified
+    val matches = st.checkpoint(verified
       .select(col("doc_a").as("bid"), col("doc_b").as("mid"))
       .union(verified.select(col("doc_b").as("bid"), col("doc_a").as("mid")))
       .join(docs.filter(isBatch).select(col("doc_id").as("bid")), Seq("bid"), "left_semi")
-      .join(docs.select(col("doc_id").as("mid"), isBatch.as("m_in_batch")), "mid")
-      .localCheckpoint()
+      .join(docs.select(col("doc_id").as("mid"), isBatch.as("m_in_batch")), "mid"))
     val histM = matches.filter(!col("m_in_batch"))
       .groupBy("bid").agg(min(col("mid")).as("hist_match"))
     val batchM = matches.filter(col("m_in_batch") && col("mid") < col("bid"))
@@ -959,10 +945,10 @@ object Dedup extends QueryPack {
     * the seam the ScaleR15 `kmv` sweep drives with synthetic hash
     * streams of known ground truth, so the measured path IS the
     * registered path. */
-  private[graft] def kmvOverlapOfHashes(ss: DataFrame, k: Int = KmvK): DataFrame = {
-    val sum = kmvSummary(
-      ss.groupBy("source").agg(KmvSketchAgg.column(col("shingle"), k).as("sk")), k)
-      .localCheckpoint()
+  private[graft] def kmvOverlapOfHashes(ss: DataFrame, k: Int = KmvK): DataFrame =
+      Stage(ss.sparkSession) { st =>
+    val sum = st.checkpoint(kmvSummary(
+      ss.groupBy("source").agg(KmvSketchAgg.column(col("shingle"), k).as("sk")), k))
     val a = sum.select(col("source").as("source_a"), col("kth").as("kth_a"),
       col("theta").as("theta_a"), col("est_distinct").as("est_a"))
     val b = sum.select(col("source").as("source_b"), col("kth").as("kth_b"),
@@ -1075,11 +1061,9 @@ object Dedup extends QueryPack {
     * downstream consumer (pair algebra, mix policy, union re-sketch)
     * reads the model-sized S-row summary instead of rescanning the
     * corpus. */
-  private[graft] def kmvSourceSummaries(ss: DataFrame, k: Int = KmvK): DataFrame = {
-    kmvSummary(
-      ss.groupBy("source").agg(KmvSketchAgg.column(col("shingle"), k).as("sk")), k)
-      .localCheckpoint()
-  }
+  private[graft] def kmvSourceSummaries(ss: DataFrame, k: Int = KmvK): DataFrame =
+    Stage(ss.sparkSession)(_.checkpoint(kmvSummary(
+      ss.groupBy("source").agg(KmvSketchAgg.column(col("shingle"), k).as("sk")), k)))
 
   /** The ordered-pair difference/union algebra over an already-
     * materialized summary frame — everything here touches only S·k
@@ -1198,7 +1182,7 @@ object Dedup extends QueryPack {
     * seam the `Scale mixcov` octave sweep drives with closed-form
     * synthetic streams). */
   private[graft] def mixCoverageOfHashes(ss: DataFrame,
-      k: Int = KmvK): DataFrame = {
+      k: Int = KmvK): DataFrame = Stage(ss.sparkSession) { st =>
     val sum = kmvSourceSummaries(ss, k)
     // model-sized collect from the CHECKPOINTED summaries — the mix
     // policy costs one S-row job, not a corpus rescan. Sorted by the
@@ -1228,7 +1212,7 @@ object Dedup extends QueryPack {
       // (a/b sides + both retained explosions) — materialize the
       // model-sized row once rather than re-running its sketch agg
       // per consumer (bench: 0.4 s of pure job-overhead otherwise)
-      val mixSum = kmvUnionSummary(sum, mix, mixLabel, k).localCheckpoint()
+      val mixSum = st.checkpoint(kmvUnionSummary(sum, mix, mixLabel, k))
       val candSum = sum.filter(!col("source").isInCollection(mix))
       kmvNoveltyOfSummaries(candSum.unionByName(mixSum), k)
         .filter(col("source_b") === mixLabel)
@@ -1305,13 +1289,13 @@ object Dedup extends QueryPack {
   /** The curve over ANY (source, shingle BIGINT-hash) stream — the
     * unit-law seam, like [[kmvNoveltyOfHashes]]. */
   private[graft] def coverageCurveOfHashes(ss: DataFrame,
-      k: Int = KmvK, crossover: Long = CurveDyadicCrossover): DataFrame = {
+      k: Int = KmvK, crossover: Long = CurveDyadicCrossover): DataFrame =
+      Stage(ss.sparkSession) { st =>
     import org.apache.spark.sql.expressions.Window
     val sum = kmvSourceSummaries(ss, k)
-    val ranked = sum
+    val ranked = st.checkpoint(sum // S rows: model-sized
       .withColumn("rnk",
-        row_number().over(Window.orderBy("source")).cast("long"))
-      .localCheckpoint() // S rows: model-sized
+        row_number().over(Window.orderBy("source")).cast("long")))
     val nSrc = ranked.count() // S-row job on the checkpoint, never the corpus
     val prefixes = kmvSummary(
       if (nSrc <= crossover) prefixSketchesExplode(ranked, nSrc, k)
@@ -1350,7 +1334,8 @@ object Dedup extends QueryPack {
     * the next level and the cover join). The pooled value SET per
     * prefix equals the explode arm's, so the sketches — and the
     * emitted curve — are bit-identical. */
-  private def prefixSketchesDyadic(ranked: DataFrame, nSrc: Long, k: Int): DataFrame = {
+  private def prefixSketchesDyadic(ranked: DataFrame, nSrc: Long, k: Int): DataFrame =
+      Stage(ranked.sparkSession) { st =>
     val spark = ranked.sparkSession
     import spark.implicits._
     // levels(j): (width = 2^j, one row per range index m with its sketch)
@@ -1359,9 +1344,9 @@ object Dedup extends QueryPack {
     var width = 1L
     levels += ((width, cur))
     while (width < nSrc) {
-      cur = cur.select(expr("(m + 1) div 2").as("m"), explode(col("sk")).as("h"))
-        .groupBy("m").agg(KmvSketchAgg.column(col("h"), k).as("sk"))
-        .localCheckpoint() // ≤ ⌈S/2ʲ⌉ rows of k longs: model-sized
+      // ≤ ⌈S/2ʲ⌉ rows of k longs: model-sized
+      cur = st.checkpoint(cur.select(expr("(m + 1) div 2").as("m"), explode(col("sk")).as("h"))
+        .groupBy("m").agg(KmvSketchAgg.column(col("h"), k).as("sk")))
       width *= 2
       levels += ((width, cur))
     }
@@ -1564,10 +1549,10 @@ object Dedup extends QueryPack {
     containmentOf(Tables.documents(spark, d), t)
 
   /** Same over any (doc_id, text) frame. */
-  def containmentOf(docs: DataFrame, t: Double = 0.9): DataFrame = {
-    // unrestricted self-join — declared shingle layout, same argument
-    // as [[ngramJaccardOf]] (r18)
-    val sh = graft.operators.KeyedStore.byKeys(hashedShingles(docs), "shingle")
+  def containmentOf(docs: DataFrame, t: Double = 0.9): DataFrame = Stage(docs.sparkSession) { st =>
+    // unrestricted self-join — keyed by shingle, same argument as
+    // [[ngramJaccardOf]] (r18)
+    val sh = st.byKeys(hashedShingles(docs), "shingle")
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val inter = sh.select(col("doc_id").as("doc_a"), col("shingle"))
       .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
@@ -1618,11 +1603,11 @@ object Dedup extends QueryPack {
     * exact Hamming filter via bit_count(xor). Sketch-based → rows-only
     * check (no SQL oracle); the exact-verified form with a hash-matched
     * oracle is [[simhashVerified]]. */
-  def simhashPairs(spark: SparkSession, d: String): DataFrame = {
-    // materialized ONCE with the (band, bkey) layout declared (r18,
-    // KeyedStore scaladoc): the fingerprint aggregate + banding ran
-    // once per self-join side and the join exchanged both scans
-    val banded = graft.operators.KeyedStore.byKeys(
+  def simhashPairs(spark: SparkSession, d: String): DataFrame = Stage(spark) { st =>
+    // materialized ONCE, keyed by (band, bkey) (r18): the fingerprint
+    // aggregate + banding ran once per self-join side and the join
+    // exchanged both scans
+    val banded = st.byKeys(
       simhashBanded(simhashFingerprints(Tables.documents(spark, d)), 4),
       "band", "bkey")
     banded.select(col("doc_id").as("doc_a"), col("simhash").as("fa"), col("band"), col("bkey"))
@@ -1662,9 +1647,9 @@ object Dedup extends QueryPack {
     * audit joins fingerprints onto the pairs under test and filters,
     * at O(pairs audited) cost. At 100 TB the same shape audits any
     * pair sample against any band layout without a candidate join. */
-  def simhashVerified(spark: SparkSession, d: String): DataFrame = {
+  def simhashVerified(spark: SparkSession, d: String): DataFrame = Stage(spark) { st =>
     val docs = Tables.documents(spark, d)
-    val sh = hashedShingles(docs).localCheckpoint()
+    val sh = st.checkpoint(hashedShingles(docs))
     val exact = jaccardOf(sh, None).filter(col("jaccard") >= 0.8)
     val fp = simhashFingerprints(docs)
     val anyBandAgrees = (0 until 8)
@@ -1973,7 +1958,7 @@ object Dedup extends QueryPack {
     * row turns red if the store ever returns the wrong version, a torn
     * snapshot, or a lossy round-trip. The table dir is a per-call temp
     * under the SHARED materialization root
-    * ([[graft.operators.Materialize.tempDir]], delete-on-exit) — NOT
+    * ([[graft.operators.Stage.tempDir]], delete-on-exit) — NOT
     * driver-local /tmp, which executors cannot reach off-local
     * (VERDICT r10 #3 / ADVICE r10); the two publishes are tiny
     * (snapshot = the documents projection at the test SFs; at 100 TB a
@@ -1982,7 +1967,7 @@ object Dedup extends QueryPack {
   def snapshotTimeTravel(spark: SparkSession, d: String): DataFrame = {
     import graft.ingest.SnapshotStore
     val docs = Tables.documents(spark, d)
-    val dir = graft.operators.Materialize.tempDir(spark, "snap-tt")
+    val dir = Stage.tempDir(spark, "snap-tt")
     val va = SnapshotStore.publish(spark, dir, snapshotV1(docs))
     val vb = SnapshotStore.publish(spark, dir, snapshotV2(docs))
     diffSnapshots(

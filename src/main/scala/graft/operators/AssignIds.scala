@@ -48,10 +48,10 @@ object AssignIds {
     * sizes the range shuffle from the session's current
     * `spark.sql.shuffle.partitions`. */
   def withContiguousIds(df: DataFrame, orderCols: Seq[Column],
-      partitions: Int = 0): DataFrame = {
+      partitions: Int = 0): DataFrame = Stage(df.sparkSession) { st =>
     val spark = df.sparkSession
     import spark.implicits._
-    val ranged = Materialize( // pin placement; count + rank see one layout
+    val ranged = st.durable( // pin placement; count + rank see one layout
       df.repartitionByRange(sizedPartitions(df, partitions), orderCols: _*)
         .withColumn("__pid", spark_partition_id()))
     // partition-count-sized model state: pid -> rows in that partition
@@ -71,7 +71,7 @@ object AssignIds {
     * group columns. Placement is a pure function of the row's value
     * (frozen quantile boundaries + codegen'd binary-search bucket), so
     * the recompute hazard that forces [[withContiguousIds]] to pin its
-    * range-shuffled frame does not exist: no [[Materialize]], no
+    * range-shuffled frame does not exist: no durable pin, no
     * durable corpus write, one corpus shuffle total. */
   def withContiguousIdsBy(df: DataFrame, primary: Column,
       tieBreak: Column, primaryDesc: Boolean = false,

@@ -78,7 +78,7 @@ object BloomPrune {
     * direction discipline: the Bloom is built over the SMALL side and
     * filters the BIG side map-side (building it over history would
     * shuffle sketch-sized partial states per task and merge them
-    * serially — tools/AntiJoinAb measured that inversion 22× SLOWER
+    * serially — SCALE.md "The anti-join guard, measured" has that inversion 22× SLOWER
     * than the plain join at a 9.6M-row history; the committed shape
     * below measures flat):
     *

@@ -8,7 +8,7 @@ package graft.operators
   * twins) build TWO independent frames — an exact reference arm and the
   * approximate arm under test — and only join them at the very end.
   * Both arms run eager work during plan CONSTRUCTION (Lloyd collects,
-  * connected-components rounds, `Materialize`/`Staged` checkpoints), so
+  * connected-components rounds, [[Stage]] checkpoints), so
   * building them sequentially serializes two long chains of small jobs
   * while most of the cluster idles. Spark's scheduler happily runs jobs
   * from several driver threads at once (FIFO: later jobs back-fill
@@ -17,20 +17,22 @@ package graft.operators
   * the second arm's job-scheduling latency, on a cluster it back-fills
   * the tail exactly as the guide describes. Results are unchanged by
   * construction: each arm is deterministic and they share no mutable
-  * state (Staged scopes are per-frame with atomic release).
+  * state. Each arm runs inside the caller's [[Stage]] scope, so what an
+  * arm materializes is released by the caller's rule.
   *
   * Failure contract: both arms are awaited, the first failure
   * propagates (unwrapped) exactly as it would have sequentially. */
 object Concurrently {
 
   def pair[A, B](fa: => A, fb: => B): (A, B) = {
+    val (a, b) = (Stage.carried(fa), Stage.carried(fb))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       val fut1 = pool.submit(new java.util.concurrent.Callable[A] {
-        def call(): A = fa
+        def call(): A = a()
       })
       val fut2 = pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = fb
+        def call(): B = b()
       })
       (unwrap(fut1), unwrap(fut2))
     } finally pool.shutdown()

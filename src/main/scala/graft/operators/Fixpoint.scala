@@ -9,12 +9,14 @@ import org.apache.spark.sql.execution.graft.GraftPlanBridge
   * (label propagation and star contraction), k-core peeling, label
   * propagation, PageRank and both BPE trainers. A loop supplies only its
   * round body and its convergence test; the driver owns the round count,
-  * the early exit and the cap, the checkpoints a round makes, their
-  * release, and a job tag per round.
+  * the early exit and the cap, the release of superseded rounds, and a
+  * job tag per round. It runs in its own [[Stage]] scope: a frame every
+  * round reads is made through the scope, round state through
+  * [[Loop.checkpoint]].
   *
   * {{{
-  * val (labels, rounds) = Fixpoint(spark, "cc") { fx =>
-  *   val edges = fx.keep(pairs, eager = true)   // read by every round
+  * val (labels, rounds) = Fixpoint(spark, "cc") { (st, fx) =>
+  *   val edges = st.checkpoint(pairs)            // read by every round
   *   var labels = fx.checkpoint(init)            // round 0's state
   *   fx.loop() { r =>                             // r = 1, 2, …
   *     labels = fx.checkpoint(hop(edges, labels))
@@ -24,27 +26,17 @@ import org.apache.spark.sql.execution.graft.GraftPlanBridge
   * }
   * }}}
   *
-  * '''Lazy checkpoints.''' `checkpoint(df)` and `keep(df)` are lazy by
-  * default: the first action that reads the frame materializes it, so
-  * the action a round already runs — its convergence test, or the next
-  * round's — also writes the round's blocks, and a loop pays one job per
-  * round instead of two. A consumer in a strictly later action reads the
-  * blocks and cannot race their computation; a frame that one action
-  * reads through two branches (a fan-out) stays `eager`. Lineage still
-  * truncates at each materialization. Note that an AQE plan runs its map
-  * stages when it is checkpointed, lazily or not: only the last stage
-  * waits for the action.
+  * Round checkpoints are lazy by default: the action a round already
+  * runs — its convergence test, or the next round's — also writes the
+  * round's blocks, so a loop pays one job per round instead of two
+  * ([[Stage]] has the eagerness rule).
   *
   * '''Release.''' A checkpoint made in round r (round 0 before [[Loop.loop]])
   * is released once every checkpoint of the next round that made any is
   * materialized — every partition holds its block, read from the block
   * manager without a Spark job. A round that continues the loop must
   * therefore checkpoint the whole next state; the last round need not.
-  * At exit the driver releases every tracked frame, loop-lifetime ones
-  * included, that the returned frame cannot read
-  * ([[GraftPlanBridge.readable]]). What an unmaterialized returned frame
-  * still reads is left to the ContextCleaner, as for any lazy frame. On
-  * an exception every tracked frame is released.
+  * Everything else follows the scope's exit rule.
   *
   * '''Round labels.''' Round n's jobs carry the job tag `<name>.round=<n>`
   * (`spark.job.tags`), removed when the round ends. Tags are
@@ -55,17 +47,17 @@ import org.apache.spark.sql.execution.graft.GraftPlanBridge
   * the driver) belongs in this file, behind [[Loop.loop]]. */
 object Fixpoint {
 
-  /** Runs `body` on a fresh [[Loop]]; returns the frame it returns and the
-    * number of rounds its [[Loop.loop]] ran. */
-  def apply(spark: SparkSession, name: String)(body: Loop => DataFrame): (DataFrame, Int) = {
-    val fx = new Loop(spark, name)
-    var out: Option[DataFrame] = None
-    try { out = Some(body(fx)); (out.get, fx.rounds) } finally fx.exit(out)
-  }
+  /** Runs `body` on a fresh [[Loop]] in a fresh [[Stage]] scope; returns
+    * the frame it returns and the number of rounds its [[Loop.loop]] ran. */
+  def apply(spark: SparkSession, name: String)(
+      body: (Stage.Scope, Loop) => DataFrame): (DataFrame, Int) =
+    Stage(spark) { st =>
+      val fx = new Loop(spark, name, st)
+      (body(st, fx), fx.rounds)
+    }
 
-  final class Loop private[Fixpoint] (spark: SparkSession, name: String) {
+  final class Loop private[Fixpoint] (spark: SparkSession, name: String, st: Stage.Scope) {
     private var round = 0
-    private val lifetime, cached = mutable.Buffer.empty[DataFrame]
     // round-scoped checkpoints by the round that made them, oldest first
     private val byRound = mutable.Buffer.empty[(Int, mutable.Buffer[DataFrame])]
 
@@ -75,18 +67,9 @@ object Fixpoint {
     /** Checkpoints `df` as state of the current round. */
     def checkpoint(df: DataFrame, eager: Boolean = false): DataFrame = {
       if (byRound.lastOption.forall(_._1 != round)) byRound += round -> mutable.Buffer.empty
-      byRound.last._2 += df.localCheckpoint(eager)
+      byRound.last._2 += st.checkpoint(df, eager)
       byRound.last._2.last
     }
-
-    /** Checkpoints `df` for the loop's lifetime: every round reads it. */
-    def keep(df: DataFrame, eager: Boolean = false): DataFrame = track(df.localCheckpoint(eager))
-
-    /** Takes over a frame checkpointed elsewhere for the loop's lifetime. */
-    def track(df: DataFrame): DataFrame = { lifetime += df; df }
-
-    /** Caches `df` for the loop's lifetime. */
-    def cache(df: DataFrame): DataFrame = { cached += df.persist(); df }
 
     /** Runs rounds 1, 2, … until `step` returns true (the fixpoint) or
       * `cap` rounds have run. */
@@ -100,15 +83,8 @@ object Fixpoint {
         done = try step(round) finally sc.removeJobTag(tag)
         while (!done && round < cap && byRound.size >= 2 &&
             byRound(1)._2.forall(GraftPlanBridge.blocksOf(_).exists(GraftPlanBridge.materialized)))
-          byRound.remove(0)._2.foreach(GraftPlanBridge.releaseCheckpoint)
+          byRound.remove(0)._2.foreach(st.release)
       }
-    }
-
-    private[Fixpoint] def exit(out: Option[DataFrame]): Unit = {
-      val read = out.fold(Set.empty[Int])(GraftPlanBridge.readable)
-      def unread(df: DataFrame) = !GraftPlanBridge.blocksOf(df).exists(b => read(b.id))
-      (lifetime ++ byRound.flatMap(_._2)).filter(unread).foreach(GraftPlanBridge.releaseCheckpoint)
-      cached.filter(unread).foreach(_.unpersist())
     }
   }
 }

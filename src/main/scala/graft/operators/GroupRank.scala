@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *     every window partition is one data partition's slice of one
   *     group.
   *
-  * The ranked frame is durably pinned ([[Materialize]]) between the
+  * The ranked frame is durably pinned ([[Stage]]) between the
   * counts pass and the rank pass so both see one placement: range-
   * partition boundaries come from a row sample, so a recompute may
   * split differently and corrupt every offset. On a cluster that pin
@@ -57,10 +57,10 @@ object GroupRank {
     * constant parallelism ceiling (VERDICT r10 #1). */
   def withGroupRank(df: DataFrame, groupCols: Seq[String],
       orderCols: Seq[Column], out: String = "rk",
-      partitions: Int = 0, totalOut: Option[String] = None): DataFrame = {
+      partitions: Int = 0, totalOut: Option[String] = None): DataFrame = Stage(df.sparkSession) { st =>
     val parts = AssignIds.sizedPartitions(df, partitions)
     val rangeKey = groupCols.map(col) ++ orderCols
-    val ranged = Materialize(
+    val ranged = st.durable(
       df.repartitionByRange(parts, rangeKey: _*)
         .withColumn("__pid", spark_partition_id()))
     val counts = ranged.groupBy("__pid", groupCols: _*)
@@ -95,7 +95,7 @@ object GroupRank {
     * tiebreak)`, with the durable corpus-sized pin REMOVED.
     *
     * [[withGroupRank]] must pin its range-shuffled frame
-    * ([[Materialize]]) because `repartitionByRange` draws partition
+    * ([[Stage]]) because `repartitionByRange` draws partition
     * boundaries from a row SAMPLE: a recompute may split differently
     * and corrupt every offset, and off-local that pin is a full
     * corpus write to temp parquet (accepted in r10, retired here).
@@ -130,7 +130,7 @@ object GroupRank {
     * For scan-shaped lineage that is strictly cheaper than one durable
     * corpus write + two reads; for expensive lineage (tokenization,
     * joins) producing a NARROW rank input, the caller should stage
-    * that narrow frame itself (cache/[[Materialize]]) — staging is a
+    * that narrow frame itself ([[Stage]]) — staging is a
     * performance choice here, never a correctness requirement, which
     * is exactly the property the pinned form lacks.
     *
@@ -215,7 +215,7 @@ object GroupRank {
     *    — the optimizer's size there is the measured file bytes scaled
     *    by column pruning (no join/aggregate estimate products), and a
     *    real corpus input is always file-backed. An
-    *    `InMemoryRelation` ([[Staged]] inputs resolve to one once the
+    *    `InMemoryRelation` (staged inputs resolve to one once the
     *    cache substitution runs) is trusted iff the plan it CACHES is
     *    that same scan shape — checked on its physical plan
     *    (codegen/project/filter/columnar-to-row over a file scan), with

@@ -1,12 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.graft.GraftPlanBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
-import graft.operators.Fixpoint
+import graft.operators.{Fixpoint, Stage}
 import graft.functions.{FreqItemsAgg, QuantileSketchAgg}
 import OracleSafe._
 
@@ -98,7 +97,8 @@ object Extended extends QueryPack {
 
   /** Hot-key diagnostic — the profile you run BEFORE deciding whether a
     * join needs salting or AQE skew handling ([[graft.operators
-    * .SkewJoin]] / tools/SkewAb are the cures; this is the detector):
+    * .SkewJoin]] and AQE are the cures, measured in
+    * SCALE.md "Measured: skew join A/B on a planted hot key"; this is the detector):
     * per-key row counts reduced to the 5 hottest keys with their share
     * of all rows and skew ratio vs the mean key load. One hash
     * aggregate (map-side combinable) + a broadcast 1-row total + a
@@ -491,8 +491,8 @@ object Extended extends QueryPack {
     * sort-merge-shuffles the whole orders table; here a KB-scale Bloom
     * of the customer keys filters orders IN ITS SCAN TASKS, so only
     * the might-match sliver ever shuffles and the confirmed keys
-    * broadcast back into the exact anti join (AntiJoinAb measures the
-    * curve: history shuffle rows flat in history size). Equals the
+    * broadcast back into the exact anti join (SCALE.md "The anti-join guard, measured" has
+    * the curve: history shuffle rows flat in history size). Equals the
     * oracle's NOT EXISTS exactly: the Bloom only routes rows, never
     * answers. */
   def bloomAntiJoin(spark: SparkSession, d: String): DataFrame = {
@@ -608,9 +608,9 @@ object Extended extends QueryPack {
     * (all-integer compare). `m_balanced`: every approx bucket holds
     * 15–35% of customers (tests the boundaries themselves, not just
     * agreement). `n_customers` is data-derived for the oracle. */
-  def customerRfmApproxVerified(spark: SparkSession, d: String): DataFrame = {
-    val a = customerRfmApprox(spark, d).select(col("o_custkey"), col("m_q").as("ma"))
-      .localCheckpoint() // feeds both the agreement join and the balance agg
+  def customerRfmApproxVerified(spark: SparkSession, d: String): DataFrame = Stage(spark) { st =>
+    // feeds both the agreement join and the balance agg
+    val a = st.checkpoint(customerRfmApprox(spark, d).select(col("o_custkey"), col("m_q").as("ma")))
     val e = customerRfm(spark, d).select(col("o_custkey"), col("m_q").as("me"))
     val agree = a.join(e, "o_custkey")
       .agg(count(lit(1)).as("n_customers"),
@@ -715,7 +715,7 @@ object Extended extends QueryPack {
 
   /** Candidate id pairs from colliding variant hashes — the heaviest
     * shuffle, ids + 8-byte keys only. */
-  private[graft] def fuzzyCandidatesOf(names: DataFrame): DataFrame = {
+  private[graft] def fuzzyCandidatesOf(names: DataFrame): DataFrame = Stage(names.sparkSession) { st =>
     // r17 note: the ivfCandidatesAmong ids-only-repartition layout rule
     // was A/B'd here and REJECTED — pre-partitioning the variants by ID
     // made the pair distinct partition-local but AQE coalesced the
@@ -723,18 +723,10 @@ object Extended extends QueryPack {
     // emission + levenshtein verify ran nearly serial. r18 keeps that
     // lesson and removes the waste differently: the variant frame was
     // COMPUTED TWICE (once per self-join side) and exchanged twice by
-    // vh; it is now built once into a deserialized checkpoint whose
-    // vh-hash layout and in-partition vh order are DECLARED
-    // (checkpointHashPartitioned with a PINNED partition count — AQE
-    // cannot coalesce it to the serial layout the r17 A/B rejected),
-    // so the self-join runs exchange-free AND sort-free over N-way
-    // partitions.
-    val spark = names.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val variants = GraftPlanBridge.checkpointHashPartitioned(
-        fuzzyVariantsOf(names)
-          .repartition(nParts, col("vh")).sortWithinPartitions("vh"),
-        Seq("vh"), sortedByKeys = true)
+    // vh; keyed by vh with a PINNED partition count (AQE cannot coalesce
+    // it to the serial layout the r17 A/B rejected), the self-join runs
+    // exchange-free AND sort-free over N-way partitions.
+    val variants = st.byKeys(fuzzyVariantsOf(names), "vh")
     variants.select(col("id").as("id_a"), col("vh"))
       .join(variants.select(col("id").as("id_b"), col("vh")), Seq("vh"))
       .filter(col("id_a") < col("id_b"))
@@ -838,7 +830,7 @@ object Extended extends QueryPack {
     * once, at its smallest-(degree, id) corner's base edge — so the
     * naive a<b<c three-way self-join the DuckDB oracle runs yields the
     * identical per-node counts. */
-  def graphTriangles(spark: SparkSession, d: String): DataFrame =
+  def graphTriangles(spark: SparkSession, d: String): DataFrame = Stage(spark) { st =>
     // checkpoint the half frame ONCE (r18): trianglesOf consumes it in
     // two separate ACTIONS (the degree checkpoint, then the oriented
     // adjacency build) and Spark's exchange reuse does not cross jobs,
@@ -847,10 +839,10 @@ object Extended extends QueryPack {
     // explode chains in the stage profile). One write of the edge
     // sliver replaces a corpus re-scan — at 100 TB the same trade,
     // only bigger. kcore/pagerank/communities already materialize it
-    // exactly once via their own checkpoint/persist; they keep their
-    // plans.
-    trianglesOf(coOccurHalf(spark, d).localCheckpoint())
+    // exactly once via their own checkpoint; they keep their plans.
+    trianglesOf(st.checkpoint(coOccurHalf(spark, d)))
       .orderBy(col("triangles").desc, col("node")).limit(100)
+  }
 
   /** The orientation + adjacency-intersection pipeline over a `pa < pb`
     * half frame. Exposed separately so the unit spec can feed
@@ -881,7 +873,7 @@ object Extended extends QueryPack {
     * `na` list, Σ out-deg² = 2·wedges entries, the Suri–Vassilvitskii
     * bound — while this orientation keeps it balanced. */
   private[graft] def trianglesOf(half: DataFrame,
-      bcastCap: Long = GraphBroadcastRowCap): DataFrame = {
+      bcastCap: Long = GraphBroadcastRowCap): DataFrame = Stage(half.sparkSession) { st =>
     // degree over the UNDIRECTED graph: each half edge counts for both
     // endpoints; O(nodes) rows. "Model-state-sized" stops being true on
     // a big enough graph — the r8 256× sweep (306M edges, ~50M nodes)
@@ -890,10 +882,10 @@ object Extended extends QueryPack {
     // hints are CONDITIONAL on measured sizes: one tiny aggregate
     // yields node and edge counts, and past the caps the same plan
     // shuffle-joins on the node key (linear, no driver collection).
-    val deg = half.select(col("pa").as("n"))
+    // reused: size probe, two orient joins
+    val deg = st.checkpoint(half.select(col("pa").as("n"))
       .union(half.select(col("pb").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("dg"))
-      .localCheckpoint() // reused: size probe, two orient joins
+      .groupBy("n").agg(count(lit(1)).as("dg")))
     // coalesce: on an EMPTY edge frame sum aggregates to null and a
     // bare getLong would NPE — an empty graph has zero edges, not none
     val sizes = deg.agg(count(lit(1)), coalesce(sum(col("dg")), lit(0L))).head()
@@ -914,9 +906,9 @@ object Extended extends QueryPack {
         .otherwise(struct(col("pb").as("src"), col("pa").as("dst")))
         .as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val adj = oriented.groupBy("src")
-      .agg(sort_array(collect_list(col("dst"))).as("nd"))
-      .localCheckpoint() // probe side AND (size-gated) broadcast side
+    // probe side AND (size-gated) broadcast side
+    val adj = st.checkpoint(oriented.groupBy("src")
+      .agg(sort_array(collect_list(col("dst"))).as("nd")))
     val tri = adj
       .select(col("src").as("a"), col("nd").as("na"),
         explode(col("nd")).as("b"))
@@ -952,17 +944,18 @@ object Extended extends QueryPack {
     * here collects data. Int64 headroom: Σjk ≤ m·dmax² — at 1e9 edges
     * and dmax 1e4 that is 1e17, inside int64; corpora past that scale
     * the moments to DECIMAL(38,0) before the products. */
-  def graphDegreeStats(spark: SparkSession, d: String): DataFrame =
+  def graphDegreeStats(spark: SparkSession, d: String): DataFrame = Stage(spark) { st =>
     // same two-action double-build as graphTriangles (deg checkpoint +
     // moment pass) — checkpoint once (r18)
-    degreeStatsOf(coOccurHalf(spark, d).localCheckpoint())
+    degreeStatsOf(st.checkpoint(coOccurHalf(spark, d)))
+  }
 
   private[graft] def degreeStatsOf(half: DataFrame,
-      bcastCap: Long = GraphBroadcastRowCap): DataFrame = {
-    val deg = half.select(col("pa").as("n"))
+      bcastCap: Long = GraphBroadcastRowCap): DataFrame = Stage(half.sparkSession) { st =>
+    // reused: size probe + two orient joins
+    val deg = st.checkpoint(half.select(col("pa").as("n"))
       .union(half.select(col("pb").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("dg"))
-      .localCheckpoint() // reused: size probe + two orient joins
+      .groupBy("n").agg(count(lit(1)).as("dg")))
     // size-gated hint, same reason as trianglesOf: past the cap the
     // node frame no longer survives driver-collected broadcast
     // materialization, and the shuffle join is the right plan anyway
@@ -1067,8 +1060,8 @@ object Extended extends QueryPack {
 
   private[graft] def kcoreOf(half: DataFrame, k: Int, rounds: Int,
       bcastCap: Long = GraphBroadcastRowCap): DataFrame =
-    Fixpoint(half.sparkSession, "kcore") { fx =>
-      val edges = fx.keep(half.select(col("pa"), col("pb")), eager = true)
+    Fixpoint(half.sparkSession, "kcore") { (st, fx) =>
+      val edges = st.checkpoint(half.select(col("pa"), col("pb")))
       var deg = fx.checkpoint(edges.select(col("pa").as("n"))
         .union(edges.select(col("pb").as("n")))
         .groupBy("n").agg(count(lit(1)).as("dg")), eager = true)
@@ -1156,35 +1149,21 @@ object Extended extends QueryPack {
   private[graft] def lpaOf(half: DataFrame,
       rounds: Int = LpaRounds,
       bcastCap: Long = GraphBroadcastRowCap): DataFrame =
-    Fixpoint(half.sparkSession, "lpa") { fx =>
-      // DESERIALIZED checkpoint with the partitioning DECLARED (r18):
-      // the r17 form persisted this frame (columnar cache) because a
-      // plain localCheckpoint drops the hash partitioning and every
-      // round would re-exchange the vote stream — but the columnar
-      // decode measured ~2× the whole round cost at sf0.1
-      // (graph_communities exec 56.6 core-s persisted vs 29.5 with
-      // deserialized blocks, where the latter paid THREE extra vote-
-      // stream shuffles: 39 → 117 MB written). checkpointHashPartitioned
-      // is the missing corner: UnsafeRow blocks AND a truthful
-      // HashPartitioning(a, N) on the LogicalRDD — N pinned explicitly
-      // (sessions' byte-derived shuffle count) so AQE cannot coalesce
-      // the layout the declaration promises. Both vote aggregations
-      // stay partition-local (zero exchange, the LpaSpec pin), and the
-      // rounds read cheap deserialized blocks.
-      val nParts = half.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      val edges = fx.track(GraftPlanBridge.checkpointHashPartitioned(
+    Fixpoint(half.sparkSession, "lpa") { (st, fx) =>
+      // keyed by `a` (r18): both vote aggregations stay partition-local
+      // (zero exchange, the LpaSpec pin). The r17 columnar cache kept
+      // the layout too, but its decode measured ~2× the whole round
+      // cost at sf0.1 (graph_communities exec 56.6 core-s vs 29.5).
+      // Sorted by the PROBE key, not the partitioning key: each round's
+      // broadcast-hash probe then walks the label map in near-sorted
+      // order instead of randomly. Once |V| outgrows cache that's the
+      // round bottleneck — ScaleR8's A/B reads 33% off every vote round
+      // at 16× and 64× the bench graph (checksum-identical labels), for
+      // one partition-local sort paid once at materialize.
+      val edges = st.byKeys(
           half.select(col("pa").as("a"), col("pb").as("b"))
-            .union(half.select(col("pb").as("a"), col("pa").as("b")))
-            .repartition(nParts, col("a"))
-            // sorted by the PROBE key, not the partitioning key: each
-            // round's broadcast-hash probe then walks the label map in
-            // near-sorted order instead of randomly. Once |V| outgrows
-            // cache that's the round bottleneck — ScaleR8's A/B reads
-            // 33% off every vote round at 16× and 64× the bench graph
-            // (checksum-identical labels), for one partition-local sort
-            // paid once at materialize.
-            .sortWithinPartitions("b"),
-          Seq("a")))
+            .union(half.select(col("pb").as("a"), col("pa").as("b"))),
+          Seq("a"), sortBy = Seq("b"))
       var labels = fx.checkpoint(edges.select(col("a").as("node")).distinct()
         .select(col("node"), col("node").as("label")), eager = true)
       // the broadcast-cliff guard (see GraphBroadcastRowCap): past the
@@ -1196,7 +1175,7 @@ object Extended extends QueryPack {
       // form is byte-identical to before
       val bcast = labels.count() <= bcastCap
       val edgesJoin =
-        if (bcast) edges else fx.cache(edges.repartition(col("b")))
+        if (bcast) edges else st.stage(edges.repartition(col("b")))
       if (!bcast) edgesJoin.count()
       fx.loop(rounds) { _ =>
         labels = fx.checkpoint(lpaRound(edgesJoin, labels, bcast), eager = true)
@@ -1246,7 +1225,7 @@ object Extended extends QueryPack {
   private[graft] def pagerankOf(pairs: DataFrame,
       iters: Int = PagerankIters,
       bcastCap: Long = GraphBroadcastRowCap): DataFrame =
-    Fixpoint(pairs.sparkSession, "pagerank") { fx =>
+    Fixpoint(pairs.sparkSession, "pagerank") { (st, fx) =>
       // Adjacency-array form: the symmetric edge list folds into one row
       // per node — (node, out-neighbor array, degree = array size). Each
       // round then joins the broadcast rank frame against O(nodes) array
@@ -1258,10 +1237,10 @@ object Extended extends QueryPack {
       // A/B shows that parallelism is sufficient for the loop's explode
       // and an explicit-N pin only adds exchange cost, unlike the
       // byte-tiny-but-CPU-heavy Multimodal id frames where pinning wins)
-      val adj = fx.keep(pairs.groupBy(col("pa"))
+      val adj = st.checkpoint(pairs.groupBy(col("pa"))
         .agg(collect_list(col("pb")).as("nbrs"))
         .select(col("pa"), col("nbrs"),
-          size(col("nbrs")).cast("long").as("d")), eager = true)
+          size(col("nbrs")).cast("long").as("d")))
       val n = adj.count()
       // empty graph: no nodes, no ranks — and no 1e12/0 below
       if (n == 0) adj.sparkSession.emptyDataFrame
@@ -1276,7 +1255,7 @@ object Extended extends QueryPack {
         // adjacency table hash-partitions by pa ONCE and each round
         // shuffles only the O(nodes) rank side into it.
         val bcast = n <= bcastCap
-        val adjLoop = if (bcast) adj else fx.cache(adj.repartition(col("pa")))
+        val adjLoop = if (bcast) adj else st.stage(adj.repartition(col("pa")))
         if (!bcast) adjLoop.count()
         fx.loop(iters) { _ =>
           // the next round's broadcast build (or, on the last round, the

@@ -3,7 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{DetMix, VectorFunctions}
-import graft.operators.Materialize
+import graft.operators.Stage
 
 /** Two-level coarse quantizer — the bounded-model replacement for the
   * flat `trainCentroids`-everywhere IVF path (VERDICT r9 #1).
@@ -42,7 +42,7 @@ import graft.operators.Materialize
   * driver scale the sample floors swallow the whole corpus
   * (buckets = 1), so the training data is the full corpus there —
   * sampling only engages where it is needed. All reused intermediates
-  * are durably materialized ([[Materialize]]), not localCheckpoint'd.
+  * are durably materialized ([[Stage]]), not checkpointed.
   *
   * Determinism end to end: Lehmer-mix sampling, id-seeded Lloyd at
   * both levels, min-struct argmax tie-breaks, and the repo's
@@ -85,11 +85,11 @@ object HierQuantizer {
   private[graft] val SubTrainCap = 1L << 20
   private val SampleFloor = 1024L
 
-  private def sampled(all: DataFrame, n: Long, target: Long): DataFrame = {
+  private def sampled(st: Stage.Scope, all: DataFrame, n: Long, target: Long): DataFrame = {
     val buckets = math.max(1L, n / math.max(SampleFloor, target))
     val parts = math.max(8L, math.min(n, target) / 65536L + 1L).toInt
-    if (buckets == 1L) Materialize(all.repartition(parts))
-    else Materialize(
+    if (buckets == 1L) st.durable(all.repartition(parts))
+    else st.durable(
       all.filter(DetMix.lehmerMix(col("vec_id")) % buckets === 0)
         .repartition(parts))
   }
@@ -97,18 +97,18 @@ object HierQuantizer {
   /** Train the two-level model. `all` must carry (vec_id, v); `n` is
     * its count (callers already have it — no second scan). */
   def train(spark: SparkSession, all: DataFrame, n: Long, nlist: Int,
-      iters: Int = 2): Model = {
+      iters: Int = 2): Model = Stage(spark) { st =>
     val k1 = math.max(1, ceilIsqrt(nlist))
     val k2 = math.max(1, (nlist + k1 - 1) / k1)
     val base = all.select(col("vec_id"), col("v"))
 
     // ---- level 1: k1 super-centroids on an O(64·k1) sample ----
-    val supSample = sampled(base, n, SupPerCell * k1)
+    val supSample = sampled(st, base, n, SupPerCell * k1)
     val supers = Similarity.trainCentroids(spark, supSample, k1, iters)
       .select(col("cid").as("sup"), col("cv").as("sv"))
 
     // ---- level 2: k2 sub-centroids per super-cell ----
-    val subSample = sampled(base, n, math.min(SubTrainCap, SubPerCell * nlist))
+    val subSample = sampled(st, base, n, math.min(SubTrainCap, SubPerCell * nlist))
     // single-super assignment of the training sample: per-row argmax
     // against the plan-time super model ([[graft.functions
     // .NearestCellsExpr]], r17) — the supers are O(√nlist)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType}
 import graft.functions.{NearestCellsExpr, PqNearestCodeExpr, VectorFunctions}
-import graft.operators.Materialize
+import graft.operators.Stage
 
 /** The one k-means (Lloyd) trainer behind every quantizer, over
   * GROUPED `(g, id, v)` rows: each group trains its own `k` cells.
@@ -70,7 +70,7 @@ private[graft] object Lloyd {
     * `iters` rounds. Returns (g, cid, cv) sorted by (g, cid). A row with
     * a null group, id or vector carries no signal and is dropped. */
   def train(rows: DataFrame, k: Int, iters: Int,
-      assign: Assign): Seq[(Long, Long, Seq[Double])] = {
+      assign: Assign): Seq[(Long, Long, Seq[Double])] = Stage(rows.sparkSession) { st =>
     val frame = rows.select(col("g").cast("long"), col("id").cast("long"), col("v"))
       .na.drop()
     val sample =
@@ -78,7 +78,7 @@ private[graft] object Lloyd {
       else Some(frame.limit(RowCap + 1).collect()).filter(_.length <= RowCap)
     val arm = sample match {
       case Some(rs) => Local(rs.map(vec))
-      case None => Distributed(Materialize(frame))
+      case None => Distributed(st.durable(frame))
     }
     run(arm, k, iters, assign)
   }

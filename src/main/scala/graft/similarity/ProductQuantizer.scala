@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.{PqAllCodesExpr, VectorFunctions}
+import graft.operators.Stage
 
 /** Product quantization (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search"): split each (unit-normalized) vector into
@@ -103,20 +104,16 @@ object ProductQuantizer {
     * table; candidates join it on (m, code) and sum M entries. */
   def adcTopK(spark: SparkSession, vecs: DataFrame,
       m: Int, subDim: Int, k: Int, iters: Int,
-      isQuery: org.apache.spark.sql.Column, topK: Int): DataFrame = {
-    // one normalize, materialized ONCE via localCheckpoint: training
-    // (an eager collect of the sub-vector rows), encode, and the LUT all
-    // read the materialized unit-vector blocks instead of re-running
-    // the normalize pipeline (r17: the checkpoint moved from the
-    // exploded sub-vector frame to the 1-row-per-vector unit frame —
-    // encode is now a per-row expression over `u`, so the explode only
-    // exists where Lloyd training and the query LUT need it). Unlike an
-    // explicit cache (which would have to outlive this call to benefit
-    // the lazy search plan, i.e. leak until the caller's clearCache),
-    // checkpoint blocks are released by the ContextCleaner as soon as
-    // the returned plan is GC'd.
+      isQuery: org.apache.spark.sql.Column, topK: Int): DataFrame = Stage(spark) { st =>
+    // one normalize, materialized ONCE: training (an eager collect of
+    // the sub-vector rows), encode, and the LUT all read the
+    // materialized unit-vector blocks instead of re-running the
+    // normalize pipeline (r17: the checkpoint moved from the exploded
+    // sub-vector frame to the 1-row-per-vector unit frame — encode is
+    // now a per-row expression over `u`, so the explode only exists
+    // where Lloyd training and the query LUT need it).
     // LAZY checkpoint — see adcTopKAmong's note
-    val uf = unitVectors(vecs).localCheckpoint(false)
+    val uf = st.checkpoint(unitVectors(vecs), eager = false)
     val cents = trainFrom(spark, subOfU(uf, m, subDim), k, iters)
     val codes = encodeU(uf.join(vecs.filter(!isQuery).select("vec_id"), "vec_id"),
       cents, subDim)
@@ -225,11 +222,11 @@ object ProductQuantizer {
   def adcTopKAmong(spark: SparkSession, vecs: DataFrame,
       candidates: DataFrame, // (query_id, neighbor_id)
       m: Int, subDim: Int, k: Int, iters: Int,
-      isQuery: org.apache.spark.sql.Column, topK: Int): DataFrame = {
+      isQuery: org.apache.spark.sql.Column, topK: Int): DataFrame = Stage(spark) { st =>
     // LAZY checkpoint: the training collect right below is the first
     // action through `uf`, so one job materializes the normalize AND
     // reads the training rows off it; every later stage reads the blocks
-    val uf = unitVectors(vecs).localCheckpoint(false)
+    val uf = st.checkpoint(unitVectors(vecs), eager = false)
     val cents = trainFrom(spark, subOfU(uf, m, subDim), k, iters)
     val codes = encodeU(uf.join(vecs.filter(!isQuery).select("vec_id"), "vec_id"),
       cents, subDim)

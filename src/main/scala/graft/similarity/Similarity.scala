@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.Stage
 import graft.functions.{LshBucketKeysExpr, NearestCellsExpr, VectorFunctions}
 import graft.queries.QueryPack
 
@@ -58,13 +59,10 @@ object Similarity extends QueryPack {
     * the gate 6× slower at 64× from exactly this). One tiny shuffle
     * lands the bounded probe set in a model-sized partition count,
     * and the checkpoint materializes it once for its several
-    * downstream uses (self-join sides + CC nodes). Durable off-local
-    * ([[graft.operators.Materialize]], VERDICT r9 #2): the gates reuse
-    * this frame across several long plans, exactly where an
-    * unreplicated localCheckpoint block lost with its executor would
-    * fail the job. */
+    * downstream uses (self-join sides + CC nodes). Durable (VERDICT
+    * r9 #2): the gates reuse this frame across several long plans. */
   private[graft] def probeFrame(all: DataFrame, buckets: Long): DataFrame =
-    graft.operators.Materialize(all.filter(inProbe(buckets)).repartition(8))
+    Stage(all.sparkSession)(_.durable(all.filter(inProbe(buckets)).repartition(8)))
 
   /** Exact near-duplicate pairs: all (a<b) pairs with cosine >= 0.4.
     *
@@ -243,7 +241,8 @@ object Similarity extends QueryPack {
     * join), so it is staged once — the IVF form's candidate generation
     * and cosine scoring must not replay 3× (r14-session-2 review). */
   private[graft] def bitextMarginTail(scoredIn: DataFrame): DataFrame =
-    graft.operators.Staged.scoped(scoredIn) { scored =>
+    Stage(scoredIn.sparkSession) { st =>
+      val scored = st.stage(scoredIn)
       // MATERIALIZE the stage before the terminal action reads it
       // (r18, guide §7.1 fetch-wait triage): the margin plan scans
       // `scored` through THREE subtrees (both kNN-mean heaps + the
@@ -300,8 +299,7 @@ object Similarity extends QueryPack {
     * cannot drift between the two rules), both argmax cuts through the
     * bounded-heap [[graft.plans.TopKPerKey]], consistency as an id-only
     * left-semi join — no new corpus shape. The margin frame feeds two
-    * cuts, so it is staged alongside the scored frame (both
-    * self-release after the terminal action). Fully deterministic
+    * cuts, so it is staged alongside the scored frame. Fully deterministic
     * (id-ordered ties at both cuts) ⇒ hash-checked against the DuckDB
     * mirror. */
   def mineBitextMutual(spark: SparkSession, d: String): DataFrame =
@@ -310,20 +308,18 @@ object Similarity extends QueryPack {
   /** The bidirectional selection over ANY scored candidate frame —
     * the same seam shape as [[bitextMarginTail]]. Both dependent
     * stages (scored feeds the margin frame 3×; the margin frame feeds
-    * both argmax cuts) ride one exception-safe [[graft.operators.Staged.scoped2]]
-    * scope (ADVICE r15: bare stage+releaseAfter leaked both persists
-    * if construction threw). */
+    * both argmax cuts) are staged in one scope. */
   private[graft] def bitextMutualTail(scoredIn: DataFrame): DataFrame =
-    graft.operators.Staged.scoped2(scoredIn) { scored =>
+    Stage(scoredIn.sparkSession) { st =>
       // materialize each stage BEFORE anything scans it concurrently
       // (r18; the bitextMarginTail scaladoc has the measured numbers):
       // the margin frame reads `scored` through three subtrees and is
       // itself read by both argmax cuts in the terminal action —
       // lazily persisted, every one of those concurrent scans blocks
       // on the block-store lock while one task computes the partition
+      val scored = st.stage(scoredIn)
       scored.count()
-      bitextMargins(scored)
-    } { (_, mar) =>
+      val mar = st.stage(bitextMargins(scored))
       mar.count()
       val bestPerSrc = graft.plans.TopKPerKey(mar, Seq("src_id"),
         Seq(col("margin").desc, col("tgt_id").asc), k = 1)
@@ -477,14 +473,13 @@ object Similarity extends QueryPack {
     * [[recallGate]]: `meets_floor` flips and hash-fails on a real
     * regression (broken cells, lost candidates, margin drift past the
     * threshold band). */
-  def mineBitextIvfVerified(spark: SparkSession, d: String): DataFrame = {
+  def mineBitextIvfVerified(spark: SparkSession, d: String): DataFrame = Stage(spark) { st =>
     // both arms are independent until the semi-join; their construction
     // runs eager chains (exact cross + margin heaps vs k-means collects
     // + shortlist margins), so build them concurrently
     // ([[graft.operators.Concurrently]], r17 — guide §2.6)
     val (exact, shortlist) = graft.operators.Concurrently.pair(
-      graft.operators.Materialize(
-        mineBitext(spark, d).select("src_id", "tgt_id")),
+      st.durable(mineBitext(spark, d).select("src_id", "tgt_id")),
       mineBitextIvf(spark, d).select("src_id", "tgt_id"))
     val found = exact.join(shortlist, Seq("src_id", "tgt_id"), "left_semi")
     exact.agg(count(lit(1)).as("n_exact"))
@@ -604,12 +599,11 @@ object Similarity extends QueryPack {
     * oracle-recomputed by the DuckDB mirror): the shortlist form must
     * recover at least [[BitextMutualIvfFloor]] of the exactly-mined
     * mutual pairs. Same contract as [[mineBitextIvfVerified]]. */
-  def mineBitextMutualIvfVerified(spark: SparkSession, d: String): DataFrame = {
+  def mineBitextMutualIvfVerified(spark: SparkSession, d: String): DataFrame = Stage(spark) { st =>
     // independent arms built concurrently — same rationale as
     // [[mineBitextIvfVerified]] (guide §2.6, r17)
     val (exact, shortlist) = graft.operators.Concurrently.pair(
-      graft.operators.Materialize(
-        mineBitextMutual(spark, d).select("src_id", "tgt_id")),
+      st.durable(mineBitextMutual(spark, d).select("src_id", "tgt_id")),
       mineBitextMutualIvf(spark, d).select("src_id", "tgt_id"))
     val found = exact.join(shortlist, Seq("src_id", "tgt_id"), "left_semi")
     exact.agg(count(lit(1)).as("n_exact"))
@@ -1281,21 +1275,20 @@ object Similarity extends QueryPack {
     * cannot run k-means, so the sketch side itself stays rows-only —
     * this is exactly the checkable statement that remains.) */
   private[graft] def recallGate(spark: SparkSession, d: String,
-      sketch: => DataFrame, floor: Double): DataFrame = {
+      sketch: => DataFrame, floor: Double): DataFrame = Stage(spark) { st =>
     // materialize the exact top-k once: without it the brute-force
     // ranked scan (the gate's heaviest stage) would run twice — once
     // under each count. The materialized frame is queries×k rows
-    // (durable off-local — Materialize, VERDICT r9 #2).
+    // (durable, VERDICT r9 #2).
     // `sketch` is BY-NAME and constructed concurrently with the exact
     // arm (r17; guide §2.6): the approximate arm's construction runs
     // eager work (counts, Lloyd collects, assignment checkpoints) and
-    // the exact arm's Materialize is a brute-force ranked scan — two
+    // the exact arm's materialization is a brute-force ranked scan — two
     // independent job chains that previously serialized at every one
     // of the six recallGate call sites. Same Concurrently.pair idiom
     // (and safety argument) as the tranche-2 gates.
     val (exact, sk) = graft.operators.Concurrently.pair(
-      graft.operators.Materialize(
-        annTopK(spark, d).select("query_id", "neighbor_id")),
+      st.durable(annTopK(spark, d).select("query_id", "neighbor_id")),
       sketch)
     val found = exact.join(sk.select("query_id", "neighbor_id"),
       Seq("query_id", "neighbor_id"), "left_semi")
@@ -1596,12 +1589,12 @@ object Similarity extends QueryPack {
     * (table, bucket) key. Split out so [[graft.tools.ScaleR7]] can
     * count candidates with exactly the query's own join. */
   private[graft] def lshCandidatesOf(vectors: DataFrame,
-      tables: Int, bits: Int): DataFrame = {
-    // bucket frame materialized ONCE with its (tbl, bucket) layout
-    // declared (r18, KeyedStore scaladoc): the LSH key expression ran
-    // once per self-join side and the join exchanged both scans
+      tables: Int, bits: Int): DataFrame = Stage(vectors.sparkSession) { st =>
+    // bucket frame materialized ONCE, keyed by (tbl, bucket) (r18): the
+    // LSH key expression ran once per self-join side and the join
+    // exchanged both scans
     val keys = LshBucketKeysExpr.column(col("v"), planesFor(tables, bits), bits)
-    val base = graft.operators.KeyedStore.byKeys(vectors
+    val base = st.byKeys(vectors
       .select(col("vec_id"), posexplode(keys).as(Seq("tbl", "bucket"))), "tbl", "bucket")
     base.select(col("vec_id").as("vec_a"), col("tbl"), col("bucket"))
       .join(base.select(col("vec_id").as("vec_b"), col("tbl"), col("bucket")),
@@ -2059,15 +2052,15 @@ object Similarity extends QueryPack {
     * encode, drifted probe) turns the row red. The recall-floor columns
     * ride along from [[recallGate]] so the served path also carries the
     * exact-top-5 recall bound with `n_exact` data-derived. */
-  def annIvfPqServedVerified(spark: SparkSession, d: String): DataFrame = {
+  def annIvfPqServedVerified(spark: SparkSession, d: String): DataFrame = Stage(spark) { st =>
     // one in-query build only: annIvfPq trains at plan-construction time
     // (trainCentroids collects per Lloyd round), so both exceptAll sides
     // must share one materialized frame (durable off-local, VERDICT r9 #2).
     // The served read/first-build and the in-query train are independent
     // chains — built concurrently (guide §2.6, r17)
     val (served, inq) = graft.operators.Concurrently.pair(
-      graft.operators.Materialize(annIvfPqServed(spark, d)),
-      graft.operators.Materialize(annIvfPq(spark, d)))
+      st.durable(annIvfPqServed(spark, d)),
+      st.durable(annIvfPq(spark, d)))
     val diff = served.exceptAll(inq).unionAll(inq.exceptAll(served))
     recallGate(spark, d, served, 0.6)
       .crossJoin(diff.agg(count(lit(1)).as("n_mismatch")))

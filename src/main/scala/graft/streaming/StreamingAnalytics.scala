@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
+import graft.operators.Stage
 import graft.functions.{FreqItemsAgg, LshBucketKeysExpr, MinHashBandsRowExpr, VectorFunctions}
 
 /** Incremental maintenance of the dashboard aggregates (the alternative
@@ -281,53 +282,54 @@ object StreamingAnalytics {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        // materialized once: the gate's tokenize + marker scan feeds the
-        // reject anti-join, the triage union, and both sink writes
-        val gated = graft.text.TextAnalysis.qualityGateOf(batch)
-          .select("doc_id", "text").localCheckpoint()
-        val rejected = batch.select("doc_id", "text")
-          .join(gated.select("doc_id"), Seq("doc_id"), "left_anti")
-          .withColumn("reason", lit("quality_gate"))
-        // only a MISSING/EMPTY pass table means "first batch, empty
-        // history" — a real read failure (transient FS error, corrupt
-        // footer) must fail the batch, not silently wipe the dedup
-        // history, so the probe checks for data files rather than
-        // swallowing read exceptions
-        val passDir = new org.apache.hadoop.fs.Path(passPath)
-        val fs = passDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasData = fs.exists(passDir) && fs.globStatus(
-          new org.apache.hadoop.fs.Path(passPath, "*.parquet")).nonEmpty
-        val history =
-          if (hasData) spark.read.parquet(passPath).select("doc_id", "text")
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType.fromDDL(
-              "doc_id BIGINT, text STRING"))
-        // doc_id-level idempotency: a crash-replayed batch re-arrives
-        // with ids its first attempt already appended — anti-join them
-        // out so the pass table never holds duplicate rows (and so the
-        // triage never sees the same id on both sides, which would
-        // double that doc's shingle counts)
-        val arriving =
-          if (bloomHistoryGuard)
-            graft.operators.BloomPrune.prunedAntiJoin(
-              gated, "doc_id", history, "doc_id", expectedBatchDocs)
-          else gated
-            .join(history.select("doc_id"), Seq("doc_id"), "left_anti")
-        val labeled = graft.dedup.Dedup.dedupIncrementalOf(
-          history.withColumn("source", lit("history"))
-            .unionByName(arriving.withColumn("source", lit("arriving"))),
-          batchSource = "arriving")
-          .join(gated, "doc_id") // re-attach text for the sinks
-          .localCheckpoint()     // one triage run serves both writes
-        labeled.filter(col("status") === "unique")
-          .select("doc_id", "text")
-          .write.mode("append").parquet(passPath)
-        labeled.filter(col("status") =!= "unique")
-          .select(col("doc_id"), col("text"), col("status").as("reason"))
-          .unionByName(rejected)
-          .write.mode("append").parquet(quarantinePath)
-        ()
+        // what the batch materializes is released when it ends
+        Stage(spark) { st =>
+          // materialized once: the gate's tokenize + marker scan feeds the
+          // reject anti-join, the triage union, and both sink writes
+          val gated = st.checkpoint(graft.text.TextAnalysis.qualityGateOf(batch)
+            .select("doc_id", "text"))
+          val rejected = batch.select("doc_id", "text")
+            .join(gated.select("doc_id"), Seq("doc_id"), "left_anti")
+            .withColumn("reason", lit("quality_gate"))
+          // only a MISSING/EMPTY pass table means "first batch, empty
+          // history" — a real read failure (transient FS error, corrupt
+          // footer) must fail the batch, not silently wipe the dedup
+          // history, so the probe checks for data files rather than
+          // swallowing read exceptions
+          val passDir = new org.apache.hadoop.fs.Path(passPath)
+          val fs = passDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val hasData = fs.exists(passDir) && fs.globStatus(
+            new org.apache.hadoop.fs.Path(passPath, "*.parquet")).nonEmpty
+          val history =
+            if (hasData) spark.read.parquet(passPath).select("doc_id", "text")
+            else spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              org.apache.spark.sql.types.StructType.fromDDL(
+                "doc_id BIGINT, text STRING"))
+          // doc_id-level idempotency: a crash-replayed batch re-arrives
+          // with ids its first attempt already appended — anti-join them
+          // out so the pass table never holds duplicate rows (and so the
+          // triage never sees the same id on both sides, which would
+          // double that doc's shingle counts)
+          val arriving =
+            if (bloomHistoryGuard)
+              graft.operators.BloomPrune.prunedAntiJoin(
+                gated, "doc_id", history, "doc_id", expectedBatchDocs)
+            else gated
+              .join(history.select("doc_id"), Seq("doc_id"), "left_anti")
+          val labeled = st.checkpoint(graft.dedup.Dedup.dedupIncrementalOf(
+            history.withColumn("source", lit("history"))
+              .unionByName(arriving.withColumn("source", lit("arriving"))),
+            batchSource = "arriving")
+            .join(gated, "doc_id")) // re-attach text; one triage run serves both writes
+          labeled.filter(col("status") === "unique")
+            .select("doc_id", "text")
+            .write.mode("append").parquet(passPath)
+          labeled.filter(col("status") =!= "unique")
+            .select(col("doc_id"), col("text"), col("status").as("reason"))
+            .unionByName(rejected)
+            .write.mode("append").parquet(quarantinePath)
+        }
       }
       .start()
 
@@ -382,34 +384,36 @@ object StreamingAnalytics {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        // in-batch dedup FIRST: two files delivering the same vec_id in
-        // one trigger would both survive the table anti-join and append
-        // twice — and a duplicated posting row doubles that vector's
-        // summed ADC distance in the probe (codes join is not deduped),
-        // evicting it from the shortlist. Not mere degradation.
-        val vs = batch.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-          .dropDuplicates("vec_id")
-        // missing/empty table = first batch; a real read failure must
-        // fail the batch, not wipe the idempotency guard (the
-        // curateStream probe rule)
-        val postDir = new org.apache.hadoop.fs.Path(postingPath)
-        val fs = postDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasData = fs.exists(postDir) && fs.globStatus(
-          new org.apache.hadoop.fs.Path(postingPath, "*.parquet")).nonEmpty
-        val arriving =
-          (if (hasData)
-            vs.join(spark.read.parquet(postingPath).select("vec_id"),
-              Seq("vec_id"), "left_anti")
-          else vs).localCheckpoint() // one materialization feeds assign + encode
-        val assigned = graft.similarity.Similarity
-          .nearestLists(coarse, arriving, "v", 1, "list_id")
-          .select("vec_id", "list_id")
-        val codes = graft.similarity.ProductQuantizer
-          .encodeAll(arriving, m, subDim, codebook)
-        assigned.join(codes, "vec_id")
-          .write.mode("append").parquet(postingPath)
-        ()
+        // what the batch materializes is released when it ends
+        Stage(spark) { st =>
+          // in-batch dedup FIRST: two files delivering the same vec_id in
+          // one trigger would both survive the table anti-join and append
+          // twice — and a duplicated posting row doubles that vector's
+          // summed ADC distance in the probe (codes join is not deduped),
+          // evicting it from the shortlist. Not mere degradation.
+          val vs = batch.select(col("vec_id"),
+            col("embedding").cast("array<double>").as("v"))
+            .dropDuplicates("vec_id")
+          // missing/empty table = first batch; a real read failure must
+          // fail the batch, not wipe the idempotency guard (the
+          // curateStream probe rule)
+          val postDir = new org.apache.hadoop.fs.Path(postingPath)
+          val fs = postDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val hasData = fs.exists(postDir) && fs.globStatus(
+            new org.apache.hadoop.fs.Path(postingPath, "*.parquet")).nonEmpty
+          val arriving = st.checkpoint( // one materialization feeds assign + encode
+            if (hasData)
+              vs.join(spark.read.parquet(postingPath).select("vec_id"),
+                Seq("vec_id"), "left_anti")
+            else vs)
+          val assigned = graft.similarity.Similarity
+            .nearestLists(coarse, arriving, "v", 1, "list_id")
+            .select("vec_id", "list_id")
+          val codes = graft.similarity.ProductQuantizer
+            .encodeAll(arriving, m, subDim, codebook)
+          assigned.join(codes, "vec_id")
+            .write.mode("append").parquet(postingPath)
+        }
       }
       .start()
 
@@ -736,10 +740,10 @@ object StreamingAnalytics {
     * longs (model-sized), so this is driver-cheap at any corpus
     * scale. */
   def kmvNoveltyOfSnapshot(snaps: DataFrame,
-      k: Int = graft.dedup.Dedup.KmvK): DataFrame =
+      k: Int = graft.dedup.Dedup.KmvK): DataFrame = Stage(snaps.sparkSession) { st =>
     graft.dedup.Dedup.kmvNoveltyOfSummaries(
-      graft.dedup.Dedup.kmvSummary(snaps.select("source", "sk"), k)
-        .localCheckpoint(), k)
+      st.checkpoint(graft.dedup.Dedup.kmvSummary(snaps.select("source", "sk"), k)), k)
+  }
 
   /** Streaming sessionization with custom state. Event-time timeout
     * closes idle sessions once the watermark passes start+gap. */

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.Fixpoint
+import graft.operators.{Fixpoint, Stage}
 import graft.functions.{BestFitPackExpr, RepetitionStatsExpr, RollingHashExpr}
 import graft.queries.QueryPack
 
@@ -220,12 +220,11 @@ object TextAnalysis extends QueryPack {
       .withColumn("ttr", col("n_distinct").cast("double") / col("n_tokens"))
     // staged: the keyed operator replays lineage per pass and this
     // lineage is full tokenization — the exact 'expensive lineage →
-    // stage the narrow frame' case its cost model prescribes (the
-    // cache is spill-safe, correctness never depends on it, and it
-    // self-releases after the caller's terminal action — ADVICE r11).
+    // stage the narrow frame' case its cost model prescribes.
     // The stratum size rides along as totalOut — a separate count pass
     // would tokenize again.
-    graft.operators.Staged.scoped(docs) { staged =>
+    Stage(spark) { st =>
+      val staged = st.stage(docs)
       graft.operators.GroupRank.withGroupRankBy(
           staged, Seq("lang"), col("ttr"), primaryDesc = true,
           col("doc_id"), "rk", totalOut = Some("n_lang"), groupBound = 64)
@@ -517,20 +516,16 @@ object TextAnalysis extends QueryPack {
   def sourceDrift(spark: SparkSession, d: String): DataFrame =
     sourceDriftOf(Tables.documents(spark, d))
 
-  def sourceDriftOf(documents: DataFrame): DataFrame = {
+  def sourceDriftOf(documents: DataFrame): DataFrame = Stage(documents.sparkSession) { scope =>
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val terms = documents
       .select(col("source"), explode(split(col("text"), " ")).as("term"))
     // fans into corpus counts, source totals, and the scoring join —
-    // persist (not localCheckpoint, VERDICT r7 #4): MEMORY_AND_DISK is
-    // recomputable on executor loss where executor-local checkpoint
-    // blocks are not, and lazy persist lets the three consumers share
-    // one materialization without forcing it serially up front. The
-    // Bench/Verify harnesses clearCache() after every query, which is
-    // the unpersist.
-    val st = terms.groupBy("source", "term")
-      .agg(count(lit(1)).as("c_st"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // staged, not checkpointed (VERDICT r7 #4): recomputable on executor
+    // loss, and the lazy persist lets the three consumers share one
+    // materialization without forcing it serially up front
+    val st = scope.stage(terms.groupBy("source", "term")
+      .agg(count(lit(1)).as("c_st")))
     val ct = st.groupBy("term").agg(sum(col("c_st")).as("c_t"))
     val ts = st.groupBy("source").agg(sum(col("c_st")).as("t_s"))
     val tot = ts.agg(sum(col("t_s")).as("t_all"))
@@ -693,14 +688,14 @@ object TextAnalysis extends QueryPack {
     // rank) and tokenization is the expensive part — unstaged, the
     // ×4096 packing octave measured the 3× replay at 20 s vs the
     // window's 6 s; staged, the replays read ~24 B/row from cache
-    // (self-releasing, spill-safe)
     val narrow = documents.select(col("doc_id"), col("source"),
       size(split(col("text"), " ")).cast("long").as("n_tokens"))
     // the fill gate's byte estimate is auto-derived inside the keyed
     // operator (r15): the staged frame's clean file-scan lineage is
     // visible through the cache, so no hand-threading — an amplified
     // sweep input (join lineage) derives −1 and keeps the keyed form
-    graft.operators.Staged.scoped(narrow) { docs =>
+    Stage(documents.sparkSession) { st =>
+      val docs = st.stage(narrow)
       contiguousFill(docs, Seq("source"), col("doc_id"), col("doc_id"),
           col("n_tokens"), groupBound = 64)
         .select("source", "doc_id", "n_tokens", "tokens_before", "pack_id")
@@ -733,9 +728,10 @@ object TextAnalysis extends QueryPack {
     // estimate by hand — its input is the rank-join output, whose own
     // estimate is inflated junk only the caller can see past
     val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    graft.operators.Staged.scoped(
-      graft.queries.Extended.quartileBinsOf(docs, 4)
-        .select("doc_id", "source", "quartile", "n_tokens")) { binned =>
+    Stage(spark) { st =>
+      val binned = st.stage(
+        graft.queries.Extended.quartileBinsOf(docs, 4)
+          .select("doc_id", "source", "quartile", "n_tokens"))
       contiguousFill(binned, Seq("source", "quartile"), col("doc_id"),
           col("doc_id"), col("n_tokens"), groupBound = 256,
           inputBytes = est)
@@ -791,7 +787,7 @@ object TextAnalysis extends QueryPack {
     * on constructed corpora. */
   private[graft] def packBestFitOf(binned: DataFrame,
       chunkDocs: Int): DataFrame =
-    graft.operators.Staged.scoped(binned)(packBestFitCore(_, chunkDocs))
+    Stage(binned.sparkSession)(st => packBestFitCore(st.stage(binned), chunkDocs))
 
   /** The rank + blocked fold itself, over an already-staged binned
     * frame — split out so [[packTradeoff]] can share ONE staged
@@ -861,7 +857,8 @@ object TextAnalysis extends QueryPack {
   private[graft] def packTradeoffOf(binnedIn: DataFrame,
       inputBytes: BigInt): DataFrame = {
     val B = PackBin
-    graft.operators.Staged.scoped(binnedIn) { binned =>
+    Stage(binnedIn.sparkSession) { st =>
+      val binned = st.stage(binnedIn)
       val contig = contiguousFill(binned, Seq("source", "quartile"),
           col("doc_id"), col("doc_id"), col("n_tokens"), groupBound = 256,
           inputBytes = inputBytes)
@@ -1015,11 +1012,12 @@ object TextAnalysis extends QueryPack {
     val mix = graft.functions.DetMix.lehmerMix(col("doc_id"))
     // staged like docPacking: the counts + rank passes would otherwise
     // re-tokenize the corpus (the ×4096 packing octave measured that
-    // replay at 3×); the staged frame is ~32 B/row and self-releases
-    graft.operators.Staged.scoped(Tables.documents(spark, d)
-      .select(col("doc_id"), col("source"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        mix.as("shuffle_key"))) { docs =>
+    // replay at 3×); the staged frame is ~32 B/row
+    Stage(spark) { st =>
+      val docs = st.stage(Tables.documents(spark, d)
+        .select(col("doc_id"), col("source"),
+          size(split(col("text"), " ")).cast("long").as("n_tokens"),
+          mix.as("shuffle_key")))
       graft.operators.GroupRank.withRunningSumBy(
           docs, Seq("source"), col("shuffle_key"), primaryDesc = false,
           col("doc_id"), col("n_tokens"), "cum_tokens",
@@ -1082,7 +1080,8 @@ object TextAnalysis extends QueryPack {
     // boundaries <= c, as exact integer SQL over (c, off, w_total)
     def nb(c: String) = s"(CASE WHEN $c * $n <= off THEN CAST(0 AS BIGINT) " +
       s"ELSE least(CAST($n AS BIGINT), (($c * $n - off - 1) div w_total) + 1) END)"
-    graft.operators.Staged.scoped(narrow) { docs =>
+    Stage(withTokens.sparkSession) { st =>
+      val docs = st.stage(narrow)
       graft.operators.GroupRank.withRunningSumBy(
           docs, Seq("source"), col("mix"), primaryDesc = false,
           col("doc_id"), col("n_tokens"), "cum",
@@ -1114,14 +1113,13 @@ object TextAnalysis extends QueryPack {
     // stage the NARROW (doc_id, phase, key) frame: the grouped-ids
     // operator replays its input lineage several times (sketch,
     // counts, rank, totals — its scaladoc'd cost model), and here that
-    // lineage is the whole quartile pipeline. A spill-safe cache is a
-    // performance choice only — the keyed paths are recompute-safe —
-    // and it self-releases after the terminal action (ADVICE r11).
-    graft.operators.Staged.scoped(
-      graft.queries.Extended.quartileBinsOf(docs, 4)
-        .select(col("doc_id"), col("quartile").as("phase"))
-        .withColumn("shuffle_key",
-          graft.functions.DetMix.lehmerMix(col("doc_id")))) { phased =>
+    // lineage is the whole quartile pipeline.
+    Stage(spark) { st =>
+      val phased = st.stage(
+        graft.queries.Extended.quartileBinsOf(docs, 4)
+          .select(col("doc_id"), col("quartile").as("phase"))
+          .withColumn("shuffle_key",
+            graft.functions.DetMix.lehmerMix(col("doc_id"))))
       graft.operators.AssignIds.withContiguousIdsGrouped(
           phased, Seq("phase"), col("shuffle_key"), col("doc_id"),
           groupBound = 8)
@@ -1176,18 +1174,17 @@ object TextAnalysis extends QueryPack {
     val idxDf = idx.toDF("source", "src_idx")
     // staged for the same reason as curriculum_order: the ids pass
     // replays this (narrow) frame's lineage — one keyed rank plus a
-    // broadcast join — three more times unstaged; self-releases after
-    // the terminal action (ADVICE r11)
-    graft.operators.Staged.scoped(
-      graft.operators.GroupRank.withGroupRankBy(
-          docs, Seq("source"), col("sk"), primaryDesc = false,
-          // groupBound 20 is exact, not headroom-free: the require
-          // above already rejected any corpus with >20 sources before
-          // this plan is built, so the in-plan guard cannot out-fail it
-          col("doc_id"), "rk", groupBound = 20)
-        .join(broadcast(idxDf), "source")
-        .withColumn("v", expr("shiftleft(rk, cast(src_idx as int))"))) {
-      ranked =>
+    // broadcast join — three more times unstaged
+    Stage(spark) { st =>
+      val ranked = st.stage(
+        graft.operators.GroupRank.withGroupRankBy(
+            docs, Seq("source"), col("sk"), primaryDesc = false,
+            // groupBound 20 is exact, not headroom-free: the require
+            // above already rejected any corpus with >20 sources before
+            // this plan is built, so the in-plan guard cannot out-fail it
+            col("doc_id"), "rk", groupBound = 20)
+          .join(broadcast(idxDf), "source")
+          .withColumn("v", expr("shiftleft(rk, cast(src_idx as int))")))
         // the struct tiebreak (v exact, then src_idx, rk) makes the
         // order self-describing even though the keyed core now also
         // orders by the exact primary; the rank half of the shift
@@ -1404,7 +1401,7 @@ object TextAnalysis extends QueryPack {
       merges: Int): (DataFrame, DataFrame) = {
     import spark.implicits._
     val learned = scala.collection.mutable.Buffer[(Long, String, String, Long)]()
-    val (toks, _) = Fixpoint(spark, "bpe") { fx =>
+    val (toks, _) = Fixpoint(spark, "bpe") { (_, fx) =>
       // corpus state stays an ARRAY column between rounds — the oracle's
       // CTE chain keeps lists too, and re-joining/re-splitting text per
       // round would only add two string passes per iteration
@@ -1507,7 +1504,7 @@ object TextAnalysis extends QueryPack {
     bpeTrainIncOf(spark, Tables.documents(spark, d), BpeIncMerges)
 
   def bpeTrainIncOf(spark: SparkSession, documents: DataFrame,
-      merges: Int): DataFrame = Fixpoint(spark, "bpe_inc") { fx =>
+      merges: Int): DataFrame = Fixpoint(spark, "bpe_inc") { (_, fx) =>
     import spark.implicits._
     var toks = fx.checkpoint(
       documents.select(col("doc_id"), split(col("text"), " ").as("t")), eager = true)
@@ -1632,7 +1629,7 @@ object TextAnalysis extends QueryPack {
     * prefix sum is [[graft.operators.GroupRank.withRunningSumBy]]
     * (value-deterministic buckets + broadcast offsets), not a
     * one-task-per-source window (VERDICT r11 #1); the chunk frame is
-    * [[graft.operators.Staged]]-cached because the keyed operator
+    * staged ([[graft.operators.Stage]]) because the keyed operator
     * replays its lineage per pass and here that lineage is the whole
     * gate→dedup→explode pipeline. */
   def corpusBuild(spark: SparkSession, d: String): DataFrame = {
@@ -1649,19 +1646,20 @@ object TextAnalysis extends QueryPack {
     val est = Tables.documents(spark, d)
       .select(col("doc_id"), col("source"), col("text"))
       .queryExecution.optimizedPlan.stats.sizeInBytes
-    graft.operators.Staged.scoped(kept
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
-      .withColumn("n", size(col("toks")))
-      .select(col("doc_id"), col("source"),
-        explode(expr(
-          s"transform(sequence(0, greatest(0, cast(ceil((n - $W) / $S.0) as int))), " +
-          s"i -> named_struct('idx', i, " +
-          s"'chunk', concat_ws(' ', slice(toks, i * $S + 1, $W))))")).as("c"))
-      .select(col("doc_id"), col("source"),
-        col("c.idx").cast("long").as("chunk_idx"),
-        col("c.chunk").as("chunk_text"))
-      .withColumn("n_chunk_tokens",
-        size(split(col("chunk_text"), " ")).cast("long"))) { chunks =>
+    Stage(spark) { st =>
+      val chunks = st.stage(kept
+        .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
+        .withColumn("n", size(col("toks")))
+        .select(col("doc_id"), col("source"),
+          explode(expr(
+            s"transform(sequence(0, greatest(0, cast(ceil((n - $W) / $S.0) as int))), " +
+            s"i -> named_struct('idx', i, " +
+            s"'chunk', concat_ws(' ', slice(toks, i * $S + 1, $W))))")).as("c"))
+        .select(col("doc_id"), col("source"),
+          col("c.idx").cast("long").as("chunk_idx"),
+          col("c.chunk").as("chunk_text"))
+        .withColumn("n_chunk_tokens",
+          size(split(col("chunk_text"), " ")).cast("long")))
       // exclusive prefix in (doc_id, chunk_idx) order within each
       // source — the shared contiguousFill tail, bucket-sized tasks
       // instead of one per source

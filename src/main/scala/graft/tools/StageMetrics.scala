@@ -5,8 +5,8 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Cumulative scheduler and task-metric listener for the profiling and
-  * A/B tools ([[QueryProfile]], [[AntiJoinAb]]): job, stage and task
+/** Cumulative scheduler and task-metric listener for the profiling
+  * tools ([[QueryProfile]]): job, stage and task
   * counts, run time, GC, spill, shuffle records/bytes, peak execution
   * memory — snapshot deltas bracket a measured block. */
 final class StageMetrics(spark: SparkSession) extends SparkListener {

@@ -2,18 +2,16 @@ package org.apache.spark.sql.execution.graft
 
 import scala.collection.mutable
 
-import org.apache.spark.{MapOutputTrackerMaster, ShuffleDependency, SparkEnv}
+import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
-import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession, Strategy}
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, UnaryExecNode, UnsafeExternalRowSorter}
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.classic.Strategy
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode, UnsafeExternalRowSorter}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.storage.{BlockId, RDDBlockId, StorageLevel}
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 
 /** Group-wise top-k as a first-class operator: for each group key, the
@@ -188,134 +186,4 @@ case class TopKPerKeyExec(
 
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerKeyExec =
     copy(child = newChild)
-}
-
-/** `private[sql]` bridge so the public graft API can materialize a
-  * DataFrame from the custom logical node. */
-object GraftPlanBridge {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    Dataset.ofRows(spark, plan)
-
-  /** Eager Column → catalyst Expression conversion (the lazy
-    * `ColumnNodeExpression` wrapper keeps non-serializable internal sort
-    * nodes alive into the physical plan). */
-  def expr(c: org.apache.spark.sql.Column): Expression =
-    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
-
-  /** Reverse direction: wrap a catalyst Expression as a public Column
-    * (for operators built on Spark-internal expressions, e.g. the Bloom
-    * filter sketch pair). */
-  def column(e: Expression): org.apache.spark.sql.Column =
-    org.apache.spark.sql.classic.ExpressionUtils.column(e)
-
-  /** Drop a `localCheckpoint`ed frame's blocks now. `Dataset.unpersist`
-    * only looks in the cache manager, so on a checkpointed frame it is a
-    * no-op and the blocks wait for GC-driven cleanup; they belong to
-    * the RDD behind the frame's `LogicalRDD`. The frame must not be read
-    * again, nor any lazy frame built on it that is still unmaterialized. */
-  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case other => throw new IllegalArgumentException(
-        s"releaseCheckpoint: not a checkpointed frame (${other.nodeName})")
-    }
-
-  /** The RDD that holds `df`'s blocks: the one behind a checkpointed
-    * frame's `LogicalRDD`, or a cached frame's column buffers once they
-    * are built; None for any other frame. */
-  def blocksOf(df: org.apache.spark.sql.DataFrame): Option[RDD[_]] = df.queryExecution.logical match {
-    case r: LogicalRDD => Some(r.rdd)
-    case _ => df.sparkSession.sharedState.cacheManager.lookupCachedData(df.asInstanceOf[DataFrame])
-      .map(_.cachedRepresentation.cacheBuilder).filter(_.isCachedColumnBuffersLoaded)
-      .map(_.cachedColumnBuffers)
-  }
-
-  /** True when every partition of `rdd` has a block: one question to the
-    * block-manager master, no Spark job. */
-  def materialized(rdd: RDD[_]): Boolean = SparkEnv.get.blockManager.master
-    .getLocations(rdd.partitions.indices.map(i => RDDBlockId(rdd.id, i): BlockId).toArray)
-    .forall(_.nonEmpty)
-
-  /** Ids of the persisted RDDs a later action on `df` can read. The walk
-    * starts at the checkpoint and cache leaves of `df`'s plan, follows an
-    * RDD's lineage only while its blocks are incomplete, and crosses a
-    * shuffle only while that shuffle's map output is incomplete (an AQE
-    * plan runs its map stages when it is checkpointed, lazily or not).
-    * Runs no Spark job. */
-  def readable(df: org.apache.spark.sql.DataFrame): Set[Int] = {
-    val tracker = SparkEnv.get.mapOutputTracker.asInstanceOf[MapOutputTrackerMaster]
-    val seen, held = mutable.Set.empty[Int]
-    def visit(rdd: RDD[_]): Unit = if (seen.add(rdd.id)) {
-      if (rdd.getStorageLevel != StorageLevel.NONE) held += rdd.id
-      if (!held(rdd.id) || !materialized(rdd)) rdd.dependencies.foreach {
-        case s: ShuffleDependency[_, _, _]
-            if tracker.getNumAvailableOutputs(s.shuffleId) == s.rdd.partitions.length =>
-        case d => visit(d.rdd)
-      }
-    }
-    def leaves(plan: LogicalPlan): Unit = plan.foreachWithSubqueries {
-      case r: LogicalRDD => visit(r.rdd)
-      case m: InMemoryRelation if m.cacheBuilder.isCachedColumnBuffersLoaded =>
-        visit(m.cacheBuilder.cachedColumnBuffers)
-      case m: InMemoryRelation => leaves(m.cacheBuilder.logicalPlan)
-      case _ =>
-    }
-    leaves(df.queryExecution.withCachedData)
-    held.toSet
-  }
-
-  /** `localCheckpoint()` that KEEPS a hash partitioning visible to the
-    * planner (r18). `Dataset.localCheckpoint` under AQE builds its
-    * `LogicalRDD` with unknown partitioning, so a loop that re-joins /
-    * re-aggregates the checkpointed frame on the very key it was just
-    * partitioned by pays a fresh exchange per round; `persist()` keeps
-    * the partitioning but stores compressed COLUMNAR batches, whose
-    * per-scan decode measured 2–7× the cost of iterating deserialized
-    * UnsafeRows on loop-rescanned long-pair frames (the r18 kcore /
-    * LPA A/Bs). This helper takes the third corner: deserialized
-    * blocks + a DECLARED `HashPartitioning(keys, N)`.
-    *
-    * The declaration must be TRUE, so the contract is strict: `df`'s
-    * physical plan must end in `repartition(N, keys…)` with an
-    * EXPLICIT N (AQE never coalesces a user repartition with a pinned
-    * count, and Spark's `RepartitionByExpression` uses exactly the
-    * `HashPartitioning` declared here), optionally followed by
-    * narrow, partitioning-preserving ops (`sortWithinPartitions`,
-    * projections). Each of `keys` must resolve to exactly one column of
-    * `df`'s output under the session's resolver.
-    *
-    * Returns the checkpointed frame; [[releaseCheckpoint]] drops its
-    * blocks (Dataset.unpersist is a no-op on checkpoint blocks). */
-  def checkpointHashPartitioned(df0: org.apache.spark.sql.DataFrame,
-      keys: Seq[String], sortedByKeys: Boolean = false): org.apache.spark.sql.DataFrame = {
-    val df = df0.asInstanceOf[DataFrame]
-    val spark = df.sparkSession
-    val qe = df.queryExecution
-    // each key must name exactly one output column under the session's
-    // resolver: a duplicate name would silently declare the layout on
-    // whichever column came first
-    val attrs = qe.analyzed.output
-    val resolver = spark.sessionState.conf.resolver
-    val keyAttrs = keys.map { k =>
-      attrs.filter(a => resolver(a.name, k)) match {
-        case Seq(a) => a
-        case found => throw new IllegalArgumentException(
-          s"checkpointHashPartitioned: key '$k' matches ${found.size} columns " +
-            s"in ${attrs.map(_.name)}")
-      }
-    }
-    // toRdd reuses row buffers per partition — copy, as Dataset.checkpoint does
-    val rdd = qe.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize now: loop rounds must read blocks, not race
-    val part = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-      keyAttrs, rdd.getNumPartitions)
-    // declared only when the caller ALSO ran sortWithinPartitions on
-    // exactly `keys` (ascending, nulls first — the defaults both
-    // sides use): a sort-merge self-join then skips its per-partition
-    // sorts as well as its exchanges
-    val ordering =
-      if (sortedByKeys) keyAttrs.map(a => SortOrder(a, Ascending)) else Nil
-    Dataset.ofRows(spark, LogicalRDD(attrs, rdd, part, ordering)(spark))
-  }
 }

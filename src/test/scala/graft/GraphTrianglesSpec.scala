@@ -56,6 +56,17 @@ class GraphTrianglesSpec extends SparkSpec {
     assert(count(half) === brute)
   }
 
+  test("graph_triangles releases the half and degree frames: only adj remains") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = Extended.graphTriangles(spark, sf0001)
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    // the one frame left is the oriented adjacency the result reads
+    assert(added.size === 1, added)
+    assert(added.subsetOf(org.apache.spark.sql.execution.graft.GraftPlanBridge.readable(out)))
+    assert(out.count() > 0)
+  }
+
   private def stats(half: Seq[(Long, Long)]) =
     Extended.degreeStatsOf(half.toDF("pa", "pb"))
       .as[(Long, Long, Long, Long, Long, Long, Option[Double])]

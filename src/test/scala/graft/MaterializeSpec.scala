@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Materialize
+import graft.operators.Stage
 
-/** [[graft.operators.Materialize]] — the fault-tolerant replacement
-  * for gate-critical `localCheckpoint` (VERDICT r9 #2): local sessions
-  * keep the fast in-memory path, non-local sessions write a durable
-  * temp parquet every executor can recompute from. */
+/** [[graft.operators.Stage]]'s durable and keyed frames. `durable` is the
+  * fault-tolerant form for gate-critical frames (VERDICT r9 #2): local
+  * sessions keep the fast in-memory checkpoint, non-local sessions write
+  * a temp parquet every executor can recompute from. */
 class MaterializeSpec extends SparkSpec {
 
   private def frame = {
@@ -16,7 +16,7 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("local path preserves rows and schema and severs lineage") {
-    val m = Materialize(frame.filter(col("id") > 1))
+    val m = Stage(spark)(_.durable(frame.filter(col("id") > 1)))
     assert(m.schema === frame.schema)
     assert(m.orderBy("id").collect().map(_.getLong(0)).toSeq === Seq(2L, 3L))
     // localCheckpoint path: the logical plan is a scan of materialized
@@ -28,7 +28,7 @@ class MaterializeSpec extends SparkSpec {
     val dir = tmpDir("materialize")
     spark.conf.set("spark.graft.materialize.dir", dir)
     try {
-      val m = Materialize.materialize(frame, durable = true)
+      val m = Stage(spark)(_.durable(frame, parquet = true))
       assert(m.orderBy("id").collect().toSeq ===
         frame.orderBy("id").collect().toSeq)
       // the frame really lives on stable storage now
@@ -49,7 +49,7 @@ class MaterializeSpec extends SparkSpec {
     val dir = tmpDir("materialize-empty")
     spark.conf.set("spark.graft.materialize.dir", dir)
     try {
-      val m = Materialize.materialize(frame.filter(col("id") > 100), durable = true)
+      val m = Stage(spark)(_.durable(frame.filter(col("id") > 100), parquet = true))
       assert(m.count() === 0L)
       // parquet re-read relaxes nullability (standard Spark) — names and
       // types are the contract the gate plans depend on
@@ -62,7 +62,7 @@ class MaterializeSpec extends SparkSpec {
     val dir = tmpDir("materialize-tempdir")
     spark.conf.set("spark.graft.materialize.dir", dir)
     try {
-      val got = Materialize.tempDir(spark, "snap-tt")
+      val got = Stage.tempDir(spark, "snap-tt")
       assert(got.contains(dir) && got.contains("graft-materialize") &&
         got.contains("snap-tt-"), s"tempDir escaped the shared root: $got")
       assert(new java.io.File(new java.net.URI(got).getPath).isDirectory ||
@@ -71,7 +71,7 @@ class MaterializeSpec extends SparkSpec {
       // a filesystem every executor can reach, unlike driver /tmp
       spark.conf.unset("spark.graft.materialize.dir")
       val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val fallback = Materialize.tempDir(spark, "snap-tt")
+      val fallback = Stage.tempDir(spark, "snap-tt")
       assert(fallback.contains(new org.apache.hadoop.fs.Path(wh).toUri.getPath),
         s"fallback $fallback not under warehouse $wh")
     } finally spark.conf.unset("spark.graft.materialize.dir")
@@ -82,21 +82,20 @@ class MaterializeSpec extends SparkSpec {
     val dir = tmpDir("materialize-local")
     spark.conf.set("spark.graft.materialize.dir", dir)
     try {
-      Materialize(frame).count()
+      Stage(spark)(_.durable(frame)).count()
       val root = new java.io.File(dir, "graft-materialize")
       assert(!root.exists(), "local mode must not write durable temp parquet")
     } finally spark.conf.unset("spark.graft.materialize.dir")
   }
 
   test("checkpointHashPartitioned: a key must name exactly one column") {
-    import org.apache.spark.sql.execution.graft.GraftPlanBridge
     val twoKs = spark.range(4).select(col("id").as("k"), (col("id") * 2).as("k"))
     val dup = intercept[IllegalArgumentException] {
-      GraftPlanBridge.checkpointHashPartitioned(twoKs.repartition(2), Seq("k"))
+      Stage(spark)(_.byKeys(twoKs, "k"))
     }
     assert(dup.getMessage.contains("matches 2 columns"))
     val none = intercept[IllegalArgumentException] {
-      GraftPlanBridge.checkpointHashPartitioned(frame.repartition(2, col("id")), Seq("nope"))
+      Stage(spark)(_.byKeys(frame, "nope"))
     }
     assert(none.getMessage.contains("matches 0 columns"))
   }

@@ -384,18 +384,15 @@ class PlanShapeSpec extends SparkSpec {
       "join lineage must not be trusted")
     assert(GroupRank.autoInputBytes(scan.repartition(4)) == BigInt(-1),
       "repartition lineage must not be trusted")
-    // a Staged (persisted) clean scan stays trusted THROUGH the cache,
+    // a staged (persisted) clean scan stays trusted THROUGH the cache,
     // and derives the same bytes the caller used to hand-thread
     val est = scan.queryExecution.optimizedPlan.stats.sizeInBytes
-    val staged = operators.Staged.stage(
+    val auto = operators.Stage(spark)(st => GroupRank.autoInputBytes(st.stage(
       Tables.documents(spark, sf0001)
-        .select(col("doc_id"), col("source"), col("n_chars")))
-    try {
-      val auto = GroupRank.autoInputBytes(staged)
-      assert(auto == est,
-        s"staged clean scan must derive the pre-staging estimate " +
-          s"($est), got $auto")
-    } finally staged.unpersist(blocking = true)
+        .select(col("doc_id"), col("source"), col("n_chars")))))
+    assert(auto == est,
+      s"staged clean scan must derive the pre-staging estimate " +
+        s"($est), got $auto")
   }
 
   test("pack_best_fit / pack_tradeoff: the length-desc keyed rank " +

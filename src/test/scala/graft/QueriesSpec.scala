@@ -16,10 +16,26 @@ class QueriesSpec extends SparkSpec {
   test("every registered query runs at sf0.001") {
     // the noop sink evaluates every output column; count() would let the
     // optimizer prune the columns no aggregate needs
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sf0001).write.format("noop").mode("overwrite").save()
-      catch { case e: Exception => fail(s"$name failed", e) }
+    val sc = spark.sparkContext
+    val unread = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val before = sc.getPersistentRDDs.keySet
+      try {
+        val out = fn(spark, sf0001)
+        val readable = org.apache.spark.sql.execution.graft.GraftPlanBridge.readable(out)
+        out.write.format("noop").mode("overwrite").save()
+        spark.catalog.clearCache()
+        // every block the query made and left is one its result could
+        // read when it returned; the rest must be released. A staged
+        // frame is released by a listener after the write, on the
+        // listener bus, so give that a moment
+        def unread = sc.getPersistentRDDs.keySet -- before -- readable
+        val deadline = System.nanoTime() + 10000000000L
+        while (unread.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        java.lang.ref.Reference.reachabilityFence(out)
+        if (unread.isEmpty) None else Some(s"$name: ${unread.size}")
+      } catch { case e: Exception => fail(s"$name failed", e) }
     }
+    assert(unread.isEmpty, s"blocks left that the result cannot read: $unread")
     // queries bind their expressions as typed columns: none leaves a
     // temporary function behind that a fresh session would not have
     def temporary(s: org.apache.spark.sql.SparkSession) =

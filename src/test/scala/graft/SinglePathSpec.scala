@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-scan guard for the single paths: engine expressions bind as
   * typed Columns (never a session-global temp function looked up by
   * name), every session comes from [[GraftSession.builder]], every
-  * k-means trains through the one grouped Lloyd trainer, and every
-  * fixpoint loop runs through the one driver. */
+  * k-means trains through the one grouped Lloyd trainer, every
+  * fixpoint loop runs through the one driver, and every frame is
+  * materialized through the one scope. */
 class SinglePathSpec extends AnyFunSuite {
 
   private def sources: Seq[Path] = {
@@ -46,11 +47,32 @@ class SinglePathSpec extends AnyFunSuite {
   test("one fixpoint driver") {
     // split so this file does not match itself
     val callers = filesWith("release" + "Checkpoint").filterNot(
-      _ == "src/main/scala/org/apache/spark/sql/execution/graft/TopKPerKeyExec.scala")
-    assert(callers === Seq("src/main/scala/graft/operators/Fixpoint.scala"))
+      _ == "src/main/scala/org/apache/spark/sql/execution/graft/GraftPlanBridge.scala")
+    assert(callers === Seq("src/main/scala/graft/operators/Stage.scala"))
     assert(filesWith("localCheckpoint" + "(false)").filter(p =>
       Seq("dedup", "queries", "text").exists(d => p.startsWith(s"src/main/scala/graft/$d/"))).isEmpty)
     assert(filesWith("var super" + "seded").isEmpty)
     assert(filesWith("super" + "seded.foreach").isEmpty)
+  }
+
+  test("one materialization scope") {
+    // split so this file does not match itself
+    val needles = Seq("localCheckpoint" + "(", ".persist" + "(", ".cache" + "()",
+      "Materi" + "alize", "Keyed" + "Store", "Staged" + ".", "checkpointHash" + "Partitioned")
+    val exempt = Set("src/main/scala/graft/operators/Stage.scala",
+      "src/main/scala/org/apache/spark/sql/execution/graft/GraftPlanBridge.scala")
+    val raw = for {
+      p <- sources
+      f = p.toString
+      if f.startsWith("src/main/") && !f.startsWith("src/main/scala/graft/tools/") && !exempt(f)
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if needles.exists(line.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    // the one named exception: quarantine hands both of its frames to the caller
+    assert(raw.size === 1, raw.mkString("\n"))
+    assert(raw.head.startsWith("src/main/scala/graft/sources/FileSources.scala:") &&
+      raw.head.endsWith("val parsed = df" + ".cache" + "()"), raw.head)
+    assert(Seq("Materialize", "KeyedStore", "Staged").forall(n =>
+      !Files.exists(Paths.get(s"src/main/scala/graft/operators/$n.scala"))))
   }
 }

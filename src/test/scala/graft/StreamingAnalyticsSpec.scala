@@ -351,6 +351,9 @@ class StreamingAnalyticsSpec extends SparkSpec {
     curateScenario("cub", bloomGuard = true)
   }
 
+  /** Ids of the RDDs the session holds blocks of. */
+  private def persistentRdds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   private def curateScenario(tag: String, bloomGuard: Boolean): Unit = {
     val in = tmpDir(s"$tag-in"); val pass = tmpDir(s"$tag-pass")
     val quar = tmpDir(s"$tag-quar"); val ck = tmpDir(s"$tag-ck")
@@ -362,10 +365,12 @@ class StreamingAnalyticsSpec extends SparkSpec {
       .toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(in)
     val stream = spark.readStream.schema("doc_id LONG, text STRING").parquet(in)
+    val start = persistentRdds()
     val q = StreamingAnalytics.curateStream(stream, pass, quar, ck,
       bloomHistoryGuard = bloomGuard)
     try {
       q.processAllAvailable()
+      val afterBatch1 = persistentRdds() -- start
       // batch 2 arrives LATER: a near-dup of batch-1's doc 1 (cross-batch
       // history hit — the pass table is the dedup state) + a fresh doc
       Seq((10L, longDoc + " y"), (11L, otherDoc))
@@ -379,6 +384,8 @@ class StreamingAnalyticsSpec extends SparkSpec {
         .toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(in)
       q.processAllAvailable()
+      // each micro-batch releases what it materialized when it ends
+      assert(persistentRdds() -- start === afterBatch1)
     } finally q.stop()
 
     // full multisets, not Sets/Maps: a duplicate append (the failure
@@ -411,15 +418,18 @@ class StreamingAnalyticsSpec extends SparkSpec {
     val src = Tables.embeddings(spark, sf0001).select("vec_id", "embedding")
     src.filter($"vec_id" < 100).coalesce(1).write.mode("overwrite").parquet(in)
     val stream = spark.readStream.schema(src.schema).parquet(in)
+    val start = persistentRdds()
     val q = StreamingAnalytics.annIndexStream(stream, coarse, book, post, ck)
     try {
       q.processAllAvailable()
+      val afterBatch1 = persistentRdds() -- start
       // batch 2: the rest of the corpus arrives later
       src.filter($"vec_id" >= 100).coalesce(1).write.mode("append").parquet(in)
       q.processAllAvailable()
       // batch 3 REPLAYS batch 1 verbatim — ids must anti-join out
       src.filter($"vec_id" < 100).coalesce(1).write.mode("append").parquet(in)
       q.processAllAvailable()
+      assert(persistentRdds() -- start === afterBatch1)
     } finally q.stop()
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select($"vec_id", $"list_id", $"codes")
