@@ -20,8 +20,9 @@ package graft.operators
   * state. Each arm runs inside the caller's [[Stage]] scope, so what an
   * arm materializes is released by the caller's rule.
   *
-  * Failure contract: both arms are awaited, the first failure
-  * propagates (unwrapped) exactly as it would have sequentially. */
+  * Failure contract: both arms are awaited, then the first arm's failure
+  * (else the second's) propagates unwrapped, as it would have
+  * sequentially. */
 object Concurrently {
 
   def pair[A, B](fa: => A, fb: => B): (A, B) = {
@@ -34,7 +35,10 @@ object Concurrently {
       val fut2 = pool.submit(new java.util.concurrent.Callable[B] {
         def call(): B = b()
       })
-      (unwrap(fut1), unwrap(fut2))
+      // the second arm is awaited even when the first fails: the caller's
+      // scope releases what the arms made only once both have stopped
+      val ra = try unwrap(fut1) catch { case t: Throwable => scala.util.Try(fut2.get()); throw t }
+      (ra, unwrap(fut2))
     } finally pool.shutdown()
   }
 

@@ -8,7 +8,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.graft.GraftPlanBridge
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
@@ -51,7 +50,8 @@ import org.apache.spark.storage.StorageLevel
   *  - `stage(df)`: a spill-safe `persist` (MEMORY_AND_DISK), recomputable
   *    on executor loss, for narrow inputs the keyed operators replay once
   *    per pass. Correctness never depends on it: releasing early costs a
-  *    lineage replay, never a wrong row.
+  *    lineage replay, never a wrong row, since what that lineage reads is
+  *    readable through the stage and so is kept (below).
   *
   * '''Release.''' When the body returns, every frame the scope made that
   * the returned value cannot read ([[GraftPlanBridge.readable]], plus
@@ -134,13 +134,8 @@ object Stage {
 
     def byKeys(df: DataFrame, keys: String*): DataFrame = byKeys(df, keys, keys)
 
-    def byKeys(df: DataFrame, keys: Seq[String], sortBy: Seq[String]): DataFrame = {
-      GraftPlanBridge.keyAttributes(df, keys)
-      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      track(GraftPlanBridge.checkpointHashPartitioned(
-        df.repartition(n, keys.map(col): _*).sortWithinPartitions(sortBy.map(col): _*),
-        keys, sortedByKeys = sortBy == keys), staged = false)
-    }
+    def byKeys(df: DataFrame, keys: Seq[String], sortBy: Seq[String]): DataFrame =
+      track(GraftPlanBridge.checkpointHashPartitioned(df, keys, sortBy), staged = false)
 
     def durable(df: DataFrame): DataFrame = durable(df, parquet = !spark.sparkContext.isLocal)
 

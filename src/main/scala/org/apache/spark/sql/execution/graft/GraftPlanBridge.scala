@@ -4,11 +4,13 @@ import scala.collection.mutable
 
 import org.apache.spark.{MapOutputTrackerMaster, ShuffleDependency, SparkEnv}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.{BlockId, RDDBlockId, StorageLevel}
 
 /** `private[sql]` bridge so the public graft API can materialize a
@@ -33,10 +35,12 @@ object GraftPlanBridge {
     * only looks in the cache manager, so on a checkpointed frame it is a
     * no-op and the blocks wait for GC-driven cleanup; they belong to
     * the RDD behind the frame's `LogicalRDD`. The frame must not be read
-    * again, nor any lazy frame built on it that is still unmaterialized. */
+    * again, nor any lazy frame built on it that is still unmaterialized.
+    * Released as the ContextCleaner does (`RDD.unpersist` would log a
+    * warning per release that a local checkpoint cannot be recomputed). */
   def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case r: LogicalRDD => r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
       case other => throw new IllegalArgumentException(
         s"releaseCheckpoint: not a checkpointed frame (${other.nodeName})")
     }
@@ -62,12 +66,15 @@ object GraftPlanBridge {
     * RDD's lineage only while its blocks are incomplete, and crosses a
     * shuffle only while that shuffle's map output is incomplete (an AQE
     * plan runs its map stages when it is checkpointed, lazily or not).
-    * Runs no Spark job. */
+    * A cache never ends the walk, built or not: its owner may drop it
+    * (a staged frame's listener does, after the first action), and a
+    * later action then replans the cached plan. Runs no Spark job. */
   def readable(df: org.apache.spark.sql.DataFrame): Set[Int] = {
     val tracker = SparkEnv.get.mapOutputTracker.asInstanceOf[MapOutputTrackerMaster]
+    val persistent = df.sparkSession.sparkContext.getPersistentRDDs.keySet
     val seen, held = mutable.Set.empty[Int]
     def visit(rdd: RDD[_]): Unit = if (seen.add(rdd.id)) {
-      if (rdd.getStorageLevel != StorageLevel.NONE) held += rdd.id
+      if (persistent(rdd.id)) held += rdd.id
       if (!held(rdd.id) || !materialized(rdd)) rdd.dependencies.foreach {
         case s: ShuffleDependency[_, _, _]
             if tracker.getNumAvailableOutputs(s.shuffleId) == s.rdd.partitions.length =>
@@ -76,31 +83,13 @@ object GraftPlanBridge {
     }
     def leaves(plan: LogicalPlan): Unit = plan.foreachWithSubqueries {
       case r: LogicalRDD => visit(r.rdd)
-      case m: InMemoryRelation if m.cacheBuilder.isCachedColumnBuffersLoaded =>
-        visit(m.cacheBuilder.cachedColumnBuffers)
-      case m: InMemoryRelation => leaves(m.cacheBuilder.logicalPlan)
+      case m: InMemoryRelation =>
+        if (m.cacheBuilder.isCachedColumnBuffersLoaded) visit(m.cacheBuilder.cachedColumnBuffers)
+        leaves(m.cacheBuilder.logicalPlan)
       case _ =>
     }
     leaves(df.queryExecution.withCachedData)
     held.toSet
-  }
-
-  /** The output attribute each of `keys` names. Each key must name
-    * exactly one output column under the session's resolver: a duplicate
-    * name would silently declare a layout on whichever column came first. */
-  def keyAttributes(df0: org.apache.spark.sql.DataFrame,
-      keys: Seq[String]): Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = {
-    val df = df0.asInstanceOf[DataFrame]
-    val attrs = df.queryExecution.analyzed.output
-    val resolver = df.sparkSession.sessionState.conf.resolver
-    keys.map { k =>
-      attrs.filter(a => resolver(a.name, k)) match {
-        case Seq(a) => a
-        case found => throw new IllegalArgumentException(
-          s"checkpointHashPartitioned: key '$k' matches ${found.size} columns " +
-            s"in ${attrs.map(_.name)}")
-      }
-    }
   }
 
   /** True when `out`'s plan scans the cache `staged` was persisted as,
@@ -119,47 +108,46 @@ object GraftPlanBridge {
         scans(out.queryExecution.withCachedData)
       }
 
-  /** `localCheckpoint()` that KEEPS a hash partitioning visible to the
-    * planner (r18). `Dataset.localCheckpoint` under AQE builds its
-    * `LogicalRDD` with unknown partitioning, so a loop that re-joins /
-    * re-aggregates the checkpointed frame on the very key it was just
-    * partitioned by pays a fresh exchange per round; `persist()` keeps
-    * the partitioning but stores compressed COLUMNAR batches, whose
-    * per-scan decode measured 2–7× the cost of iterating deserialized
-    * UnsafeRows on loop-rescanned long-pair frames (the r18 kcore /
-    * LPA A/Bs). This helper takes the third corner: deserialized
-    * blocks + a DECLARED `HashPartitioning(keys, N)`.
-    *
-    * The declaration must be TRUE, so the contract is strict: `df`'s
-    * physical plan must end in `repartition(N, keys…)` with an
-    * EXPLICIT N (AQE never coalesces a user repartition with a pinned
-    * count, and Spark's `RepartitionByExpression` uses exactly the
-    * `HashPartitioning` declared here), optionally followed by
-    * narrow, partitioning-preserving ops (`sortWithinPartitions`,
-    * projections). Each of `keys` must resolve to exactly one column of
-    * `df`'s output under the session's resolver.
-    *
-    * Returns the checkpointed frame; [[releaseCheckpoint]] drops its
-    * blocks (Dataset.unpersist is a no-op on checkpoint blocks). */
+  /** `df` repartitioned by `keys` into the session's
+    * `spark.sql.shuffle.partitions`, sorted within partitions by `sortBy`
+    * and checkpointed eagerly, with the layout DECLARED to the planner:
+    * `HashPartitioning(keys, n)`, plus the order when `sortBy == keys`
+    * (ascending, nulls first, the defaults both sides use). A pinned-count
+    * `repartition` is never coalesced by AQE and hashes exactly as
+    * declared, so the declaration holds. `Dataset.localCheckpoint` under
+    * AQE hides the partitioning, and `persist` keeps it but stores
+    * compressed columnar batches, whose per-scan decode measured 2–7× the
+    * cost of deserialized rows on loop-rescanned pair frames (r18).
+    * [[releaseCheckpoint]] drops the blocks. */
   def checkpointHashPartitioned(df0: org.apache.spark.sql.DataFrame,
-      keys: Seq[String], sortedByKeys: Boolean = false): org.apache.spark.sql.DataFrame = {
-    val df = df0.asInstanceOf[DataFrame]
-    val spark = df.sparkSession
-    val qe = df.queryExecution
-    val attrs = qe.analyzed.output
-    val keyAttrs = keyAttributes(df, keys)
+      keys: Seq[String], sortBy: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val spark = df0.sparkSession.asInstanceOf[SparkSession]
+    val keyAttrs = keyAttributes(df0.asInstanceOf[DataFrame], keys)
+    val n = spark.sessionState.conf.defaultNumShufflePartitions
+    val qe = df0.repartition(n, keys.map(col): _*)
+      .sortWithinPartitions(sortBy.map(col): _*).queryExecution
     // toRdd reuses row buffers per partition — copy, as Dataset.checkpoint does
     val rdd = qe.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    rdd.persist(StorageLevel.MEMORY_AND_DISK)
     rdd.count() // materialize now: loop rounds must read blocks, not race
-    val part = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-      keyAttrs, rdd.getNumPartitions)
-    // declared only when the caller ALSO ran sortWithinPartitions on
-    // exactly `keys` (ascending, nulls first — the defaults both
-    // sides use): a sort-merge self-join then skips its per-partition
-    // sorts as well as its exchanges
-    val ordering =
-      if (sortedByKeys) keyAttrs.map(a => SortOrder(a, Ascending)) else Nil
-    Dataset.ofRows(spark, LogicalRDD(attrs, rdd, part, ordering)(spark))
+    val ordering = if (sortBy == keys) keyAttrs.map(a => SortOrder(a, Ascending)) else Nil
+    Dataset.ofRows(spark, LogicalRDD(qe.analyzed.output, rdd,
+      HashPartitioning(keyAttrs, n), ordering)(spark))
+  }
+
+  /** The output attribute each of `keys` names. Each key must name
+    * exactly one output column under the session's resolver: a duplicate
+    * name would silently declare a layout on whichever column came first. */
+  private def keyAttributes(df: DataFrame, keys: Seq[String]): Seq[Attribute] = {
+    val attrs = df.queryExecution.analyzed.output
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    keys.map { k =>
+      attrs.filter(a => resolver(a.name, k)) match {
+        case Seq(a) => a
+        case found => throw new IllegalArgumentException(
+          s"checkpointHashPartitioned: key '$k' matches ${found.size} columns " +
+            s"in ${attrs.map(_.name)}")
+      }
+    }
   }
 }

@@ -75,6 +75,36 @@ class StagedSpec extends SparkSpec {
       "construction failure must release synchronously")
   }
 
+  test("a built stage keeps the checkpoints it reads: a second action " +
+    "on the result replays the stage's lineage once the listener drops it") {
+    var staged: DataFrame = null
+    val result = Stage(spark) { st =>
+      val cp = st.checkpoint((1 to 100).toDF("x")
+        .groupBy((col("x") % 7).as("k")).agg(sum("x").as("s")))
+      staged = st.stage(cp.withColumn("t", col("s") * 2))
+      staged.count() // built during construction, as a fill gate's quantiles do
+      staged.filter(col("k") > 2)
+    }
+    assert(result.count() === 4L)
+    assert(eventually()(staged.storageLevel === StorageLevel.NONE))
+    assert(result.collect().map(_.getLong(2)).sorted.toSeq ===
+      (3 to 6).map(k => (1 to 100).filter(_ % 7 == k).sum * 2L))
+    assert(result.count() === 4L)
+  }
+
+  test("a failed Concurrently arm leaves nothing staged: the scope " +
+    "releases only after the other arm has stopped") {
+    var late: DataFrame = null
+    intercept[IllegalStateException] {
+      Stage(spark) { st =>
+        graft.operators.Concurrently.pair(
+          throw new IllegalStateException("first arm"),
+          { Thread.sleep(500); late = st.stage((1 to 5).toDF("x")); late })
+      }
+    }
+    assert(late != null && late.storageLevel === StorageLevel.NONE)
+  }
+
   test("abandoned plans release after the activity TTL: a staged query " +
     "that is never executed cannot cache-leak a working session") {
     val (staged, _) = scoped((1 to 20).toDF("x")) { s =>
