@@ -1,14 +1,10 @@
 package graft.operators
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.graft.GraftPlanBridge
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
 /** The one way engine code materializes a frame, and the one rule that
@@ -49,9 +45,10 @@ import org.apache.spark.storage.StorageLevel
   *    stable storage, and it holds no blocks.
   *  - `stage(df)`: a spill-safe `persist` (MEMORY_AND_DISK), recomputable
   *    on executor loss, for narrow inputs the keyed operators replay once
-  *    per pass. Correctness never depends on it: releasing early costs a
-  *    lineage replay, never a wrong row, since what that lineage reads is
-  *    readable through the stage and so is kept (below).
+  *    per pass. Correctness never depends on it: once it is dropped, a
+  *    later action on the result replays the stage's lineage, never a
+  *    wrong row, since what that lineage reads is readable through the
+  *    stage and so is kept (below).
   *
   * '''Release.''' When the body returns, every frame the scope made that
   * the returned value cannot read ([[GraftPlanBridge.readable]], plus
@@ -62,23 +59,15 @@ import org.apache.spark.storage.StorageLevel
   *  - inside an enclosing scope on the same thread (or on a
   *    [[Concurrently]] arm of it) passes to that scope, which applies the
   *    same rule when it exits;
-  *  - otherwise, a staged frame is released after the first completed
-  *    action on the returned frame that reads it (the listener below),
-  *    and a checkpoint is left to the ContextCleaner, which drops its
-  *    blocks once the returned plan is garbage.
+  *  - otherwise it is the caller's: a staged frame stays in the session
+  *    cache until the caller's `spark.catalog.clearCache()` (or an
+  *    `unpersist`), and a checkpoint is left to the ContextCleaner, which
+  *    drops its blocks once the returned plan is garbage. A caller that
+  *    is done with a returned frame clears the cache after its last
+  *    action, as the registry harnesses do after each write.
   *
   * On an exception every frame the scope holds is released before the
-  * exception propagates.
-  *
-  * '''The staged-frame listener.''' It matches a completed action
-  * (success or failure) whose analyzed plan contains the returned frame's
-  * (by `semanticHash`, O(1) state per listener; a collision only releases
-  * early). A returned frame that is never acted on is released after
-  * [[AbandonAfterEvents]] other executions on its session; past
-  * [[MaxArmed]] armed listeners on one session the oldest is released at
-  * once (an idle session never ticks the event count), and past
-  * [[MaxArmedTotal]] across sessions the globally oldest goes. A second
-  * action on the same result replays lineage unstaged. */
+  * exception propagates. */
 object Stage {
 
   def apply[T](spark: SparkSession)(body: Scope => T): T = {
@@ -164,20 +153,15 @@ object Stage {
 
     private[Stage] def exit(out: Any, outer: Option[Scope]): Unit = held.synchronized {
       val results = framesIn(out).map(r => r -> GraftPlanBridge.readable(r))
-      val armed = mutable.LinkedHashMap.empty[DataFrame, List[DataFrame]]
       held.foreach { case f @ (df, staged) =>
-        val reader = results.collectFirst {
-          case (r, read) if GraftPlanBridge.blocksOf(df).exists(b => read(b.id)) ||
-            staged && GraftPlanBridge.scansCache(r, df) => r
+        val read = results.exists { case (r, ids) =>
+          GraftPlanBridge.blocksOf(df).exists(b => ids(b.id)) ||
+            staged && GraftPlanBridge.scansCache(r, df)
         }
-        (reader, outer) match {
-          case (None, _) => free(f)
-          case (Some(_), Some(o)) => o.track(df, staged)
-          case (Some(r), None) => if (staged) armed(r) = df :: armed.getOrElse(r, Nil)
-        }
+        // a frame the result reads is the enclosing scope's, else the caller's
+        if (!read) free(f) else outer.foreach(_.track(df, staged))
       }
       held.clear()
-      armed.foreach { case (r, staged) => arm(spark, r, staged) }
     }
   }
 
@@ -186,58 +170,5 @@ object Stage {
     case _: Iterable[_] => Nil
     case p: Product => p.productIterator.flatMap(framesIn).toSeq
     case _ => Nil
-  }
-
-  /** Executions on a session after which a staged frame whose result was
-    * never acted on is released. Generous: a real caller's terminal action
-    * is almost always the next execution. */
-  private[graft] val AbandonAfterEvents = 64
-
-  /** Armed listeners per session; arming one more releases the session's
-    * oldest. Listeners whose SparkContext has stopped are swept on every
-    * arm. */
-  private[graft] val MaxArmed = 8
-
-  /** Armed listeners across all sessions; past it the globally oldest is
-    * released, whoever owns it (a server minting a session per tenant
-    * must not pin sessions × [[MaxArmed]] caches). */
-  private[graft] val MaxArmedTotal = 64
-
-  private val armedQueue = new java.util.concurrent.ConcurrentLinkedQueue[ReleaseListener]
-
-  private final class ReleaseListener(val session: SparkSession,
-      frames: List[DataFrame], targetHash: Int) extends QueryExecutionListener {
-    private val released = new java.util.concurrent.atomic.AtomicBoolean
-    private val unrelated = new java.util.concurrent.atomic.AtomicInteger
-    def release(): Unit =
-      if (released.compareAndSet(false, true)) {
-        // a released listener leaves the cap queue, or completed ones
-        // would evict a live one long before its TTL
-        armedQueue.remove(this)
-        frames.foreach(_.unpersist(blocking = false))
-        session.listenerManager.unregister(this)
-      }
-    private def onEvent(qe: QueryExecution): Unit =
-      if (qe.analyzed.exists(_.semanticHash() == targetHash)) release()
-      else if (unrelated.incrementAndGet() >= AbandonAfterEvents) release()
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      onEvent(qe)
-    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-      onEvent(qe)
-  }
-
-  private def arm(spark: SparkSession, result: DataFrame, staged: List[DataFrame]): Unit = {
-    val listener = new ReleaseListener(spark, staged,
-      result.queryExecution.analyzed.semanticHash())
-    spark.listenerManager.register(listener)
-    armedQueue.add(listener)
-    // eviction is best-effort cleanup: a failing release must not break
-    // the caller's construction
-    def releaseQuietly(l: ReleaseListener): Unit =
-      try l.release() catch { case NonFatal(_) => () }
-    armedQueue.asScala.filter(_.session.sparkContext.isStopped).foreach(releaseQuietly)
-    // oldest first, so the oldest go
-    armedQueue.asScala.filter(_.session eq spark).dropRight(MaxArmed).foreach(releaseQuietly)
-    armedQueue.asScala.toList.dropRight(MaxArmedTotal).foreach(releaseQuietly)
   }
 }

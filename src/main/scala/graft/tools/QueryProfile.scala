@@ -1,11 +1,15 @@
 package graft.tools
 
+import org.apache.spark.sql.execution.graft.GraftPlanBridge
+
 /** r17 optimization-round instrument: per-registered-query decomposition
   * of WHERE the bench seconds go — wall time, Spark job count, stage
   * count, task count, summed executor run time, shuffle records/bytes,
   * and `leaked`: the persistent RDDs the query still holds after its
-  * `noop` write and `clearCache()` (a diff of `getPersistentRDDs`, the
-  * most over the reps) —
+  * `noop` write and `clearCache()` that its result cannot read (a diff
+  * of `getPersistentRDDs` less `GraftPlanBridge.readable` of the result,
+  * a job-free plan walk taken before the write; the most over the
+  * reps) —
   * so a plan change can be judged by the structural numbers (jobs,
   * exchanges, shuffled bytes) and not just a noisy wall clock.
   * Optionally dumps `.explain("formatted")` per query for the
@@ -57,14 +61,21 @@ object QueryProfile {
         val before = metrics.snapshot()
         val held = sc.getPersistentRDDs.keySet
         val t0 = System.nanoTime()
+        var out: org.apache.spark.sql.DataFrame = null
+        var readable = Set.empty[Int]
         val ok = try {
-          fn(spark, d).write.format("noop").mode("overwrite").save(); true
+          out = fn(spark, d)
+          readable = GraftPlanBridge.readable(out)
+          out.write.format("noop").mode("overwrite").save(); true
         } catch { case e: Throwable =>
           System.err.println(s"[qp] $name FAILED: ${e.getMessage}"); false
         }
         spark.catalog.clearCache()
         val wall = (System.nanoTime() - t0) / 1e9
-        (wall, ok, metrics.snapshot() - before, (sc.getPersistentRDDs.keySet -- held).size)
+        val leaked = (sc.getPersistentRDDs.keySet -- held -- readable).size
+        // the result's checkpoints stay held while it is reachable
+        java.lang.ref.Reference.reachabilityFence(out)
+        (wall, ok, metrics.snapshot() - before, leaked)
       }
       val (wall, ok, m, _) = samples.minBy(_._1)
       // the registry holds RDDs weakly, so a GC inside a sample can hide

@@ -67,8 +67,8 @@ object GraftPlanBridge {
     * shuffle only while that shuffle's map output is incomplete (an AQE
     * plan runs its map stages when it is checkpointed, lazily or not).
     * A cache never ends the walk, built or not: its owner may drop it
-    * (a staged frame's listener does, after the first action), and a
-    * later action then replans the cached plan. Runs no Spark job. */
+    * (a caller's `clearCache()` drops a returned stage), and a later
+    * action then replans the cached plan. Runs no Spark job. */
   def readable(df: org.apache.spark.sql.DataFrame): Set[Int] = {
     val tracker = SparkEnv.get.mapOutputTracker.asInstanceOf[MapOutputTrackerMaster]
     val persistent = df.sparkSession.sparkContext.getPersistentRDDs.keySet

@@ -25,12 +25,8 @@ class QueriesSpec extends SparkSpec {
         out.write.format("noop").mode("overwrite").save()
         spark.catalog.clearCache()
         // every block the query made and left is one its result could
-        // read when it returned; the rest must be released. A staged
-        // frame is released by a listener after the write, on the
-        // listener bus, so give that a moment
-        def unread = sc.getPersistentRDDs.keySet -- before -- readable
-        val deadline = System.nanoTime() + 10000000000L
-        while (unread.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        // read when it returned; the rest must be released
+        val unread = sc.getPersistentRDDs.keySet -- before -- readable
         java.lang.ref.Reference.reachabilityFence(out)
         if (unread.isEmpty) None else Some(s"$name: ${unread.size}")
       } catch { case e: Exception => fail(s"$name failed", e) }

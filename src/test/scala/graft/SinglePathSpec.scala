@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * typed Columns (never a session-global temp function looked up by
   * name), every session comes from [[GraftSession.builder]], every
   * k-means trains through the one grouped Lloyd trainer, every
-  * fixpoint loop runs through the one driver, and every frame is
-  * materialized through the one scope. */
+  * fixpoint loop runs through the one driver, every frame is
+  * materialized through the one scope, and the one graft-owned listener
+  * is the profiling tools' metrics listener. */
 class SinglePathSpec extends AnyFunSuite {
 
   private def sources: Seq[Path] = {
@@ -74,5 +75,13 @@ class SinglePathSpec extends AnyFunSuite {
       raw.head.endsWith("val parsed = df" + ".cache" + "()"), raw.head)
     assert(Seq("Materialize", "KeyedStore", "Staged").forall(n =>
       !Files.exists(Paths.get(s"src/main/scala/graft/operators/$n.scala"))))
+  }
+
+  test("one listener") {
+    def mainFilesWith(needle: String) = filesWith(needle).filter(_.startsWith("src/main/"))
+    assert(mainFilesWith("QueryExecutionListener").isEmpty)
+    assert(mainFilesWith("listenerManager.register").isEmpty)
+    assert(mainFilesWith("addSparkListener") ===
+      Seq("src/main/scala/graft/tools/StageMetrics.scala"))
   }
 }
